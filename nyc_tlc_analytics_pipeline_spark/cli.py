@@ -439,10 +439,7 @@ def main(argv: list[str] | None = None) -> int:
 
         raw = read_zones_csv(pl.spark, args.zones_csv)
         zones = dimensions.build_dim_zones(raw)
-        sinks.overwrite(zones, pl.dim("dim_zones"))
-        print(json.dumps(
-            {"dim_zones": pl.spark.read.parquet(pl.dim("dim_zones")).count()}
-        ))
+        print(json.dumps({"dim_zones": sinks.overwrite(zones, pl.dim("dim_zones"))}))
     elif args.command == "load":
         print(json.dumps(pl.load_landing_dir(args.landing_dir), indent=2))
     elif args.command == "quality":

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit, when
 
 from ..functions.scalar import day_of_week
+from ..sources.sinks import literal_frame
 
 CONGESTION_FEE_DATE = "2025-01-05"  # epoch split (02_dimension_tables.sql:82-83)
 
@@ -89,8 +90,8 @@ def build_dim_service(spark: SparkSession) -> DataFrame:
         ("green", "Green Taxi", "Traditional Taxi", "Green cabs operating outside Manhattan core"),
         ("hvfhv", "HVFHV", "Ride-Hailing", "High-volume for-hire vehicles (Uber, Lyft, Via, Juno)"),
     ]
-    return spark.createDataFrame(
-        rows, "service_type string, service_name string, service_category string, description string"
+    return literal_frame(
+        spark, rows, "service_type string, service_name string, service_category string, description string"
     )
 
 
@@ -102,8 +103,8 @@ def build_dim_hvfhs_company(spark: SparkSession) -> DataFrame:
         ("HV0004", "Via", True),
         ("HV0005", "Lyft", True),
     ]
-    return spark.createDataFrame(
-        rows, "hvfhs_license_num string, company_name string, is_active boolean"
+    return literal_frame(
+        spark, rows, "hvfhs_license_num string, company_name string, is_active boolean"
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, concat, lit, when
 
 from ..functions.scalar import day_of_week, epoch_minutes, nullif_div
+from ..sources.sinks import counted
 
 # Column order of the unified fact table (superset of the reference's
 # fact_trips, sql/ddl/03_fact_tables.sql:12-58, plus the §1.4 fix columns).
@@ -262,8 +263,11 @@ def build_fact_trips(
     return out
 
 
-def write_fact_trips(fact: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_fact_trips(fact: DataFrame, path: str, mode: str = "overwrite") -> int:
     """Materialize the silver fact table partitioned for pruning: the
     (service_type, pickup_date) layout serves the same access paths as the
-    reference's idx_trips_service_date B-tree (03_fact_tables.sql:61-65)."""
-    fact.write.mode(mode).partitionBy("service_type", "pickup_date").parquet(path)
+    reference's idx_trips_service_date B-tree (03_fact_tables.sql:61-65).
+    Returns the rows written."""
+    out, obs = counted(fact)
+    out.write.mode(mode).partitionBy("service_type", "pickup_date").parquet(path)
+    return obs.get["rows"]

@@ -10,7 +10,12 @@ Warehouse layout (medallion, replacing the single DB file):
     <warehouse>/gold/agg_*/
     <warehouse>/meta/{ingestion_log,data_quality_metrics}/
 
-Each Spark stage boundary is a job; the bronze partition layout makes
+Each stage runs one Spark job per table it writes: row counts come from
+the write itself (``sinks.counted``), the quality checks of a service are
+one aggregate, and manifest tables are read with the schema their log
+recorded.  Writes that do not depend on each other (the dims, the three
+services' quality aggregates, the gold tables) run side by side from a
+small thread pool; ingest stays sequential.  The bronze layout makes
 re-ingesting a month idempotent, and the silver partitioning serves the
 same access paths the reference indexed (SURVEY §4)."""
 
@@ -19,8 +24,12 @@ from __future__ import annotations
 import glob
 import json
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -39,6 +48,43 @@ from .operators import aggregations, dimensions, quality, standardize
 from .sources import sinks
 from .sources.readers import read_service_parquet, read_zones_csv
 from .sources.tlc_schemas import RAW_SCHEMAS
+
+# landing-file prefix of each service (reference file naming)
+LANDING_PREFIXES = (
+    ("yellow", "yellow_tripdata"),
+    ("green", "green_tripdata"),
+    ("hvfhv", "fhvhv_tripdata"),
+)
+# concurrent Spark actions per stage: each is small, so a few keep the
+# cores busy through each other's driver-side gaps
+SIDE_BY_SIDE = 4
+
+T = TypeVar("T")
+
+
+def landing_files(landing_dir: str) -> list[tuple[str, str]]:
+    """(path, service) of every recognized service file, in load order."""
+    return [
+        (path, service)
+        for service, prefix in LANDING_PREFIXES
+        for path in sorted(glob.glob(os.path.join(landing_dir, f"{prefix}*.parquet")))
+    ]
+
+
+def side_by_side(spark: SparkSession, calls: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent calls from a thread pool; returns their results in
+    ``calls`` order and re-raises the first failure.  Each call runs with
+    the caller's job description and job group, copied per call: a
+    shared copy would be mutated by every concurrent query."""
+    def inherit(fn):
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)  # spark: pinned threads are off
+
+    if not calls:
+        return {}
+    with ThreadPoolExecutor(max_workers=min(len(calls), SIDE_BY_SIDE)) as pool:
+        futures = {k: pool.submit(inherit(fn)) for k, fn in calls.items()}
+        return {k: f.result() for k, f in futures.items()}
 
 
 @dataclass
@@ -69,11 +115,13 @@ class TlcPipeline:
         dims are fully derivable so overwrite-rebuild replaces upsert)."""
         raw_zones = read_zones_csv(self.spark, zones_csv) if zones_csv else None
         dims = dimensions.build_all_dims(self.spark, raw_zones=raw_zones)
-        counts = {}
-        for name, df in dims.items():
-            sinks.overwrite(df, self.dim(name))
-            counts[name] = self.spark.read.parquet(self.dim(name)).count()
-        return counts
+        return side_by_side(
+            self.spark,
+            {
+                name: lambda df=df, name=name: sinks.overwrite(df, self.dim(name))
+                for name, df in dims.items()
+            },
+        )
 
     # -- stage 2: ingest ---------------------------------------------------
     def _bronze_manifest(self, service: str):
@@ -111,7 +159,7 @@ class TlcPipeline:
         layout (replay-safe, zero metadata) or the manifest commit log
         (safe under concurrent loaders, time travel) — same idempotency
         key (the source filename) either way."""
-        df = read_service_parquet(self.spark, path, service)
+        df, obs = sinks.counted(read_service_parquet(self.spark, path, service))
         fname = os.path.basename(path)
         if self.config.bronze_format == "manifest":
             from pyspark.sql import functions as F
@@ -122,7 +170,8 @@ class TlcPipeline:
             written = self._bronze_manifest(service).append(tagged, tag=fname) is not None
         else:
             written = sinks.idempotent_append(df, self.bronze(service), fname)
-        rows = df.count() if written else 0
+        # after a skip nothing ran over df, and obs.get would wait forever
+        rows = obs.get["rows"] if written else 0
         entry = {
             "service_type": service,
             "source_file": fname,
@@ -138,15 +187,7 @@ class TlcPipeline:
     def load_landing_dir(self, landing_dir: str) -> list[dict]:
         """Glob the landing dir and load every recognized service file
         (reference: DataLoader.load_all_downloaded_files)."""
-        results = []
-        for service, prefix in (
-            ("yellow", "yellow_tripdata"),
-            ("green", "green_tripdata"),
-            ("hvfhv", "fhvhv_tripdata"),
-        ):
-            for path in sorted(glob.glob(os.path.join(landing_dir, f"{prefix}*.parquet"))):
-                results.append(self.load_file(path, service))
-        return results
+        return [self.load_file(path, service) for path, service in landing_files(landing_dir)]
 
     def raw(self, service: str) -> DataFrame:
         if self.config.bronze_format == "manifest":
@@ -158,13 +199,21 @@ class TlcPipeline:
 
     # -- stage 3: quality --------------------------------------------------
     def run_quality_checks(self) -> dict[str, list[quality.CheckResult]]:
-        out: dict[str, list[quality.CheckResult]] = {}
-        for service in self._loaded_services():
-            results = quality.run_all_checks(self.raw(service), service, self.config.quality)
+        """One aggregate per service, side by side, then ONE metrics
+        append: a failure in any service appends nothing, so a retry
+        never duplicates rows."""
+        out = side_by_side(
+            self.spark,
+            {
+                s: lambda s=s: quality.run_all_checks(self.raw(s), s, self.config.quality)
+                for s in self._loaded_services()
+            },
+        )
+        if out:
             self._meta_append(
-                quality.metrics_df(self.spark, results), "data_quality_metrics"
+                quality.metrics_df(self.spark, [r for rs in out.values() for r in rs]),
+                "data_quality_metrics",
             )
-            out[service] = results
         return out
 
     # -- stage 4: transform + aggregates ----------------------------------
@@ -173,18 +222,18 @@ class TlcPipeline:
         fact = standardize.build_fact_trips(
             yellow=loaded.get("yellow"), green=loaded.get("green"), hvfhv=loaded.get("hvfhv")
         )
-        standardize.write_fact_trips(fact, self.fact_path)
-        return self.spark.read.parquet(self.fact_path).count()
+        return standardize.write_fact_trips(fact, self.fact_path)
 
     def build_aggregates(self) -> dict[str, int]:
         fact = self.spark.read.parquet(self.fact_path)
-        counts = {}
-        for name, df in aggregations.build_all(
-            fact, approx=self.config.approx_percentiles
-        ).items():
-            sinks.overwrite(df, self.gold(name))
-            counts[name] = self.spark.read.parquet(self.gold(name)).count()
-        return counts
+        aggs = aggregations.build_all(fact, approx=self.config.approx_percentiles)
+        return side_by_side(
+            self.spark,
+            {
+                name: lambda df=df, name=name: sinks.overwrite(df, self.gold(name))
+                for name, df in aggs.items()
+            },
+        )
 
     # -- analytics ---------------------------------------------------------
     def tables(self) -> dict[str, DataFrame]:
@@ -293,14 +342,7 @@ class TlcPipeline:
             journaled = {r["source_file"] for r in loads}
             catchup = [
                 self.load_file(path, service)
-                for service, prefix in (
-                    ("yellow", "yellow_tripdata"),
-                    ("green", "green_tripdata"),
-                    ("hvfhv", "fhvhv_tripdata"),
-                )
-                for path in sorted(
-                    glob.glob(os.path.join(landing_dir, f"{prefix}*.parquet"))
-                )
+                for path, service in landing_files(landing_dir)
                 if os.path.basename(path) not in journaled
             ]
             if catchup:

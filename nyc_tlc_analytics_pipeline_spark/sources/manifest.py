@@ -26,6 +26,10 @@ with an optimistic-concurrency commit log:
   readers get snapshot isolation for free: ``read(version=...)`` is
   time travel, and a reader holding version V is unaffected by later
   commits.
+- Each entry records the schema of the rows it committed.  While every
+  directory of a snapshot shares one schema, ``read`` passes it to the
+  reader and skips the footer-inference job; entries written without a
+  schema, or a snapshot whose entries disagree, fall back to inference.
 
 Idempotency composes with it: ``append(df, tag=source_file)`` refuses a
 tag that any committed entry already carries — the check is re-run
@@ -61,6 +65,19 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_nullable(node):
+    """A schema's JSON with every field, element and value nullable: the
+    form parquet writes, and so the one inference reads back."""
+    if isinstance(node, dict):
+        return {k: True if k in _NULLABLE_KEYS else _as_nullable(v) for k, v in node.items()}
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    return node
 
 
 class CommitConflict(RuntimeError):
@@ -106,7 +123,9 @@ class ManifestTable:
 
     def snapshot(self, version: int | None = None) -> dict:
         """Replay the log up to ``version`` (default: latest).  Returns
-        ``{"version": v, "dirs": [...], "tags": {tag: version}}``.
+        ``{"version": v, "dirs": [...], "tags": {tag: version},
+        "expired_before": v, "schema": json-or-None}``; ``schema`` is
+        None when an entry carries none or the entries disagree.
 
         Starts from the newest CHECKPOINT at or below the target version
         when one exists (the Delta ``_last_checkpoint`` idea): a
@@ -116,6 +135,7 @@ class ManifestTable:
         metadata path flat at scale."""
         dirs: list[str] = []
         tags: dict[str, int] = {}
+        schema = None
         top = 0
         exp = 0
         cps = [
@@ -129,6 +149,7 @@ class ManifestTable:
                 cp = json.load(f)
             dirs, tags, top = list(cp["dirs"]), dict(cp["tags"]), cp["version"]
             exp = cp.get("expired_before", 0)
+            schema = cp.get("schema")
         for v in self._versions():
             if v <= top:
                 continue
@@ -146,6 +167,10 @@ class ManifestTable:
                 # idempotency tags, or already-loaded source files would
                 # happily load twice after a compact
                 dirs, tags = [], (tags if e.get("keep_tags") else {})
+            if not dirs:
+                schema = e.get("schema")
+            elif e.get("schema") != schema:
+                schema = None
             dirs.extend(e["dirs"])
             if e.get("tag") is not None:
                 tags[e["tag"]] = v
@@ -162,7 +187,7 @@ class ManifestTable:
                     f"watermark is gone by design"
                 )
         return {"version": top, "dirs": dirs, "tags": tags,
-                "expired_before": exp}
+                "expired_before": exp, "schema": schema}
 
     def write_checkpoint(self) -> int | None:
         """Materialize the current replayed state as
@@ -244,6 +269,11 @@ class ManifestTable:
         df.write.mode("overwrite").parquet(os.path.join(self.data_dir, d))
         return d
 
+    @staticmethod
+    def _schema(df: DataFrame) -> dict:
+        """The schema a staged write of ``df`` reads back with."""
+        return _as_nullable(df.schema.jsonValue())
+
     # -- public API --------------------------------------------------------
     def append(self, df: DataFrame, tag: str | None = None) -> int | None:
         """Concurrent-safe append.  ``tag`` is an idempotency key (e.g. the
@@ -254,23 +284,32 @@ class ManifestTable:
         if tag is not None and tag in snap["tags"]:
             return None  # cheap pre-check, same as sinks.is_file_loaded
         staged = self._stage(df)
-        return self._publish({"action": "append", "dirs": [staged], "tag": tag})
+        return self._publish(
+            {"action": "append", "dirs": [staged], "tag": tag, "schema": self._schema(df)}
+        )
 
     def overwrite(self, df: DataFrame, tag: str | None = None) -> int:
         """Concurrent-safe truncate-rebuild: readers see either the old
         snapshot or the new one, never a mix."""
         staged = self._stage(df)
-        v = self._publish({"action": "overwrite", "dirs": [staged], "tag": tag})
+        v = self._publish(
+            {"action": "overwrite", "dirs": [staged], "tag": tag, "schema": self._schema(df)}
+        )
         assert v is not None  # overwrite never tag-skips
         return v
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read (optionally time-traveled to ``version``)."""
+        """Snapshot read (optionally time-traveled to ``version``), with
+        the schema the snapshot recorded: no Spark job runs until the
+        frame is used."""
         snap = self.snapshot(version)
         if not snap["dirs"]:
             raise FileNotFoundError(f"manifest table {self.path} is empty")
         paths = [os.path.join(self.data_dir, d) for d in snap["dirs"]]
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if snap["schema"] is not None:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*paths)
 
     def compact(self, target_partitions: int = 8) -> int | None:
         """Small-file compaction: rewrite the CURRENT snapshot into one
@@ -305,6 +344,7 @@ class ManifestTable:
                 "tag": f"compact-v{snap['version']}",
                 "keep_tags": True,
                 "expect_parent": snap["version"],
+                "schema": self._schema(df),
             }
         )
         if v is None:  # CAS lost: leave the table alone, drop our staging

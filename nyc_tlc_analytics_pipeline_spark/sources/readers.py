@@ -1,7 +1,7 @@
 """Readers: service parquet (schema-aligned), zones CSV, file validation.
 
-SURVEY §2.1: S1 (parquet scan), S2 (schema-only read), S3 (CSV with
-inference), S5 (validation source), S17 (introspection helpers)."""
+SURVEY §2.1: S1 (parquet scan), S3 (CSV scan), S5 (validation source),
+S17 (introspection helpers)."""
 
 from __future__ import annotations
 
@@ -10,11 +10,6 @@ from pyspark.sql.types import StructType
 
 from .drift import DriftReport, align_to_schema, detect_drift
 from .tlc_schemas import RAW_SCHEMAS
-
-
-def read_parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """Footer-only schema read (S2) — no data scan is triggered."""
-    return spark.read.parquet(path).schema
 
 
 def validate_parquet(spark: SparkSession, path: str, expected: StructType | None = None):
@@ -42,10 +37,22 @@ def read_service_parquet(
     return df
 
 
+# the taxi-zone lookup's published columns, in file order
+ZONES_SCHEMA = "LocationID int, Borough string, Zone string, service_zone string"
+
+
 def read_zones_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Taxi-zone lookup CSV with header + inference (S3; reference:
-    read_csv_auto, src/database/schema.py:63-66)."""
-    return spark.read.option("header", True).option("inferSchema", True).csv(path)
+    """Taxi-zone lookup CSV (S3; reference: read_csv_auto,
+    src/database/schema.py:63-66) with its declared schema, so no
+    inference pass runs.  ``enforceSchema=false`` checks the header
+    against the declared names: a file whose columns are reordered or
+    renamed fails when read instead of being read by position."""
+    return (
+        spark.read.schema(ZONES_SCHEMA)
+        .option("header", True)
+        .option("enforceSchema", False)
+        .csv(path)
+    )
 
 
 def table_info(df: DataFrame) -> dict:

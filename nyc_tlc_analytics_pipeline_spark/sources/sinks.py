@@ -22,8 +22,13 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+# ingestion_log.log_id = unix_micros(ingestion_timestamp) * slots + row
+# position: room for this many rows per append before ids could collide
+_LOG_ID_SLOTS = 1000
 
 
 def _partition_value(source_file: str) -> str:
@@ -31,17 +36,38 @@ def _partition_value(source_file: str) -> str:
     return re.sub(r"[^A-Za-z0-9._-]", "_", source_file)
 
 
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter filled in by the next action over it, so a
+    write reports its row count without a second job.  Read
+    ``obs.get["rows"]`` only after that action ran: before, it blocks."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few driver-side rows with a declared DDL schema.  Built through
+    pandas (Arrow), the rows plan as one ``LocalRelation``; a list passed
+    to ``createDataFrame`` plans an RDD scan over several partitions,
+    which takes about twice as long to write."""
+    import pandas as pd
+
+    names = DataType.fromDDL(schema).names
+    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
+
+
 def append(df: DataFrame, path: str) -> None:
     """Plain append sink (S6)."""
     df.write.mode("append").parquet(path)
 
 
-def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Truncate-rebuild sink (S10)."""
-    w = df.write.mode("overwrite")
+def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+    """Truncate-rebuild sink (S10).  Returns the rows written."""
+    out, obs = counted(df)
+    w = out.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return obs.get["rows"]
 
 
 def is_file_loaded(bronze_path: str, source_file: str) -> bool:
@@ -78,12 +104,6 @@ def idempotent_append(df: DataFrame, bronze_path: str, source_file: str) -> bool
     return True
 
 
-def anti_join_new_rows(df: DataFrame, existing: DataFrame, key: str) -> DataFrame:
-    """The reference's dedup-append guard as a left-anti join (S7/S9
-    alternative form, for sinks without a partition layout)."""
-    return df.join(existing.select(key).distinct(), key, "left_anti")
-
-
 def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """CSV export sink (S12; reference: COPY ... TO csv)."""
     out = df.coalesce(1) if single_file else df
@@ -100,9 +120,13 @@ def ingestion_log_rows(
     entries: list[dict],
 ) -> DataFrame:
     """ingestion_log rows (S11).  The reference's SEQUENCE-generated
-    log_id (01_raw_tables.sql:130) becomes monotonically_increasing_id —
-    the same 'unique, roughly ordered' contract without coordination."""
-    df = spark.createDataFrame(
+    log_id (01_raw_tables.sql:130) becomes
+    ``unix_micros(ingestion_timestamp) * 1000 + position``: unique across
+    appends and ordered by append time, without coordination."""
+    if len(entries) > _LOG_ID_SLOTS:
+        raise ValueError(f"at most {_LOG_ID_SLOTS} ingestion_log rows per append")
+    df = literal_frame(
+        spark,
         [
             (
                 e["service_type"],
@@ -111,14 +135,18 @@ def ingestion_log_rows(
                 int(e.get("file_size_bytes", 0)),
                 e.get("status", "success"),
                 e.get("error_message"),
+                pos,
             )
-            for e in entries
+            for pos, e in enumerate(entries)
         ],
         "service_type string, source_file string, rows_loaded long, "
-        "file_size_bytes long, status string, error_message string",
+        "file_size_bytes long, status string, error_message string, pos long",
     )
-    return df.withColumn("log_id", F.monotonically_increasing_id()).withColumn(
-        "ingestion_timestamp", F.current_timestamp()
+    ts = F.current_timestamp()  # one value per query, so log_id and the column agree
+    return df.select(
+        *[c for c in df.columns if c != "pos"],
+        (F.unix_micros(ts) * _LOG_ID_SLOTS + F.col("pos")).alias("log_id"),
+        ts.alias("ingestion_timestamp"),
     )
 
 

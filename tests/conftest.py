@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -44,6 +46,24 @@ full_tier = pytest.mark.skipif(
     not FULL_SUITE,
     reason="full-tier test (SPARK_GRAFT_TEST_FULL=1); see conftest tiering note",
 )
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Yields a list that, when the block exits, holds the ids of the Spark
+    jobs run inside it: the block runs under a fresh job group, which
+    threads that inherit the caller's local properties share."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker learns of jobs from events
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -501,3 +501,55 @@ def test_diff_distinguishes_null_positions(spark, tmp_path):
     assert {(r.id, r._change) for r in mt.diff(v1, v2, key_cols=["id"]).collect()} == {
         (1, "updated")
     }
+
+
+def _strip_schemas(t) -> None:
+    """Rewrite the log as a writer that recorded no schema left it."""
+    for name in os.listdir(t.log_dir):
+        if name.endswith(".json"):
+            path = os.path.join(t.log_dir, name)
+            with open(path) as f:
+                entry = json.load(f)
+            entry.pop("schema", None)
+            with open(path, "w") as f:
+                json.dump(entry, f)
+
+
+def test_entries_without_schema_still_read(spark, tmp_path):
+    t = ManifestTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 5, "a"), tag="a")
+    t.append(_df(spark, 5, 8, "b"), tag="b")
+    want = t.read()
+    _strip_schemas(t)
+    assert t.snapshot()["schema"] is None
+    got = t.read()
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_read_with_recorded_schema_runs_no_job(spark, tmp_path):
+    from .conftest import spark_jobs
+
+    t = ManifestTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 5, "a"), tag="a")
+    with spark_jobs(spark) as ids:
+        df = t.read()
+    assert ids == []
+    assert df.count() == 5
+    _strip_schemas(t)  # the inferring path does run a job: the check can see one
+    with spark_jobs(spark) as ids:
+        t.read()
+    assert ids
+
+
+def test_time_travel_returns_that_versions_schema(spark, tmp_path):
+    t = ManifestTable(spark, str(tmp_path / "t"))
+    v1 = t.overwrite(spark.range(3).toDF("k"))
+    v2 = t.overwrite(_df(spark, 0, 3, "a"))
+    assert t.read(v1).columns == ["k"]
+    assert t.read(v2).columns == ["k", "src"]
+    assert t.snapshot(v1)["schema"] != t.snapshot(v2)["schema"]
+    # entries that disagree on the schema leave it to inference
+    t.append(spark.range(3).toDF("k"))
+    assert t.snapshot()["schema"] is None
+    assert t.read().count() == 6

@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from .conftest import full_tier
+from .conftest import full_tier, spark_jobs
 
 from nyc_tlc_analytics_pipeline_spark.core.config import PipelineConfig
 from nyc_tlc_analytics_pipeline_spark.pipeline import TlcPipeline
@@ -138,6 +138,71 @@ def test_killed_stage_resumes_without_rerunning_earlier_stages(spark, landing, t
     assert summary["files_loaded"] == 3  # journaled result, stage not re-executed
     assert p.read_meta("ingestion_log").count() == 3  # no dup entries
     assert p.spark.read.parquet(p.fact_path).count() == 1350
+
+
+def test_log_ids_unique_and_ordered_across_appends(spark, landing, tmp_path):
+    """Each load appends its own ingestion_log row; the ids of three loads
+    differ and increase in load order."""
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    loads = p.load_landing_dir(str(landing))
+    ids = {r.source_file: r.log_id for r in p.read_meta("ingestion_log").collect()}
+    in_order = [ids[r["source_file"]] for r in loads]
+    assert len(in_order) == 3
+    assert in_order == sorted(set(in_order))
+
+
+def test_retried_quality_stage_appends_metrics_once(spark, landing, tmp_path, monkeypatch):
+    """The first quality attempt fails in green's checks; the retry must
+    not leave the other services' metrics from that attempt behind."""
+    from nyc_tlc_analytics_pipeline_spark.operators import quality
+
+    real = quality.run_all_checks
+    failed = []
+
+    def flaky(raw, service, q=None):
+        if service == "green" and not failed:
+            failed.append(service)
+            raise RuntimeError("transient executor loss")
+        return real(raw, service, q)
+
+    monkeypatch.setattr(quality, "run_all_checks", flaky)
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"), retries=1)
+    assert failed == ["green"]
+    assert p._load_state()["stages"]["quality"]["attempts"] == 2
+    assert p.read_meta("data_quality_metrics").count() == 12
+
+
+def test_side_by_side_keeps_caller_job_group(spark):
+    """Pool threads run their jobs under the caller's job group and
+    description, so jobs stay attributed to the stage that ran them."""
+    from nyc_tlc_analytics_pipeline_spark.pipeline import side_by_side
+
+    sc = spark.sparkContext
+    with spark_jobs(spark) as ids:
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        seen = side_by_side(
+            spark,
+            {
+                k: lambda: (sc.getLocalProperty("spark.jobGroup.id"), spark.range(3).collect())[0]
+                for k in "abcde"
+            },
+        )
+    assert list(seen) == list("abcde")
+    assert set(seen.values()) == {group}
+    assert len(ids) >= 5
+
+
+def test_run_e2e_job_budget(spark, landing, tmp_path):
+    """A full run costs one Spark job per table written plus one scan per
+    source and one quality aggregate per service: 36 jobs on this
+    fixture.  A change that reads a table back to count it, or splits an
+    aggregate, fails here."""
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    with spark_jobs(spark) as ids:
+        summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"))
+    assert summary["fact_rows"] == 1350
+    assert len(ids) <= 36
 
 
 def test_cli_analytics_unknown_query(pipeline, capsys):

@@ -135,6 +135,16 @@ def test_validate_parquet_and_zones_csv(spark, tmp_path):
     assert dict(z.dtypes)["LocationID"] in ("int", "bigint")
 
 
+def test_zones_csv_with_reordered_header_raises(spark, tmp_path):
+    """The zones schema is declared, not inferred: a file whose header
+    does not match it fails instead of being read by position."""
+    csv_path = str(tmp_path / "zones.csv")
+    z = zones_fixture()
+    z[["Zone", "Borough", "LocationID", "service_zone"]].to_csv(csv_path, index=False)
+    with pytest.raises(Exception, match="(?i)header"):
+        read_zones_csv(spark, csv_path).collect()
+
+
 def test_csv_export_and_pandas_sinks(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
     out = str(tmp_path / "export")
