@@ -503,8 +503,7 @@ def main(argv: list[str] | None = None) -> int:
                 if not os.path.isdir(path):
                     continue
                 try:
-                    # bronze/meta reads go through the configured table
-                    # format (manifest snapshot or plain parquet)
+                    # bronze/meta tables are read through their manifest
                     if layer == "bronze":
                         df = pl.raw(name.removeprefix("raw_"))
                     elif layer == "meta":

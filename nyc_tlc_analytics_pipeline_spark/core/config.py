@@ -46,13 +46,6 @@ class PipelineConfig:
     # approximate for very large groups (breaks oracle equality, so the
     # conformance suite always runs exact).  See SURVEY §7.3.
     approx_percentiles: bool = False
-    # bronze table format: "manifest" (commit-log ManifestTable — safe
-    # under CONCURRENT writers, snapshot reads, time travel; the
-    # DEFAULT, matching the reference's transactional single DuckDB
-    # file, src/database/connection.py:45) or "partition"
-    # (source_file=... dirs — replay-safe but single-writer only;
-    # zero-metadata escape hatch)
-    bronze_format: str = "manifest"
 
     @classmethod
     def from_dict(cls, d: dict) -> "PipelineConfig":
@@ -67,5 +60,4 @@ class PipelineConfig:
             quality=QualityThresholds(**q),
             ingestion=IngestionConfig(**i),
             approx_percentiles=bool(d.get("approx_percentiles", False)),
-            bronze_format=d.get("bronze_format", cls.bronze_format),
         )

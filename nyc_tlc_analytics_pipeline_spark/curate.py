@@ -1,10 +1,10 @@
 """End-to-end corpus CURATION job: rules gate → perplexity filter →
 near-dup keep-best dedup → segment-level dedup → benchmark
 decontamination → curriculum schedule → packed training shards, under
-the same per-stage retry + resume journal as :meth:`pipeline.TlcPipeline
-.run_e2e` (reference: src/orchestration/flows.py's @task(retries=2)
-wiring — here applied to the training-data tier the reference never
-had).
+the per-stage retry + resume journal :meth:`pipeline.TlcPipeline.run_e2e`
+uses (``core.journal``; reference: src/orchestration/flows.py's
+@task(retries=2) wiring — here applied to the training-data tier the
+reference never had).
 
 Every stage write is an idempotent overwrite, so a killed run re-enters
 at the first unjournaled stage and converges to the same outputs; the
@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from .core.pins import release_pins
+from .core.journal import Journal
 from .operators import curation, curriculum, dedup, decontam, lm, packing
-from .pipeline import StageFailed  # shared failure type (same contract)
 from .sources.sinks import write_corpus_shards
 
 
@@ -67,64 +66,6 @@ class CurateJob:
     @property
     def _state_path(self) -> str:
         return self.path("meta/curate_state.json")
-
-    # -- journal (run_e2e's contract, standalone) --------------------------
-    def _load_state(self) -> dict:
-        try:
-            with open(self._state_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"stages": {}}
-
-    def _save_state(self, state: dict, state_path: str | None = None) -> None:
-        # state_path routes per-batch incremental journals; the default
-        # is the main run's journal.  Explicit parameter, NOT an
-        # instance-attribute method swap — two concurrent faces on one
-        # job instance each write their own journal (ADVICE r12).
-        path = state_path or self._state_path
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, path)  # atomic: never half-written
-
-    def _run_stage(
-        self,
-        state: dict,
-        name: str,
-        fn,
-        retries: int,
-        state_path: str | None = None,
-    ):
-        done = state["stages"].get(name)
-        if done and done.get("status") == "success":
-            return done["result"]
-        last: Exception | None = None
-        for attempt in range(1, retries + 2):
-            try:
-                result = fn()
-            except Exception as e:  # noqa: BLE001 — stage isolation boundary
-                last = e
-                continue
-            finally:
-                # stages hand off through parquet, so every frame pinned
-                # inside this stage (funnel/gate pins in
-                # operators.curation and operators.dedup) is dead once
-                # the stage's write lands — release here so a multi-
-                # stage (or multi-batch) job's cached-block high-water
-                # stays one-stage-sized (ADVICE r13: pins were never
-                # unpersisted and accumulated for the session lifetime)
-                release_pins()
-            state["stages"][name] = {
-                "status": "success",
-                "attempts": attempt,
-                "result": result,
-            }
-            self._save_state(state, state_path)
-            return result
-        state["stages"][name] = {"status": "failed", "attempts": retries + 1}
-        self._save_state(state, state_path)
-        raise StageFailed(name, retries + 1, last)
 
     # -- stages (each: idempotent overwrite write + JSON-sized result) -----
     def _docs(self) -> DataFrame:
@@ -301,21 +242,12 @@ class CurateJob:
         prints: the q132-form attribution accounting extended with the
         post-funnel stages, plus shard stats — every input document
         lands in exactly one bucket of ``funnel``."""
-        state = self._load_state() if resume else {"stages": {}}
-        if all(
-            state["stages"].get(s, {}).get("status") == "success"
-            for s in self._STAGES
-        ):
-            state = {"stages": {}}  # previous run finished — start fresh
-        attribution = self._run_stage(
-            state, "attribution", self.stage_attribution, retries
-        )
-        seg = self._run_stage(
-            state, "segment_dedup", self.stage_segment_dedup, retries
-        )
-        dec = self._run_stage(state, "decontam", self.stage_decontam, retries)
-        shards = self._run_stage(state, "shards", self.stage_shards, retries)
-        idx = self._run_stage(state, "index", self.stage_index, retries)
+        stages = Journal(self._state_path, self._STAGES, resume)
+        attribution = stages.run("attribution", self.stage_attribution, retries)
+        seg = stages.run("segment_dedup", self.stage_segment_dedup, retries)
+        dec = stages.run("decontam", self.stage_decontam, retries)
+        shards = stages.run("shards", self.stage_shards, retries)
+        idx = stages.run("index", self.stage_index, retries)
         funnel = dict(attribution)
         # post-funnel accounting: emptied + contaminated docs leave the
         # 'kept' bucket so the final shard count reconciles exactly
@@ -344,9 +276,6 @@ class CurateJob:
     # re-read) applied to the whole job: classify a NEW batch against
     # the completed run's final pool, keep only genuinely novel content,
     # and append it as an idempotent batch-tagged increment directory.
-
-    def _inc_state_path(self, tag: str) -> str:
-        return self.path(f"meta/curate_inc_{tag}.json")
 
     _INC_AUX_SUFFIXES = (
         "_attribution", "_gated", "_clean", "_bands", "_segidx",
@@ -485,22 +414,11 @@ class CurateJob:
             raise ValueError(
                 f"batch_tag must not end with {self._INC_AUX_SUFFIXES}"
             )
-        state_path = self._inc_state_path(tag)
-
-        def load_state() -> dict:
-            try:
-                with open(state_path) as f:
-                    return json.load(f)
-            except (OSError, ValueError):
-                return {"stages": {}}
-
-        state = load_state() if resume else {"stages": {}}
-        stages = ("inc_gate", "inc_segment", "inc_decontam", "inc_append")
-        if all(
-            state["stages"].get(s, {}).get("status") == "success"
-            for s in stages
-        ):
-            state = {"stages": {}}
+        stages = Journal(
+            self.path(f"meta/curate_inc_{tag}.json"),
+            ("inc_gate", "inc_segment", "inc_decontam", "inc_append"),
+            resume,
+        )
         batch = self.spark.read.parquet(batch_path)
         # The standing pool an increment classifies against is the
         # base run's `final` UNIONED with every already-completed
@@ -625,16 +543,10 @@ class CurateJob:
             toks = inc.agg(F.sum("n_tokens")).head()[0] or 0
             return {"n_docs_appended": n, "tokens_appended": int(toks)}
 
-        gate = self._run_stage(state, "inc_gate", inc_gate, retries, state_path)
-        seg = self._run_stage(
-            state, "inc_segment", inc_segment, retries, state_path
-        )
-        dec = self._run_stage(
-            state, "inc_decontam", inc_decontam, retries, state_path
-        )
-        app = self._run_stage(
-            state, "inc_append", inc_append, retries, state_path
-        )
+        gate = stages.run("inc_gate", inc_gate, retries)
+        seg = stages.run("inc_segment", inc_segment, retries)
+        dec = stages.run("inc_decontam", inc_decontam, retries)
+        app = stages.run("inc_append", inc_append, retries)
         summary = {
             "tag": tag,
             "gate": gate,

@@ -32,15 +32,6 @@ from ..functions.scalar import rnd
 ROUND_DECIMALS = 6
 
 
-def _dist2(v, cent: list[float]):
-    carr = F.array(*[lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(v, carr, lambda a, b: (a - b) * (a - b)),
-        lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def assign_clusters(
     vecs: DataFrame, centroids: list[list[float]], impl: str = "arrow"
 ) -> DataFrame:

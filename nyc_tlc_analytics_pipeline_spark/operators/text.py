@@ -217,20 +217,6 @@ def feature_hash_vectors(
     )
 
 
-def doc_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard per-document text metrics."""
-    return df.withColumns(
-        {
-            "n_tokens": token_count(text_col),
-            "n_chars_actual": char_count(text_col),
-            "punct_ratio": punct_ratio(text_col),
-            "quality": quality_score(text_col),
-            "pred_lang": predicted_lang(text_col),
-            "fingerprint": fingerprint(text_col),
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # BPE tokenizer training (vocab-weighted — the scalable shape)
 # ---------------------------------------------------------------------------

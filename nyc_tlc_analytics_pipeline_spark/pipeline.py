@@ -5,24 +5,26 @@ parquet warehouse.
 
 Warehouse layout (medallion, replacing the single DB file):
 
-    <warehouse>/bronze/raw_<service>/source_file=<file>/...
+    <warehouse>/bronze/raw_<service>/{_log/,data/<uuid>/}
     <warehouse>/silver/fact_trips/service_type=*/pickup_date=*/...
     <warehouse>/gold/agg_*/
-    <warehouse>/meta/{ingestion_log,data_quality_metrics}/
+    <warehouse>/meta/{ingestion_log,data_quality_metrics}/{_log/,data/<uuid>/}
+    <warehouse>/meta/e2e_state.json
 
 Each stage runs one Spark job per table it writes: row counts come from
 the write itself (``sinks.counted``), the quality checks of a service are
 one aggregate, and manifest tables are read with the schema their log
 recorded.  Writes that do not depend on each other (the dims, the three
 services' quality aggregates, the gold tables) run side by side from a
-small thread pool; ingest stays sequential.  The bronze layout makes
-re-ingesting a month idempotent, and the silver partitioning serves the
-same access paths the reference indexed (SURVEY §4)."""
+small thread pool.  Bronze and meta tables are manifest tables
+(``sources.manifest``): a bronze append is tagged with its source file,
+so re-ingesting a month is a no-op even under concurrent loaders.  The
+silver partitioning serves the same access paths the reference indexed
+(SURVEY §4)."""
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -31,23 +33,15 @@ from typing import TypeVar
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-
-class StageFailed(RuntimeError):
-    """A pipeline stage exhausted its retries; the run state on disk marks
-    every earlier stage complete, so a re-run resumes at this stage."""
-
-    def __init__(self, stage: str, attempts: int, cause: Exception):
-        super().__init__(f"stage {stage!r} failed after {attempts} attempt(s): {cause}")
-        self.stage = stage
-        self.attempts = attempts
-        self.cause = cause
-
+from .core import journal
 from .core.config import PipelineConfig
+from .core.journal import StageFailed  # noqa: F401 — re-exported for callers
 from .operators import aggregations, dimensions, quality, standardize
 from .sources import sinks
+from .sources.manifest import ManifestTable
 from .sources.readers import read_service_parquet, read_zones_csv
-from .sources.tlc_schemas import RAW_SCHEMAS
 
 # landing-file prefix of each service (reference file naming)
 LANDING_PREFIXES = (
@@ -58,6 +52,8 @@ LANDING_PREFIXES = (
 # concurrent Spark actions per stage: each is small, so a few keep the
 # cores busy through each other's driver-side gaps
 SIDE_BY_SIDE = 4
+# run_e2e's stages, in order
+E2E_STAGES = ("init_dims", "ingest", "quality", "build_fact", "build_aggregates")
 
 T = TypeVar("T")
 
@@ -124,52 +120,27 @@ class TlcPipeline:
         )
 
     # -- stage 2: ingest ---------------------------------------------------
-    def _bronze_manifest(self, service: str):
-        from .sources.manifest import ManifestTable
-
+    def _bronze_manifest(self, service: str) -> ManifestTable:
         return ManifestTable(self.spark, self.bronze(service))
 
-    # -- meta tables (format follows bronze_format) ------------------------
-    def _meta_append(self, df: DataFrame, name: str) -> None:
-        """Append to a meta table through the configured table format.
-        Under "manifest" this matters for correctness, not just hygiene:
-        concurrent loaders each append an ingestion_log entry, and the
-        plain parquet append stages through a SHARED ``_temporary`` dir
-        (two jobs interleave each other's commit phase) — the exact race
-        the manifest format exists to serialize."""
-        if self.config.bronze_format == "manifest":
-            from .sources.manifest import ManifestTable
-
-            ManifestTable(self.spark, self.meta(name)).append(df)
-        else:
-            sinks.append(df, self.meta(name))
+    def _meta_table(self, name: str) -> ManifestTable:
+        # a manifest table, not a plain parquet append: concurrent loaders
+        # each append an ingestion_log entry, and plain appends stage
+        # through one shared ``_temporary`` dir and interleave commits
+        return ManifestTable(self.spark, self.meta(name))
 
     def read_meta(self, name: str) -> DataFrame:
-        """Read a meta table through the configured table format."""
-        if self.config.bronze_format == "manifest":
-            from .sources.manifest import ManifestTable
-
-            return ManifestTable(self.spark, self.meta(name)).read()
-        return self.spark.read.parquet(self.meta(name))
+        return self._meta_table(name).read()
 
     def load_file(self, path: str, service: str) -> dict:
-        """Validate → align → idempotent bronze append (SURVEY §3.3).
-
-        ``config.bronze_format`` picks the table format: the partition
-        layout (replay-safe, zero metadata) or the manifest commit log
-        (safe under concurrent loaders, time travel) — same idempotency
-        key (the source filename) either way."""
+        """Validate → align → bronze append tagged with the source
+        filename, so a file already loaded is skipped (SURVEY §3.3)."""
         df, obs = sinks.counted(read_service_parquet(self.spark, path, service))
         fname = os.path.basename(path)
-        if self.config.bronze_format == "manifest":
-            from pyspark.sql import functions as F
-
-            tagged = df.withColumn(
-                "source_file", F.lit(fname)
-            ).withColumn("ingestion_timestamp", F.current_timestamp())
-            written = self._bronze_manifest(service).append(tagged, tag=fname) is not None
-        else:
-            written = sinks.idempotent_append(df, self.bronze(service), fname)
+        tagged = df.withColumn("source_file", F.lit(fname)).withColumn(
+            "ingestion_timestamp", F.current_timestamp()
+        )
+        written = self._bronze_manifest(service).append(tagged, tag=fname) is not None
         # after a skip nothing ran over df, and obs.get would wait forever
         rows = obs.get["rows"] if written else 0
         entry = {
@@ -179,9 +150,7 @@ class TlcPipeline:
             "file_size_bytes": os.path.getsize(path) if os.path.exists(path) else 0,
             "status": "success" if written else "skipped_already_loaded",
         }
-        self._meta_append(
-            sinks.ingestion_log_rows(self.spark, [entry]), "ingestion_log"
-        )
+        self._meta_table("ingestion_log").append(sinks.ingestion_log_rows(self.spark, [entry]))
         return entry
 
     def load_landing_dir(self, landing_dir: str) -> list[dict]:
@@ -190,9 +159,7 @@ class TlcPipeline:
         return [self.load_file(path, service) for path, service in landing_files(landing_dir)]
 
     def raw(self, service: str) -> DataFrame:
-        if self.config.bronze_format == "manifest":
-            return self._bronze_manifest(service).read()
-        return self.spark.read.parquet(self.bronze(service))
+        return self._bronze_manifest(service).read()
 
     def _loaded_services(self) -> list[str]:
         return [s for s in ("yellow", "green", "hvfhv") if os.path.isdir(self.bronze(s))]
@@ -210,9 +177,8 @@ class TlcPipeline:
             },
         )
         if out:
-            self._meta_append(
-                quality.metrics_df(self.spark, [r for rs in out.values() for r in rs]),
-                "data_quality_metrics",
+            self._meta_table("data_quality_metrics").append(
+                quality.metrics_df(self.spark, [r for rs in out.values() for r in rs])
             )
         return out
 
@@ -264,47 +230,7 @@ class TlcPipeline:
         return self.meta("e2e_state.json")
 
     def _load_state(self) -> dict:
-        try:
-            with open(self._state_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"stages": {}}
-
-    def _save_state(self, state: dict) -> None:
-        os.makedirs(os.path.dirname(self._state_path), exist_ok=True)
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path)  # atomic: a crash never half-writes
-
-    def _run_stage(self, state: dict, name: str, fn, retries: int):
-        """Run one stage with retries and durable completion state —
-        the Spark-side equivalent of the reference's per-task
-        ``@task(retries=2)`` wiring (reference:
-        src/orchestration/flows.py:34,58,76,89,104).  Completed stages are
-        skipped on re-entry; every stage body is idempotent (overwrite
-        dims/fact/aggs, idempotent-append bronze), so a retry after a
-        partial failure converges to the same state."""
-        done = state["stages"].get(name)
-        if done and done.get("status") == "success":
-            return done["result"]
-        last: Exception | None = None
-        for attempt in range(1, retries + 2):
-            try:
-                result = fn()
-            except Exception as e:  # noqa: BLE001 — stage isolation boundary
-                last = e
-                continue
-            state["stages"][name] = {
-                "status": "success",
-                "attempts": attempt,
-                "result": result,
-            }
-            self._save_state(state)
-            return result
-        state["stages"][name] = {"status": "failed", "attempts": retries + 1}
-        self._save_state(state)
-        raise StageFailed(name, retries + 1, last)
+        return journal.load(self._state_path)
 
     def run_e2e(
         self,
@@ -314,25 +240,19 @@ class TlcPipeline:
         resume: bool = True,
     ) -> dict:
         """The full pipeline (reference: cli.py run-e2e → full_pipeline_flow)
-        with per-stage retry + resume: each stage retries ``retries`` times
-        (reference default, flows.py:34), completion is journaled to
-        ``meta/e2e_state.json``, and a re-run after a failure skips the
-        already-completed stages (their idempotent writes are not repeated,
-        so e.g. ingestion_log gets no duplicate entries).  A journaled
-        ingest stage does NOT freeze the file set: resume re-scans the
-        landing dir and loads any files that arrived after the failed run.
-        ``resume=False`` discards prior state and runs everything."""
-        state = self._load_state() if resume else {"stages": {}}
-        if all(
-            state["stages"].get(s, {}).get("status") == "success"
-            for s in ("init_dims", "ingest", "quality", "build_fact", "build_aggregates")
-        ):
-            state = {"stages": {}}  # previous run finished — start fresh
-        dims = self._run_stage(state, "init_dims", lambda: self.init_dims(zones_csv), retries)
-        ingest_was_journaled = state["stages"].get("ingest", {}).get("status") == "success"
-        loads = self._run_stage(
-            state, "ingest", lambda: self.load_landing_dir(landing_dir), retries
-        )
+        with per-stage retry + resume (``core.journal``): each stage retries
+        ``retries`` times (reference default, flows.py:34), completion is
+        journaled to ``meta/e2e_state.json``, and a re-run after a failure
+        skips the already-completed stages (their idempotent writes are not
+        repeated, so e.g. ingestion_log gets no duplicate entries).  A
+        journaled ingest stage does NOT freeze the file set: resume
+        re-scans the landing dir and loads any files that arrived after the
+        failed run.  ``resume=False`` discards prior state and runs
+        everything."""
+        stages = journal.Journal(self._state_path, E2E_STAGES, resume)
+        dims = stages.run("init_dims", lambda: self.init_dims(zones_csv), retries)
+        ingest_was_journaled = stages.done("ingest")
+        loads = stages.run("ingest", lambda: self.load_landing_dir(landing_dir), retries)
         if ingest_was_journaled:
             # the journal froze the file set seen by the failed run; files
             # landed SINCE then must still be loaded (the loads themselves
@@ -347,10 +267,8 @@ class TlcPipeline:
             ]
             if catchup:
                 loads = loads + catchup
-                state["stages"]["ingest"]["result"] = loads
-                self._save_state(state)
-        qc_pct = self._run_stage(
-            state,
+                stages.amend("ingest", loads)
+        qc_pct = stages.run(
             "quality",
             lambda: {
                 s: round(quality.overall_quality_pct(rs), 2)
@@ -358,8 +276,8 @@ class TlcPipeline:
             },
             retries,
         )
-        fact_rows = self._run_stage(state, "build_fact", self.build_fact, retries)
-        aggs = self._run_stage(state, "build_aggregates", self.build_aggregates, retries)
+        fact_rows = stages.run("build_fact", self.build_fact, retries)
+        aggs = stages.run("build_aggregates", self.build_aggregates, retries)
         return {
             "dims": dims,
             "files_loaded": len([r for r in loads if r["status"] == "success"]),

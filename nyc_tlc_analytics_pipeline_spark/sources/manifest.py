@@ -1,10 +1,10 @@
 """Manifest-committed table: concurrent-writer-safe append/overwrite on
 plain parquet files, Delta/Iceberg-style but dependency-free.
 
-Why this exists: the bronze partition-overwrite sink (``sinks.py``) is
-replay-safe but NOT safe for two writers running at the same time — both
-Spark jobs stage through the same ``_temporary`` directory and can
-interleave each other's commit phases (reference analogue: the
+Why this exists: every bronze and meta table of ``TlcPipeline`` is a
+manifest table.  Two Spark jobs writing plain parquet to the same
+directory stage through one ``_temporary`` directory and can interleave
+each other's commit phases (reference analogue: the
 ``INSERT ... WHERE source_file NOT IN (...)`` guard,
 src/database/schema_drift.py:213-215, which DuckDB serializes through
 its single-writer transaction lock; Spark has no such lock on a bare
@@ -282,7 +282,7 @@ class ManifestTable:
         was committed by a concurrent writer DURING our own attempt."""
         snap = self.snapshot()
         if tag is not None and tag in snap["tags"]:
-            return None  # cheap pre-check, same as sinks.is_file_loaded
+            return None  # cheap pre-check; re-checked at commit time
         staged = self._stage(df)
         return self._publish(
             {"action": "append", "dirs": [staged], "tag": tag, "schema": self._schema(df)}

@@ -1,26 +1,13 @@
-"""Sinks: append / idempotent-append / overwrite / export, plus the
-ingestion-log table.
+"""Sinks: counted overwrite, CSV and pandas export, small literal frames,
+the ingestion-log rows and the training-shard writer.
 
-Idempotency model (reference: the ``source_file NOT IN (...)`` anti-join,
-src/database/schema_drift.py:213-215 + pre-check loader.py:147-165):
-bronze tables are laid out as ``path/source_file=<name>/`` partition
-directories, so "is this file already loaded" is an O(1) directory check
-and re-loading is a DYNAMIC partition overwrite of that one partition.
-
-Safety model: REPLAY-safe, not concurrent-writer-safe.  Sequential
-re-runs of the same load (crash + retry, stale pre-check then re-run)
-converge to a single clean copy of the partition.  Two writers running
-AT THE SAME TIME against the same base path share the default
-FileOutputCommitter ``_temporary`` staging directory and can interleave
-each other's delete/commit phases, leaving duplicated or partial
-partition contents — that case needs a commit-coordinated format; use
-``sources.manifest`` (atomic manifest-swap commit log) or an external
-lock for genuinely concurrent writers (SURVEY §7.3 item 3)."""
+Appends to the bronze and meta tables go through ``sources.manifest``
+instead: its commit log makes an append tagged with its source file
+idempotent, even under concurrent writers (reference: the
+``source_file NOT IN (...)`` anti-join, src/database/schema_drift.py:213-215
++ pre-check loader.py:147-165)."""
 
 from __future__ import annotations
-
-import os
-import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -29,11 +16,6 @@ from pyspark.sql.types import DataType
 # ingestion_log.log_id = unix_micros(ingestion_timestamp) * slots + row
 # position: room for this many rows per append before ids could collide
 _LOG_ID_SLOTS = 1000
-
-
-def _partition_value(source_file: str) -> str:
-    # keep partition dir names filesystem-safe
-    return re.sub(r"[^A-Za-z0-9._-]", "_", source_file)
 
 
 def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -55,11 +37,6 @@ def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
     return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
 
 
-def append(df: DataFrame, path: str) -> None:
-    """Plain append sink (S6)."""
-    df.write.mode("append").parquet(path)
-
-
 def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
     """Truncate-rebuild sink (S10).  Returns the rows written."""
     out, obs = counted(df)
@@ -68,40 +45,6 @@ def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -
         w = w.partitionBy(*partition_by)
     w.parquet(path)
     return obs.get["rows"]
-
-
-def is_file_loaded(bronze_path: str, source_file: str) -> bool:
-    """O(1) idempotency check against the partition layout (S7)."""
-    return os.path.isdir(
-        os.path.join(bronze_path, f"source_file={_partition_value(source_file)}")
-    )
-
-
-def idempotent_append(df: DataFrame, bronze_path: str, source_file: str) -> bool:
-    """Load one source file into the bronze table unless already present.
-    Returns True if written, False if skipped (already loaded).
-
-    The write is a DYNAMIC partition overwrite of the single
-    ``source_file=<name>/`` partition, not an append: a crashed load
-    that is RE-RUN (sequential replay) ends up with exactly one clean
-    copy of the file's rows instead of double-appended duplicates.  The
-    pre-check stays as a cheap skip for the common already-loaded case.
-    This does NOT protect two loaders writing concurrently (shared
-    ``_temporary`` staging dir — see module docstring); for that, use
-    ``sources.manifest.ManifestTable.append`` which serializes commits
-    through an atomic manifest swap."""
-    if is_file_loaded(bronze_path, source_file):
-        return False
-    out = df.withColumn("source_file", F.lit(_partition_value(source_file))).withColumn(
-        "ingestion_timestamp", F.current_timestamp()
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("source_file")
-        .parquet(bronze_path)
-    )
-    return True
 
 
 def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:

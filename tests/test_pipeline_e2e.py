@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from .conftest import full_tier, spark_jobs
+from .conftest import spark_jobs
 
 from nyc_tlc_analytics_pipeline_spark.core.config import PipelineConfig
 from nyc_tlc_analytics_pipeline_spark.pipeline import TlcPipeline
@@ -110,6 +110,7 @@ def test_stage_retry_recovers_transient_failure(spark, landing, tmp_path):
         "status": "success",
         "attempts": 2,
         "result": 1350,
+        "errors": ["RuntimeError: transient executor loss"],
     }
 
 
@@ -138,6 +139,38 @@ def test_killed_stage_resumes_without_rerunning_earlier_stages(spark, landing, t
     assert summary["files_loaded"] == 3  # journaled result, stage not re-executed
     assert p.read_meta("ingestion_log").count() == 3  # no dup entries
     assert p.spark.read.parquet(p.fact_path).count() == 1350
+
+
+def test_resume_loads_files_landed_after_the_failed_run(spark, landing, tmp_path):
+    """A resumed run re-scans the landing dir: a file that landed after the
+    failed run is loaded once, the journaled files are not reloaded, and
+    the new rows reach fact_trips."""
+    import shutil
+
+    from nyc_tlc_analytics_pipeline_spark.pipeline import StageFailed
+
+    land = tmp_path / "landing"
+    shutil.copytree(landing, land)
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    real = p.build_fact
+
+    def dead():
+        raise RuntimeError("stage killed")
+
+    p.build_fact = dead
+    with pytest.raises(StageFailed):
+        p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"), retries=0)
+
+    late = "yellow_tripdata_2025-02.parquet"
+    synth_yellow(100, seed=2).drop(columns=["source_file"]).to_parquet(land / late)
+    p.build_fact = real
+    summary = p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"))
+    assert summary["files_loaded"] == 4
+    log = [r.source_file for r in p.read_meta("ingestion_log").collect()]
+    assert len(log) == 4 and len(set(log)) == 4
+    assert p._load_state()["stages"]["ingest"]["result"][-1]["source_file"] == late
+    fact = p.spark.read.parquet(p.fact_path)
+    assert fact.filter(f"source_file = '{late}'").count() > 0
 
 
 def test_log_ids_unique_and_ordered_across_appends(spark, landing, tmp_path):
@@ -255,12 +288,11 @@ def test_cli_explain_unknown_query(pipeline, capsys):
 
 
 def test_manifest_bronze_is_default_e2e(spark, landing, tmp_path):
-    """The DEFAULT config uses bronze_format='manifest': commit-log
-    semantics (idempotent reload leaves one committed version per file,
-    raw() reads through the manifest snapshot)."""
+    """Bronze tables are manifest tables: commit-log semantics
+    (idempotent reload leaves one committed version per file, raw()
+    reads through the manifest snapshot)."""
     wh = str(tmp_path / "wh_manifest")
     p = TlcPipeline(spark, PipelineConfig(warehouse_dir=wh))
-    assert p.config.bronze_format == "manifest"
     summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"))
     assert summary["files_loaded"] == 3
     assert summary["fact_rows"] == 1350
@@ -270,26 +302,6 @@ def test_manifest_bronze_is_default_e2e(spark, landing, tmp_path):
     assert p._bronze_manifest("yellow").latest_version() == 1
     assert p.raw("yellow").count() == 400
     assert "source_file" in p.raw("yellow").columns
-
-
-@full_tier
-def test_partition_bronze_opt_in_e2e(spark, landing, tmp_path):
-    """The partition layout stays available as the single-writer,
-    zero-metadata escape hatch."""
-    wh = str(tmp_path / "wh_part")
-    p = TlcPipeline(
-        spark, PipelineConfig(warehouse_dir=wh, bronze_format="partition")
-    )
-    summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"))
-    assert summary["files_loaded"] == 3
-    assert summary["fact_rows"] == 1350
-    assert os.path.isdir(
-        os.path.join(
-            p.bronze("yellow"), "source_file=yellow_tripdata_2025-01.parquet"
-        )
-    )
-    again = p.load_landing_dir(str(landing))
-    assert all(r["status"] == "skipped_already_loaded" for r in again)
 
 
 def test_concurrent_loaders_under_default_config(spark, landing, tmp_path):

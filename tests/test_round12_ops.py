@@ -174,6 +174,7 @@ def test_curate_kill_and_resume_is_idempotent(spark, tmp_path):
     state = _json.load(open(job._state_path))
     assert state["stages"]["attribution"]["status"] == "success"
     assert state["stages"]["segment_dedup"]["status"] == "success"
+    assert state["stages"]["decontam"]["errors"] == ["RuntimeError: stage killed"]
     attribution_before = state["stages"]["attribution"]["result"]
 
     job.stage_decontam = real  # "fix the bug", re-run

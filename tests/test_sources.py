@@ -78,38 +78,6 @@ def test_drift_report_rows():
     assert kinds == {"new_column", "type_change"}
 
 
-def test_idempotent_bronze_load(spark, tmp_path):
-    bronze = str(tmp_path / "raw_yellow")
-    df = spark.createDataFrame(yellow_fixture().drop(columns=["source_file"]))
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-06.parquet") is True
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-06.parquet") is False  # skip
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-07.parquet") is True
-    loaded = spark.read.parquet(bronze)
-    assert loaded.count() == 8  # 4 rows x 2 distinct files, no dup load
-    assert set(r.source_file for r in loaded.select("source_file").distinct().collect()) == {
-        "yellow_2024-06.parquet",
-        "yellow_2024-07.parquet",
-    }
-
-
-def test_idempotent_append_replay_does_not_duplicate(spark, tmp_path, monkeypatch):
-    """A loader that races past the already-loaded pre-check (or a re-run
-    of a crashed load) must converge to ONE clean copy of the file's rows:
-    the write is a dynamic partition overwrite, not an append."""
-    bronze = str(tmp_path / "raw_yellow")
-    df = spark.createDataFrame(yellow_fixture().drop(columns=["source_file"]))
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-06.parquet") is True
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-07.parquet") is True
-    # simulate the check-race loser: pre-check says "not loaded", write runs again
-    monkeypatch.setattr(sinks, "is_file_loaded", lambda *_: False)
-    assert sinks.idempotent_append(df, bronze, "yellow_2024-06.parquet") is True
-    loaded = spark.read.parquet(bronze)
-    assert loaded.count() == 8  # 4 rows x 2 files — replay replaced, not doubled
-    assert (
-        loaded.filter("source_file = 'yellow_2024-07.parquet'").count() == 4
-    )  # untouched partition survives the dynamic overwrite
-
-
 def test_ingestion_log(spark):
     df = sinks.ingestion_log_rows(
         spark,
