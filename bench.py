@@ -145,7 +145,7 @@ def host_calibration(n: int = 300_000) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)
     # measured BEFORE any Spark work: paired with the end-of-run
     # `calibration`, the delta exposes co-tenant contention that moved

@@ -621,10 +621,7 @@ def main(argv: list[str] | None = None) -> int:
 
         weights, splits = parse_kv(args.weights), parse_kv(args.splits)
         docs = load_table_parallel(pl.spark, args.sf_dir, "documents")
-        # impl="arrow": one mapInArrow kernel for the six-rule battery
-        # (3.7x the interpreted expr battery; arrow==expr equality is
-        # pinned in tests) — the last call site still on the expr default
-        gated = rules.filter_by_rules(docs, "text", impl="arrow")
+        gated = rules.filter_by_rules(docs, "text")
         bench = docs.filter(F.col("doc_id") % 50 == 0)
         pool = gated.filter(F.col("doc_id") % 50 != 0)
         if args.decontam_mode == "redact":

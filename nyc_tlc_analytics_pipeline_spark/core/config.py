@@ -1,9 +1,9 @@
 """Pipeline configuration.
 
-Mirrors the reference's ``config/pipeline_config.yaml`` surface
-(quality thresholds at pipeline_config.yaml:48-53, download concurrency at
-:41-46, engine memory at :32-33) as plain dataclasses — no YAML dependency
-required, but ``PipelineConfig.from_dict`` accepts a parsed mapping.
+Mirrors the reference's ``config/pipeline_config.yaml`` surface (quality
+thresholds at pipeline_config.yaml:48-53, download concurrency at :41-46)
+as plain dataclasses — no YAML dependency.  ``IngestionConfig`` is the
+downloader's own argument (``sources.downloader``).
 """
 
 from __future__ import annotations
@@ -37,27 +37,4 @@ class IngestionConfig:
 class PipelineConfig:
     warehouse_dir: str = "data/warehouse"
     landing_dir: str = "data/raw"
-    start_month: str = "2021-01"
-    end_month: str = "2025-01"
-    services: tuple[str, ...] = ("yellow", "green", "hvfhv")
     quality: QualityThresholds = field(default_factory=QualityThresholds)
-    ingestion: IngestionConfig = field(default_factory=IngestionConfig)
-    # 100 TB-scale knob: exact percentiles buffer per group; flip to
-    # approximate for very large groups (breaks oracle equality, so the
-    # conformance suite always runs exact).  See SURVEY §7.3.
-    approx_percentiles: bool = False
-
-    @classmethod
-    def from_dict(cls, d: dict) -> "PipelineConfig":
-        q = d.get("quality", {})
-        i = d.get("ingestion", {})
-        return cls(
-            warehouse_dir=d.get("warehouse_dir", cls.warehouse_dir),
-            landing_dir=d.get("landing_dir", cls.landing_dir),
-            start_month=d.get("start_month", cls.start_month),
-            end_month=d.get("end_month", cls.end_month),
-            services=tuple(d.get("services", cls.services)),
-            quality=QualityThresholds(**q),
-            ingestion=IngestionConfig(**i),
-            approx_percentiles=bool(d.get("approx_percentiles", False)),
-        )

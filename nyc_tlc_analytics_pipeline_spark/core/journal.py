@@ -8,7 +8,9 @@ holds ``status`` ("success" or "failed"), ``attempts``, ``errors`` (one
 ``"<ExcClass>: <message>"`` per failed attempt) and, on success, the
 stage's JSON-sized ``result``.  Completed stages are skipped on re-entry;
 every stage body is an idempotent write, so a retry after a partial
-failure converges to the same state."""
+failure converges to the same state.  A stage reopened after it
+succeeded keeps its last result, even if the re-run fails, so a stage
+that extends its own result (the ingest catch-up) resumes from it."""
 
 from __future__ import annotations
 
@@ -55,6 +57,15 @@ class Journal:
     def done(self, name: str) -> bool:
         return self.stages.get(name, {}).get("status") == "success"
 
+    def result(self, name: str) -> Any:
+        """The result of the stage's last success, or None."""
+        return self.stages.get(name, {}).get("result")
+
+    def reopen(self, name: str) -> None:
+        """Make a stage that succeeded run again on its next ``run``."""
+        if self.done(name):
+            self.stages[name]["status"] = "reopened"
+
     def save(self) -> None:
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         tmp = self.path + ".tmp"
@@ -88,11 +99,9 @@ class Journal:
             }
             self.save()
             return result
-        self.stages[name] = {"status": "failed", "attempts": retries + 1, "errors": errors}
+        record = {"status": "failed", "attempts": retries + 1, "errors": errors}
+        if "result" in self.stages.get(name, {}):  # a reopened stage keeps it
+            record["result"] = self.stages[name]["result"]
+        self.stages[name] = record
         self.save()
         raise StageFailed(name, retries + 1, last)
-
-    def amend(self, name: str, result: Any) -> None:
-        """Replace the journaled result of a stage that succeeded."""
-        self.stages[name]["result"] = result
-        self.save()

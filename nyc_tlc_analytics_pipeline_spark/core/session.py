@@ -35,14 +35,18 @@ def build_session(
 ) -> SparkSession:
     """Create (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``);
+    ``shuffle_partitions`` to ``$SPARK_GRAFT_CPUS`` (or the CPUs this
+    process may run on).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus_env) if cpus_env and cpus_env.isdigit() else 32
+        cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
+        shuffle_partitions = (
+            int(cpus_env) if cpus_env.isdigit() else len(os.sched_getaffinity(0))
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -69,9 +69,7 @@ def curation_funnel_stages(
     # attribution) consume the gated pool; localCheckpoint here fired a
     # job at build time, breaking the plan-only builder contract
     gated = pin(
-        # impl="arrow": one mapInArrow kernel for the six-rule battery
-        # (3.7x the interpreted array-lambda battery; equality pinned)
-        rules.apply_rules(tk, text_col, toks="__tk", impl="arrow")
+        rules.apply_rules(tk, text_col, toks="__tk")
         .filter(col("rules_pass"))
         .select(id_col, text_col, F.size("__tk").alias("n_tokens"))
     )
@@ -198,9 +196,7 @@ def incremental_gate_attribution(
     can never drift (the q132 pattern)."""
     tk = batch.withColumn("__tk", text.tokens(text_col))
     gated = pin(  # lazy: the q187 builder stays plan-only
-        # impl="arrow": one mapInArrow kernel for the six-rule battery
-        # (3.7x the interpreted array-lambda battery; equality pinned)
-        rules.apply_rules(tk, text_col, toks="__tk", impl="arrow")
+        rules.apply_rules(tk, text_col, toks="__tk")
         .filter(col("rules_pass"))
         .select(*batch.columns, F.size("__tk").cast("long").alias("n_tokens"))
     )

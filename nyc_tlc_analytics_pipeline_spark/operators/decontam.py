@@ -221,7 +221,6 @@ def semantic_contamination(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Embedding-level decontamination — the companion to the n-gram
     gate for leaks a lexical match can't see (paraphrased eval items,
@@ -234,35 +233,25 @@ def semantic_contamination(
     broadcast gate (``core.guards`` — broadcast under the cap, keyless
     merge is meaningless here so over-cap raises instead of silently
     building a corpus×bench shuffle); the corpus side is ONE map-side
-    pass — per row, |bench| rounded cosines and a max, no corpus
-    shuffle at all (the aggregate is doc-keyed on an already-unique
-    key, so Catalyst's partial aggregate makes it map-side).  For
-    corpora where |bench| per-row work matters, shortlist first with
-    the IVF/LSH machinery (similarity.ivf_topk / ann_topk) and verify
-    survivors here — the q28 funnel posture.
+    pass — per row, |bench| rounded cosines — and the max/argmax is a
+    PARTIAL-aggregable ``min(struct(-cos, bench_id))`` keyed on the
+    already-unique corpus id, so the shuffle carries |corpus| rows,
+    never |corpus|×|bench|.  The cosines are array lambdas, interpreted
+    per element: per-row cost grows with |bench|·dim, so for corpora
+    where that matters, shortlist first with the IVF/LSH machinery
+    (similarity.ivf_topk / ann_topk) and verify survivors here — the
+    q28 funnel posture.
 
-    Cosines are nudge-rounded to 6 dp BEFORE the max/argmax (ties
-    break on the smaller benchmark id), so the report is deterministic
-    cross-engine.  Zero-norm vectors (either side) score cosine 0.0 by
-    definition in BOTH kernels — the IEEE alternative (0/0 = NaN) makes
-    the argmax and the ``contaminated`` predicate engine-dependent
-    (numpy argmax pins the first NaN, Spark orders NaN above every
-    double), so the convention is normalized here rather than
-    documented away.  ``kernel="arrow"`` (default) scores each Arrow batch
-    against the bench matrix with one BLAS matmul — per-element array
-    lambdas are interpreted, and the per-row cost of the expression
-    form grows with |bench|·dim (measured at a real eval-suite size,
-    195k corpus × 5,000-vector bench on local[32]: arrow ≈ 0.1 s vs
-    expr ≈ 2 s, ~25×; at the conformance |bench| = 54 the two are
-    equal).  ``kernel="expr"`` is the pure-expression twin the DuckDB
-    oracle restates, equality-pinned by test (the q62/q146
-    kernel-vs-expression pattern).  In expr mode the
-    max/argmax is a PARTIAL-aggregable ``max(struct(cos, -bid))``, so
-    the shuffle carries |corpus| rows, never |corpus|×|bench|; in
-    arrow mode there is no shuffle at all (one map pass).  Returns
-    (id, max_cos, nearest_bench, contaminated), one row per corpus
-    vector."""
-    from ..core.guards import collect_bounded, estimated_source_units
+    Cosines are nudge-rounded to 6 dp (``rnd``, BigDecimal-exact like
+    the oracle's ``round``) BEFORE the max/argmax, and ties break on the
+    smaller benchmark id, so the report is deterministic cross-engine.
+    Zero-norm vectors (either side) score cosine 0.0 by definition —
+    the IEEE alternative (0/0 = NaN) would make the argmax and the
+    ``contaminated`` predicate engine-dependent (Spark orders NaN above
+    every double).  Ids keep their source types (string ids work like
+    longs).  Returns (id, max_cos, nearest_bench, contaminated), one row
+    per corpus vector."""
+    from ..core.guards import estimated_source_units
     from ..functions.scalar import rnd
     from .similarity import as_double_array, cosine
 
@@ -272,64 +261,6 @@ def semantic_contamination(
             "broadcast budget — shortlist with similarity.ivf_topk/"
             "ann_topk and verify survivors instead of an all-pairs pass"
         )
-    if kernel == "arrow":
-        # model-sized closure state: the bench matrix, sorted by id so
-        # numpy argmax's first-max rule == the smallest-id tie-break
-        rows = collect_bounded(
-            bench.select(
-                col(id_col).alias("bid"), as_double_array(vec_col).alias("bv")
-            ),
-            65536,
-            "semantic_contamination",
-            "an eval-suite-sized benchmark (shortlist via IVF/LSH beyond)",
-        )
-        rows.sort(key=lambda r: r["bid"])
-        bids = [r["bid"] for r in rows]
-        bvecs = [list(map(float, r["bv"])) for r in rows]
-        keep = [c for c in corpus.columns if c == id_col]
-        # the id columns keep their source types (string doc ids work
-        # the same as longs — the expr twin was already type-agnostic)
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        bid_type = bench.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"{id_col} {id_type}, max_cos double, "
-            f"nearest_bench {bid_type}, contaminated boolean"
-        )
-
-        def score(batches):
-            import numpy as np
-
-            B = np.asarray(bvecs, dtype=np.float64)
-            bn = np.sqrt((B * B).sum(axis=1))
-            bid_arr = np.asarray(bids)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-                )
-                vn = np.sqrt((V * V).sum(axis=1))
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = (V @ B.T) / np.outer(vn, bn)
-                # zero-norm convention: cosine 0.0, same as the expr twin
-                cos = np.where(np.isfinite(cos), cos, 0.0)
-                # numpy float rounding, not BigDecimal HALF_UP — can
-                # differ from rnd() by one 1e-6 tick when a cosine sits
-                # within ~1ulp of a rounding boundary; the ORACLE-GATED
-                # registration therefore runs kernel="expr", and this
-                # production path is equality-pinned by test on real
-                # data (the q146 kernel/audit asymmetry, documented)
-                cos = np.round(cos + 1e-9, 6)
-                j = cos.argmax(axis=1)  # first max = smallest bid (sorted)
-                mc = cos[np.arange(len(V)), j]
-                out = pdf[keep].copy()
-                out["max_cos"] = mc
-                out["nearest_bench"] = bid_arr[j]
-                out["contaminated"] = mc >= threshold
-                yield out
-
-        return corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-
     b = F.broadcast(
         bench.select(
             col(id_col).alias("__bid"), as_double_array(vec_col).alias("__bv")
@@ -342,21 +273,23 @@ def semantic_contamination(
         id_col,
         "__bid",
         # zero-norm convention: cosine() yields NULL on a zero norm
-        # (nullif guard); pin it to 0.0 to match the arrow kernel
+        # (nullif guard); pin it to 0.0
         F.coalesce(rnd(cosine(col("__cv"), col("__bv")), 6), lit(0.0)).alias(
             "__cos"
         ),
     )
+    # highest cosine first, then the smallest bench id: negating the
+    # (exact) double leaves the id in its own type
     best = scored.groupBy(id_col).agg(
-        F.max(
-            F.struct(col("__cos").alias("c"), (-col("__bid")).alias("nb"))
+        F.min(
+            F.struct((-col("__cos")).alias("nc"), col("__bid").alias("nb"))
         ).alias("__m")
     )
     return best.select(
         col(id_col),
-        col("__m.c").alias("max_cos"),
-        (-col("__m.nb")).alias("nearest_bench"),
-        (col("__m.c") >= lit(threshold)).alias("contaminated"),
+        (-col("__m.nc")).alias("max_cos"),
+        col("__m.nb").alias("nearest_bench"),
+        (-col("__m.nc") >= lit(threshold)).alias("contaminated"),
     )
 
 
@@ -372,7 +305,6 @@ def contamination_union_report(
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
     group_col: str = "lang",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """The UNION decontamination gate a production pipeline actually
     ships: the lexical n-gram detector (:func:`flag_contaminated` —
@@ -402,7 +334,7 @@ def contamination_union_report(
     )
     sem = (
         semantic_contamination(
-            corpus_vecs, bench_vecs, threshold, vec_id_col, vec_col, kernel=kernel
+            corpus_vecs, bench_vecs, threshold, vec_id_col, vec_col
         )
         .filter(col("contaminated"))
         .select(col(vec_id_col).alias("__sid"))

@@ -1,19 +1,16 @@
 """Gopher/C4-style quality-rule filters for training-data curation.
 
-Each rule is a pure column expression (JVM-side, inside whole-stage
-codegen) over the token array — no Python, no shuffle: the whole rule
-battery is a map-only pass that Catalyst fuses into the scan stage, so
-it costs one corpus read at any scale (the published pipelines — Gopher
-rules, C4 heuristics — are exactly this shape: cheap per-document
-predicates applied before any pairwise dedup).
-
-The repetition rules need per-document n-gram frequencies.  For the
-≤ few-hundred-token documents here they are computed INSIDE the row via
-array expressions (``list_distinct`` × ``filter`` — O(k²) comparisons on
-k tokens, all in codegen, zero data motion).  For book-length documents
-the same rule should switch to the explode → groupBy(doc, gram) form,
-which trades a shuffle for linear per-row work; the cutover is a
-caller-side choice, both forms are equivalence-tested.
+The rule battery runs as one Arrow batch kernel (``mapInArrow``) per
+corpus pass: no shuffle, map-only, so it costs one corpus read at any
+scale (the published pipelines — Gopher rules, C4 heuristics — are
+exactly this shape: cheap per-document predicates applied before any
+pairwise dedup).  Tokenization stays in the JVM (``text.tokens``); the
+kernel dictionary-encodes the flattened tokens of a batch once and
+derives every per-document statistic from integer segment arithmetic,
+so the repetition rules cost O(tokens log tokens) per batch instead of
+Catalyst's interpreted per-element array lambdas.  Every ratio is a
+single IEEE division of exact integer counts, which is what keeps the
+flags identical to the DuckDB oracle SQL (q49, q55).
 
 Rule battery (token-adapted from the Gopher paper's Table A1 — the
 line-based rules are omitted because this corpus is single-line):
@@ -21,7 +18,7 @@ line-based rules are omitted because this corpus is single-line):
 - token count within [min_tokens, max_tokens]
 - mean token length within [2, 10]
 - ≥ 80% of tokens contain an alphabetic character (any script)
-- symbol ratio (non-alphanumeric, non-space chars / all chars) ≤ 10%
+- symbol ratio (ASCII punctuation chars / all chars) ≤ 10%
 - repeated-token fraction (1 − distinct/total) ≤ 60%
 - top-bigram coverage (2 · max bigram frequency / tokens) ≤ 10%
 """
@@ -35,72 +32,10 @@ from pyspark.sql.functions import col, lit
 from . import text
 
 
-def bigrams(toks: Column) -> Column:
-    """Adjacent token pairs as 'a b' strings (k−1 bigrams for k tokens)."""
-    return F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, lit(0))),
-        lambda t, i: F.concat_ws(" ", t, F.element_at(toks, i + 2)),
-    )
-
-
-def top_bigram_fraction(toks: Column) -> Column:
-    """Fraction of tokens covered by the single most frequent bigram:
-    2 · max_count / n_tokens (each bigram occurrence spans 2 tokens).
-
-    In-row O(k log k) form: sort the bigram array, then the max frequency
-    is the longest run of equal adjacent elements — one linear aggregate
-    pass.  (The earlier distinct × filter form was O(k²) higher-order
-    steps, and lambda expressions are interpreted, not codegen'd — it
-    dominated the whole rule battery's runtime ~50×.)  See the module
-    docstring for the explode → groupBy form for book-length rows."""
-    bg = F.array_sort(bigrams(toks))
-    zero = F.struct(
-        lit("").alias("prev"), lit(0).alias("run"), lit(0).alias("best")
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    max_count = F.aggregate(bg, zero, step, lambda acc: acc["best"])
-    return (
-        F.coalesce(max_count, lit(0)) * lit(2.0) / F.nullif(F.size(toks), lit(0))
-    )
-
-
-def repeated_token_fraction(toks: Column) -> Column:
-    """1 − distinct/total: how much of the document is re-used vocabulary."""
-    return lit(1.0) - F.size(F.array_distinct(toks)) / F.nullif(
-        F.size(toks), lit(0)
-    )
-
-
 def mean_token_length(toks: Column) -> Column:
     return F.aggregate(
         toks, lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     ) / F.nullif(F.size(toks), lit(0))
-
-
-def symbol_ratio(text_col: Column) -> Column:
-    """Punctuation chars / all chars.  Unlike ``text.punct_ratio`` (which
-    counts every non-[a-z0-9] char and would flag ALL CJK text), only
-    ASCII punctuation counts as a symbol, so non-Latin scripts pass."""
-    n_sym = F.length(F.regexp_replace(text_col, r"[^\p{Punct}]", ""))
-    return n_sym / F.nullif(F.length(text_col), lit(0))
-
-
-def alpha_token_fraction(toks: Column) -> Column:
-    """Share of tokens containing at least one letter (unicode-aware:
-    anything that is not digit/punct/space counts as a letter, so CJK
-    scripts pass)."""
-    has_alpha = F.filter(
-        toks, lambda t: t.rlike(r"[^0-9\p{Punct}\s]")
-    )
-    return F.size(has_alpha) / F.nullif(F.size(toks), lit(0))
 
 
 # thresholds: module-level so the oracle SQL derives from the same values
@@ -114,32 +49,6 @@ REPEAT_MAX = 0.6
 TOP_BIGRAM_MAX = 0.1
 
 
-def rule_flags(
-    text_col: Column | str, toks: Column | str | None = None
-) -> dict[str, Column]:
-    """The rule battery as named boolean columns (True = rule VIOLATED,
-    matching how curation pipelines report per-rule rejection counts).
-
-    ``toks``: optionally a pre-computed token-array column (semantics of
-    :func:`operators.text.tokens`).  Pipelines that tokenize once and
-    feed several consumers (gate + decontam + token counts — the q55
-    funnel) pass it to avoid re-splitting the text per consumer."""
-    c = col(text_col) if isinstance(text_col, str) else text_col
-    if toks is None:
-        toks = text.tokens(c)
-    elif isinstance(toks, str):
-        toks = col(toks)
-    n = F.size(toks)
-    return {
-        "bad_length": (n < MIN_TOKENS) | (n > MAX_TOKENS),
-        "bad_mean_len": ~mean_token_length(toks).between(MEAN_LEN_LO, MEAN_LEN_HI),
-        "bad_alpha": alpha_token_fraction(toks) < ALPHA_MIN,
-        "bad_symbols": F.coalesce(symbol_ratio(c), lit(0.0)) > SYMBOL_MAX,
-        "bad_repetition": repeated_token_fraction(toks) > REPEAT_MAX,
-        "bad_top_bigram": top_bigram_fraction(toks) > TOP_BIGRAM_MAX,
-    }
-
-
 RULE_FLAG_NAMES = (
     "bad_length",
     "bad_mean_len",
@@ -150,87 +59,51 @@ RULE_FLAG_NAMES = (
 )
 
 
-def apply_rules(
-    df: DataFrame,
-    text_col: str = "text",
-    toks: Column | str | None = None,
-    impl: str = "expr",
-) -> DataFrame:
-    """Attach per-rule violation flags and the overall ``rules_pass``
-    verdict.  Map-only either way: no shuffle, one corpus pass.
-
-    - ``impl="expr"`` (default): pure column expressions.  The battery
-      fuses into the scan, but the array rules run as INTERPRETED
-      higher-order lambdas (array_sort/aggregate/filter are not
-      codegen'd), ~0.2–0.4 s each per corpus pass at sf0.1 — measured
-      as 58% of the q55 funnel (BENCH_SCALING.md round-14 stage table).
-    - ``impl="arrow"``: one ``mapInArrow`` kernel computes all six
-      flags per batch with vectorized pyarrow/numpy (dictionary-encode
-      the flattened token child array once, then O(tokens) segment
-      arithmetic) — the documented Arrow-kernel exception (guide §4.2,
-      the ``cluster.py`` precedent).  Value-identical to the expr form
-      including null propagation and float comparison order
-      (equality-pinned in tests/test_rules_packing.py); every ratio is
-      a single IEEE division of exact integer counts, so there is no
-      FP-association drift between the two impls.
-    """
-    if impl == "arrow" and isinstance(text_col, str):
-        return _apply_rules_arrow(df, text_col, toks)
-    flags = rule_flags(text_col, toks)
-    out = df.withColumns(flags)
-    verdict = None
-    for name in flags:
-        bad = col(name)
-        verdict = bad if verdict is None else (verdict | bad)
-    return out.withColumn("rules_pass", ~verdict)
-
-
 #: ASCII punctuation, exactly Java's non-UNICODE_CHARACTER_CLASS
 #: ``\p{Punct}`` (0x21-0x2F, 0x3A-0x40, 0x5B-0x60, 0x7B-0x7E) — re2
 #: character-class form for the Arrow kernel
 _PUNCT_RE2 = r"[!-/:-@\[-`{-~]"
 #: a character that makes a token "alphabetic": anything outside
-#: digits / ASCII punct / Java ``\s`` (= [ \t\n\x0B\f\r]); mirrors
-#: ``alpha_token_fraction``'s ``[^0-9\p{Punct}\s]`` rlike exactly
+#: digits / ASCII punct / Java ``\s`` (= [ \t\n\x0B\f\r]), i.e. the
+#: Java regex ``[^0-9\p{Punct}\s]`` — so CJK scripts pass
 _ALPHA_RE2 = r"[^0-9!-/:-@\[-`{-~ \t\n\x0B\f\r]"
 
 
-def _apply_rules_arrow(
-    df: DataFrame, text_col: str, toks: Column | str | None
+def apply_rules(
+    df: DataFrame, text_col: str = "text", toks: Column | str | None = None
 ) -> DataFrame:
-    """Arrow-batched rule battery (see :func:`apply_rules` ``impl="arrow"``).
+    """Attach the per-rule violation flags (True = rule VIOLATED, matching
+    how curation pipelines report per-rule rejection counts; named in
+    ``RULE_FLAG_NAMES``) and the overall ``rules_pass`` verdict.
 
-    Tokenization stays in the JVM (``text.tokens`` — regex-split parity
-    with the oracle is the JVM expression's contract); the kernel
+    ``toks``: optionally a pre-computed token-array column (semantics of
+    :func:`operators.text.tokens`).  Pipelines that tokenize once and
+    feed several consumers (gate + decontam + token counts — the q55
+    funnel) pass it to avoid re-splitting the text per consumer.
+
+    One ``mapInArrow`` kernel computes all six flags per batch: it
     consumes the token LIST column zero-copy (child values + offsets),
-    dictionary-encodes the flattened tokens ONCE (C++), and derives all
-    six per-document statistics from integer segment arithmetic:
+    dictionary-encodes the flattened tokens ONCE (C++), and derives the
+    statistics from integer segment arithmetic:
 
     - token count / mean length: cumsum of ``utf8_length`` over offsets;
     - alpha fraction: cumsum of one vectorized re2 match over tokens;
     - symbol ratio: ``count_substring_regex`` over the raw text column;
-    - distinct fraction / top-bigram: per-segment ``np.unique`` on the
-      dictionary codes (bigram = code[i]·V + code[i+1]; tokens cannot
-      contain whitespace, so code-pair identity == joined-string
-      identity).
+    - distinct fraction / top-bigram: one global ``np.unique`` over
+      (row, code) and (row, bigram) keys (bigram = code[i]·V + code[i+1];
+      tokens cannot contain whitespace, so code-pair identity ==
+      joined-string identity).
 
-    Null parity with the expression form: null text/tokens yield null
-    flags (except ``bad_symbols``, whose ``coalesce(..., 0.0)`` makes it
-    False), and ``rules_pass`` follows three-valued OR.
+    Null semantics are Spark SQL's with legacy ``size(null) = -1``: null
+    tokens set ``bad_length``, leave ``bad_mean_len`` null and the
+    alpha/repetition/top-bigram flags False; an empty token array leaves
+    those three and ``bad_mean_len`` null; ``bad_symbols`` is False on
+    null or empty text; ``rules_pass`` is the three-valued NOT(OR) of the
+    six flags.  Columns of ``df`` pass through unchanged.
     """
-    from . import text as _text
-
-    tmp_tk = None
-    if toks is None:
-        tmp_tk = "__rules_tk"
-        df = df.withColumn(tmp_tk, _text.tokens(text_col))
-        tk_name = tmp_tk
-    elif isinstance(toks, str):
-        tk_name = toks
-    else:
-        tmp_tk = "__rules_tk"
-        df = df.withColumn(tmp_tk, toks)
-        tk_name = tmp_tk
+    tk = toks if isinstance(toks, str) else "__rules_tk"
+    if tk == "__rules_tk":
+        df = df.withColumn(tk, text.tokens(text_col) if toks is None else toks)
 
     in_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -245,7 +118,7 @@ def _apply_rules_arrow(
     len_lo, len_hi = MEAN_LEN_LO, MEAN_LEN_HI
     alpha_min, sym_max = ALPHA_MIN, SYMBOL_MAX
     rep_max, bigram_max = REPEAT_MAX, TOP_BIGRAM_MAX
-    text_name, tk = text_col, tk_name
+    text_name = text_col
 
     def kernel(batches):
         import numpy as np
@@ -295,9 +168,9 @@ def _apply_rules_arrow(
             # index (contiguity across rows is then irrelevant)
             n_eff = np.where(tk_valid, n, 0).astype(np.int64)
             nonempty = tk_valid & (n > 0)
-            # segment sums from the cumsums at the row boundaries —
-            # same integer sums, same single IEEE division as the
-            # scalar form (parity-critical)
+            # segment sums from the cumsums at the row boundaries: exact
+            # integer sums and one IEEE division, as the oracle SQL
+            # computes them (parity-critical)
             seg_len = cs_len[off[1:]] - cs_len[off[:-1]]
             seg_alpha = cs_alpha[off[1:]] - cs_alpha[off[:-1]]
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -311,7 +184,7 @@ def _apply_rules_arrow(
             f_sym = np.where(
                 txt_valid & (n_chr > 0), sym_ratio > sym_max, False
             )
-            # expr-path parity under legacy sizeOfNull (ansi off):
+            # Spark SQL under legacy sizeOfNull (ansi off):
             # size(null) = -1, so bad_length is TRUE on null tokens,
             # alpha = -1/-1 = 1.0 (False), repetition 0.0 (False),
             # top-bigram -0.0 (False); only mean_len stays null
@@ -402,16 +275,11 @@ def _apply_rules_arrow(
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     out = df.mapInArrow(kernel, out_schema)
-    if tmp_tk is not None:
-        out = out.drop(tmp_tk)
-    return out
+    return out if tk == toks else out.drop(tk)
 
 
 def filter_by_rules(
-    df: DataFrame,
-    text_col: str = "text",
-    toks: Column | str | None = None,
-    impl: str = "expr",
+    df: DataFrame, text_col: str = "text", toks: Column | str | None = None
 ) -> DataFrame:
     """Keep only rule-passing documents (the curation gate form)."""
-    return apply_rules(df, text_col, toks, impl=impl).filter(col("rules_pass"))
+    return apply_rules(df, text_col, toks).filter(col("rules_pass"))

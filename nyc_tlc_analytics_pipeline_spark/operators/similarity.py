@@ -117,55 +117,18 @@ def quantize_query(query_vec: list[float], qmax: int = QMAX) -> list[int]:
     ]
 
 
-def int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two code arrays (no FP anywhere)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _quantized_scores_expr(
+def _quantized_scores(
     df: DataFrame, qc: list[int], query_vec: list[float], vec_col: str, qmax: int
 ) -> DataFrame:
-    """Pure-column-expression scoring twin (the oracle-shaped form):
-    per-row codes via :func:`quantize_codes`, integer dot/norms via
-    fold aggregates.  Correct at any scale but each array op is an
-    interpreted per-element lambda — the Arrow kernel is ~10× faster on
-    the same arithmetic (q62's kernel-vs-expression precedent)."""
-    qlit = F.array(*[lit(int(c)).cast("long") for c in qc])
-    nq = sum(c * c for c in qc)
-    codes = quantize_codes(vec_col, qmax)
-    d = int_dot(codes, qlit)
-    ncodes = F.aggregate(
-        F.transform(codes, lambda x: x * x),
-        lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    qf = F.array(*[lit(float(x)) for x in query_vec])
-    return df.select(
-        *[c for c in df.columns if c != vec_col],
-        d.alias("q_dot"),
-        (
-            d.cast("double")
-            / F.sqrt((ncodes * lit(int(nq)).cast("long")).cast("double"))
-        ).alias("q_cos_raw"),
-        cosine(as_double_array(vec_col), qf).alias("cos_exact_raw"),
-    )
-
-
-def _quantized_scores_arrow(
-    df: DataFrame, qc: list[int], query_vec: list[float], vec_col: str, qmax: int
-) -> DataFrame:
-    """Arrow-batched numpy scoring kernel — identical arithmetic to the
-    expression twin, element-for-element: same floor/clamp quantization,
-    integer dot/norms are EXACT (so bit-equal however they're summed),
-    and the only FP steps (sqrt, divide) are IEEE correctly-rounded
-    single operations in both runtimes.  The float cos_exact_raw may
-    drift ~1e-15 from the fold form (numpy pairwise summation), far
-    under the rnd(…, 6) nudge.  Query codes ride the closure —
-    model-sized, pickled once per worker."""
+    """Arrow-batched numpy scoring kernel: per-row int8 codes (the
+    :func:`quantize_codes` floor/clamp formula), then integer dot and
+    squared norms, which are EXACT however they are summed; the only FP
+    steps (sqrt, divide) are single correctly-rounded IEEE operations, as
+    in the oracle SQL.  The float ``cos_exact_raw`` may drift ~1e-15 from
+    a SQL fold (numpy pairwise summation), far under the rnd(…, 6) nudge.
+    Per-element array lambdas would be interpreted instead (~10× slower
+    on the same arithmetic).  Query codes ride the closure — model-sized,
+    pickled once per worker."""
     keep = [c for c in df.columns if c != vec_col]
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = (
@@ -211,7 +174,6 @@ def quantized_cosine_topk(
     vec_col: str = "embedding",
     exclude_ids: tuple[int, ...] = (),
     qmax: int = QMAX,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Brute-force top-k under int8-quantized cosine, beside the exact
     float cosine for the same rows (the registered form doubles as a
@@ -223,17 +185,13 @@ def quantized_cosine_topk(
     kernel/project → TakeOrderedAndProject; at scale the scan reads the
     4× smaller code column instead of the float vectors.
 
-    ``kernel="arrow"`` (default) scores with the vectorized numpy
-    kernel; ``kernel="expr"`` is the pure-expression twin — an equality
-    test pins the two to identical output, so the DuckDB oracle covers
-    both (the q62 assignment-kernel pattern).
-
     Schema-agnostic like :func:`cosine_topk`: every non-vector column
     rides through to the output (no hard-coded payload columns)."""
     qc = quantize_query(query_vec, qmax)
     keep = [c for c in df.columns if c != vec_col]
-    score = _quantized_scores_arrow if kernel == "arrow" else _quantized_scores_expr
-    scored = score(df.select(*keep, col(vec_col)), qc, query_vec, vec_col, qmax)
+    scored = _quantized_scores(
+        df.select(*keep, col(vec_col)), qc, query_vec, vec_col, qmax
+    )
     out = scored.select(
         *keep,
         "q_dot",
@@ -254,7 +212,6 @@ def ivf_quantized_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     qmax: int = QMAX,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """The combined ANN production stack: IVF pruning × int8 scoring.
 
@@ -273,8 +230,7 @@ def ivf_quantized_topk(
         .drop("ivf_bucket")
     )
     return quantized_cosine_topk(
-        pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col,
-        qmax=qmax, kernel=kernel,
+        pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col, qmax=qmax
     )
 
 

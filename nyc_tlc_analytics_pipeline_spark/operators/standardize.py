@@ -29,9 +29,9 @@ analytics queries need but the reference's fact table dropped
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import col, concat, lit, when
+from pyspark.sql.functions import col, concat, lit
 
 from ..functions.scalar import day_of_week, epoch_minutes, nullif_div
 from ..sources.sinks import counted
@@ -88,14 +88,18 @@ def _source_file_col(df: DataFrame):
     return col("source_file") if "source_file" in df.columns else F.input_file_name()
 
 
-def standardize_yellow(raw: DataFrame) -> DataFrame:
-    """Yellow taxi → fact rows (reference: standardize.py:24-76)."""
-    pickup, dropoff = col("tpep_pickup_datetime"), col("tpep_dropoff_datetime")
+def _standardize_taxi(raw: DataFrame, service: str, ts: str, airport_fee: Column) -> DataFrame:
+    """Yellow/green taxi → fact rows: one projection, parameterized by the
+    service, its timestamp prefix (``tpep``/``lpep``) and its airport-fee
+    column.  ``trip_id`` is md5(service initial ‖ pickup ‖ distance)."""
+    pickup, dropoff = col(f"{ts}_pickup_datetime"), col(f"{ts}_dropoff_datetime")
     distance, total = col("trip_distance"), col("total_amount")
     d = _common_derived(pickup, dropoff, distance, total)
     return raw.filter(pickup.isNotNull() & dropoff.isNotNull()).select(
-        F.md5(concat(lit("y"), pickup.cast("string"), distance.cast("string"))).alias("trip_id"),
-        lit("yellow").alias("service_type"),
+        F.md5(concat(lit(service[0]), pickup.cast("string"), distance.cast("string"))).alias(
+            "trip_id"
+        ),
+        lit(service).alias("service_type"),
         lit(None).cast("string").alias("hvfhs_license_num"),
         pickup.alias("pickup_datetime"),
         dropoff.alias("dropoff_datetime"),
@@ -112,7 +116,7 @@ def standardize_yellow(raw: DataFrame) -> DataFrame:
         (col("extra") + col("improvement_surcharge") + col("congestion_surcharge")).alias(
             "surcharges"
         ),
-        col("Airport_fee").alias("airport_fee"),
+        airport_fee.alias("airport_fee"),
         col("mta_tax").alias("taxes"),
         total.alias("total_fare"),
         lit(None).cast("double").alias("driver_pay"),
@@ -125,46 +129,17 @@ def standardize_yellow(raw: DataFrame) -> DataFrame:
         ((total >= 0) & (dropoff > pickup) & (distance >= 0)).alias("is_valid"),
         _source_file_col(raw).alias("source_file"),
     )
+
+
+def standardize_yellow(raw: DataFrame) -> DataFrame:
+    """Yellow taxi → fact rows (reference: standardize.py:24-76)."""
+    return _standardize_taxi(raw, "yellow", "tpep", col("Airport_fee"))
 
 
 def standardize_green(raw: DataFrame) -> DataFrame:
     """Green taxi → fact rows (reference: standardize.py:78-137); green has
     no airport fee column → NULL (standardize.py:117)."""
-    pickup, dropoff = col("lpep_pickup_datetime"), col("lpep_dropoff_datetime")
-    distance, total = col("trip_distance"), col("total_amount")
-    d = _common_derived(pickup, dropoff, distance, total)
-    return raw.filter(pickup.isNotNull() & dropoff.isNotNull()).select(
-        F.md5(concat(lit("g"), pickup.cast("string"), distance.cast("string"))).alias("trip_id"),
-        lit("green").alias("service_type"),
-        lit(None).cast("string").alias("hvfhs_license_num"),
-        pickup.alias("pickup_datetime"),
-        dropoff.alias("dropoff_datetime"),
-        d["pickup_date"].alias("pickup_date"),
-        d["pickup_hour"].alias("pickup_hour"),
-        d["pickup_day_of_week"].alias("pickup_day_of_week"),
-        col("PULocationID").cast("int").alias("pickup_zone_id"),
-        col("DOLocationID").cast("int").alias("dropoff_zone_id"),
-        distance.alias("trip_distance_miles"),
-        d["trip_duration_minutes"].alias("trip_duration_minutes"),
-        col("fare_amount").alias("base_fare"),
-        col("tip_amount").alias("tips"),
-        col("tolls_amount").alias("tolls"),
-        (col("extra") + col("improvement_surcharge") + col("congestion_surcharge")).alias(
-            "surcharges"
-        ),
-        lit(None).cast("double").alias("airport_fee"),
-        col("mta_tax").alias("taxes"),
-        total.alias("total_fare"),
-        lit(None).cast("double").alias("driver_pay"),
-        lit(None).cast("double").alias("take_rate"),
-        d["price_per_mile"].alias("price_per_mile"),
-        d["price_per_minute"].alias("price_per_minute"),
-        d["avg_speed_mph"].alias("avg_speed_mph"),
-        lit(None).cast("boolean").alias("is_shared_request"),
-        lit(None).cast("boolean").alias("is_shared_match"),
-        ((total >= 0) & (dropoff > pickup) & (distance >= 0)).alias("is_valid"),
-        _source_file_col(raw).alias("source_file"),
-    )
+    return _standardize_taxi(raw, "green", "lpep", lit(None).cast("double"))
 
 
 def standardize_hvfhv(raw: DataFrame) -> DataFrame:

@@ -58,12 +58,15 @@ E2E_STAGES = ("init_dims", "ingest", "quality", "build_fact", "build_aggregates"
 T = TypeVar("T")
 
 
-def landing_files(landing_dir: str) -> list[tuple[str, str]]:
-    """(path, service) of every recognized service file, in load order."""
+def unloaded_files(landing_dir: str, loads: list[dict]) -> list[tuple[str, str]]:
+    """(path, service) of every recognized service file that no entry of
+    ``loads`` names, in load order."""
+    loaded = {r["source_file"] for r in loads}
     return [
         (path, service)
         for service, prefix in LANDING_PREFIXES
         for path in sorted(glob.glob(os.path.join(landing_dir, f"{prefix}*.parquet")))
+        if os.path.basename(path) not in loaded
     ]
 
 
@@ -153,10 +156,16 @@ class TlcPipeline:
         self._meta_table("ingestion_log").append(sinks.ingestion_log_rows(self.spark, [entry]))
         return entry
 
-    def load_landing_dir(self, landing_dir: str) -> list[dict]:
+    def load_landing_dir(self, landing_dir: str, loads: list[dict] | None = None) -> list[dict]:
         """Glob the landing dir and load every recognized service file
-        (reference: DataLoader.load_all_downloaded_files)."""
-        return [self.load_file(path, service) for path, service in landing_files(landing_dir)]
+        (reference: DataLoader.load_all_downloaded_files).  Given the
+        entries of earlier loads, load only the files they lack and
+        append to them, so a retried or resumed ingest loads each file
+        once."""
+        loads = [] if loads is None else loads
+        for path, service in unloaded_files(landing_dir, loads):
+            loads.append(self.load_file(path, service))
+        return loads
 
     def raw(self, service: str) -> DataFrame:
         return self._bronze_manifest(service).read()
@@ -192,7 +201,7 @@ class TlcPipeline:
 
     def build_aggregates(self) -> dict[str, int]:
         fact = self.spark.read.parquet(self.fact_path)
-        aggs = aggregations.build_all(fact, approx=self.config.approx_percentiles)
+        aggs = aggregations.build_all(fact)
         return side_by_side(
             self.spark,
             {
@@ -246,28 +255,19 @@ class TlcPipeline:
         skips the already-completed stages (their idempotent writes are not
         repeated, so e.g. ingestion_log gets no duplicate entries).  A
         journaled ingest stage does NOT freeze the file set: resume
-        re-scans the landing dir and loads any files that arrived after the
-        failed run.  ``resume=False`` discards prior state and runs
-        everything."""
+        re-scans the landing dir and loads, through the same retry loop,
+        any files that arrived after the failed run.  ``resume=False``
+        discards prior state and runs everything."""
         stages = journal.Journal(self._state_path, E2E_STAGES, resume)
         dims = stages.run("init_dims", lambda: self.init_dims(zones_csv), retries)
-        ingest_was_journaled = stages.done("ingest")
-        loads = stages.run("ingest", lambda: self.load_landing_dir(landing_dir), retries)
-        if ingest_was_journaled:
-            # the journal froze the file set seen by the failed run; files
-            # landed SINCE then must still be loaded (the loads themselves
-            # are idempotent, so this is safe to repeat).  Only unjournaled
-            # filenames are touched — no duplicate ingestion_log rows for
-            # the already-loaded set.
-            journaled = {r["source_file"] for r in loads}
-            catchup = [
-                self.load_file(path, service)
-                for path, service in landing_files(landing_dir)
-                if os.path.basename(path) not in journaled
-            ]
-            if catchup:
-                loads = loads + catchup
-                stages.amend("ingest", loads)
+        # the ingest result lists every file loaded so far; a resumed run
+        # loads only the files missing from it (those landed after the
+        # failed run), so no journaled file gets a second ingestion_log
+        # row, and a retry skips the files its failed attempt loaded
+        loads: list[dict] = list(stages.result("ingest") or [])
+        if unloaded_files(landing_dir, loads):
+            stages.reopen("ingest")
+        loads = stages.run("ingest", lambda: self.load_landing_dir(landing_dir, loads), retries)
         qc_pct = stages.run(
             "quality",
             lambda: {

@@ -1096,22 +1096,21 @@ ORDER BY lang
     _q49_oracle(),
     "Gopher/C4-style per-document curation rules (length, mean token "
     "length, alpha fraction, symbol ratio, repeated-token fraction, "
-    "top-bigram coverage) as one vectorized Arrow batch kernel "
-    "(equality-pinned against the column-expression form) — map-only, "
-    "zero shuffles before the final tiny per-language aggregate.",
+    "top-bigram coverage) as one vectorized Arrow batch kernel over "
+    "dictionary-encoded tokens — map-only, zero shuffles before the "
+    "final tiny per-language aggregate.",
     operators=("rules-gopher", "text-tokens", "A4"),
 )
 def q49(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import rules
 
     docs = load_table_parallel(spark, sf_dir, "documents")
-    # impl="arrow" (3.7x the interpreted battery; equality pinned);
     # select first — mapInArrow is opaque to column pruning, so only
     # the two columns the query needs cross the Python boundary
-    flagged = rules.apply_rules(docs.select("lang", "text"), "text", impl="arrow")
+    flagged = rules.apply_rules(docs.select("lang", "text"), "text")
     agg = [F.count("*").cast("long").alias("n_docs"),
            F.sum(col("rules_pass").cast("long")).alias("n_pass")]
-    for name in rules.rule_flags("text"):
+    for name in rules.RULE_FLAG_NAMES:
         agg.append(F.sum(col(name).cast("long")).alias(f"n_{name}"))
     return flagged.groupBy("lang").agg(*agg).orderBy("lang")
 
@@ -1643,11 +1642,7 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram-explode side + anti-join side) stops the funnel re-tokenizing
     # the corpus in three stages (was 24% of the headline bench)
     tk = docs.withColumn("tk", T.tokens("text"))
-    # impl="arrow": the six-rule battery in one mapInArrow kernel —
-    # 1.9 s -> 0.55 s warm at sf0.1 (3.7x, holds at 10x; value
-    # equality vs the expr form pinned in tests and verified on the
-    # real corpus at both SFs)
-    gated = rules.filter_by_rules(tk, "text", toks="tk", impl="arrow")
+    gated = rules.filter_by_rules(tk, "text", toks="tk")
     pool = pin(
         gated.filter(col("doc_id") % 50 != 0)
         .select("doc_id", "lang", "tk")
@@ -9885,13 +9880,9 @@ ORDER BY vec_id
     "rides the round-9 reference-corpus broadcast gate (over-cap "
     "raises toward the IVF/LSH shortlist path instead of silently "
     "shuffling corpus×bench), and the max/argmax is a PARTIAL-"
-    "aggregable max(struct(cos, -bid)) — the shuffle carries |corpus| "
-    "rows, never the pair volume a per-id window would move.  This "
-    "registration pins kernel=expr (BigDecimal-exact rounding, the "
-    "hash gate); the operator DEFAULT is the Arrow numpy kernel — one "
-    "BLAS matmul per batch, ~25× faster at a 5k-vector bench — "
-    "equality-pinned to "
-    "this form by test (the q62/q146 pattern).  Oracle replays the "
+    "aggregable min(struct(-cos, bid)) — the shuffle carries |corpus| "
+    "rows, never the pair volume a per-id window would move.  Cosines "
+    "are rounded BigDecimal-exact before the max.  Oracle replays the "
     "rounded cosines and the same tie-break.",
     operators=("decontam-semantic", "similarity-brute", "A3", "J1"),
 )
@@ -9907,7 +9898,7 @@ def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ((col("label") != 9) | (col("vec_id") >= _Q158_BENCH_MAX_ID))
     )
     return decontam.semantic_contamination(
-        corpus, bench, threshold=_Q158_THF, kernel="expr"
+        corpus, bench, threshold=_Q158_THF
     ).orderBy("vec_id")
 
 
@@ -11197,9 +11188,8 @@ ORDER BY lang
     "threshold under-recalls verbatim text.  Both detectors keep their "
     "scale contracts (broadcast-gated bench sides, no corpus shuffle "
     "in the lexical probe, partial-aggregable semantic max); the "
-    "verdict join is two id-sized flag left-joins.  Registration pins "
-    "kernel=expr (the hash gate); arrow BLAS is the operator default.  "
-    "Oracle replays both detectors and the overlap arithmetic.",
+    "verdict join is two id-sized flag left-joins.  Oracle replays "
+    "both detectors and the overlap arithmetic.",
     operators=("decontam-ngram", "decontam-semantic", "J8", "A4"),
 )
 def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11216,7 +11206,6 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(bench_vec),
         n=_Q170_N,
         threshold=_Q170_THF,
-        kernel="expr",
     )
 
 

@@ -173,6 +173,87 @@ def test_resume_loads_files_landed_after_the_failed_run(spark, landing, tmp_path
     assert fact.filter(f"source_file = '{late}'").count() > 0
 
 
+def _killed_run_then_late_file(spark, landing, tmp_path):
+    """A run killed at build_fact after ingesting the 3 fixture files,
+    then a fourth file landed: (pipeline, landing dir, late file name)."""
+    import shutil
+
+    from nyc_tlc_analytics_pipeline_spark.pipeline import StageFailed
+
+    land = tmp_path / "landing"
+    shutil.copytree(landing, land)
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    real = p.build_fact
+
+    def dead():
+        raise RuntimeError("stage killed")
+
+    p.build_fact = dead
+    with pytest.raises(StageFailed):
+        p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"), retries=0)
+    p.build_fact = real
+    late = "yellow_tripdata_2025-02.parquet"
+    synth_yellow(100, seed=2).drop(columns=["source_file"]).to_parquet(land / late)
+    return p, land, late
+
+
+def _fail_loading(p, fname, times):
+    """Make ``p.load_file`` raise for ``fname`` the first ``times`` calls."""
+    real, failed = p.load_file, []
+
+    def load_file(path, service):
+        if os.path.basename(path) == fname and len(failed) < times:
+            failed.append(fname)
+            raise RuntimeError(f"cannot read {fname}")
+        return real(path, service)
+
+    p.load_file = load_file
+    return failed
+
+
+def test_resume_retries_a_failed_catch_up_load(spark, landing, tmp_path):
+    """The late file's load fails once: the resume retries it inside the
+    ingest stage, finishes, and the ingest record lists the error."""
+    p, land, late = _killed_run_then_late_file(spark, landing, tmp_path)
+    failed = _fail_loading(p, late, times=1)
+    summary = p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"))
+    assert failed == [late]
+    assert summary["files_loaded"] == 4
+    ingest = p._load_state()["stages"]["ingest"]
+    assert ingest["status"] == "success" and ingest["attempts"] == 2
+    assert ingest["errors"] == [f"RuntimeError: cannot read {late}"]
+    log = [r.source_file for r in p.read_meta("ingestion_log").collect()]
+    assert sorted(log) == sorted(set(log)) and len(log) == 4
+
+
+def test_resume_after_a_catch_up_load_that_kept_failing(spark, landing, tmp_path):
+    """The late file's load fails on every attempt: the resume raises
+    StageFailed at ingest.  Once the fault is gone, the next resume loads
+    it; the 3 files journaled before are not loaded or logged again."""
+    from nyc_tlc_analytics_pipeline_spark.pipeline import StageFailed
+
+    p, land, late = _killed_run_then_late_file(spark, landing, tmp_path)
+    real = p.load_file
+    failed = _fail_loading(p, late, times=99)
+    with pytest.raises(StageFailed) as ei:
+        p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"), retries=1)
+    assert ei.value.stage == "ingest"
+    assert failed == [late, late]
+    assert p._load_state()["stages"]["ingest"]["errors"] == 2 * [
+        f"RuntimeError: cannot read {late}"
+    ]
+    assert p.read_meta("ingestion_log").count() == 3
+
+    p.load_file = real  # fault removed
+    summary = p.run_e2e(str(land), zones_csv=str(land / "taxi_zones.csv"))
+    assert summary["files_loaded"] == 4
+    assert summary["files_skipped"] == 0
+    log = [r.source_file for r in p.read_meta("ingestion_log").collect()]
+    assert len(log) == 4 and len(set(log)) == 4
+    fact = p.spark.read.parquet(p.fact_path)
+    assert fact.filter(f"source_file = '{late}'").count() > 0
+
+
 def test_log_ids_unique_and_ordered_across_appends(spark, landing, tmp_path):
     """Each load appends its own ingestion_log row; the ids of three loads
     differ and increase in load order."""

@@ -1,10 +1,10 @@
 """Round-10 regression tests — the round-9 advisor items.
 
-1. semantic_contamination: zero-norm vectors score cosine 0.0 in BOTH
-   kernels (the IEEE 0/0=NaN alternative makes argmax and the
-   contaminated predicate engine-dependent).
-2. semantic_contamination arrow kernel: id column types derive from the
-   input schemas — string doc ids work like longs.
+1. semantic_contamination: zero-norm vectors score cosine 0.0 (the
+   IEEE 0/0=NaN alternative makes argmax and the contaminated predicate
+   engine-dependent).
+2. semantic_contamination: id column types derive from the input
+   schemas — string doc ids work like longs.
 3. auto_n_planes: result clamps to max_planes even when base is
    misconfigured above the cap.
 """
@@ -40,7 +40,7 @@ def _roundtrip(spark, tmp_path, name, rows, schema):
 
 def test_semantic_contamination_zero_norm_convention(spark, tmp_path):
     """A zero-norm corpus vector and a zero-norm bench vector must both
-    score cosine 0.0 — identically in the arrow and expr kernels."""
+    score cosine 0.0."""
     from nyc_tlc_analytics_pipeline_spark.operators import decontam
 
     bench = _roundtrip(
@@ -61,32 +61,24 @@ def test_semantic_contamination_zero_norm_convention(spark, tmp_path):
         ],
         "vec_id long, embedding array<double>",
     )
-    a = {
+    got = {
         r.vec_id: r
-        for r in decontam.semantic_contamination(
-            corpus, bench, 0.5, kernel="arrow"
-        ).collect()
+        for r in decontam.semantic_contamination(corpus, bench, 0.5).collect()
     }
-    e = {
-        r.vec_id: r
-        for r in decontam.semantic_contamination(
-            corpus, bench, 0.5, kernel="expr"
-        ).collect()
-    }
-    for got in (a, e):
-        # zero-norm corpus vector: cos 0.0 everywhere, smallest bid wins
-        assert got[1].max_cos == 0.0
-        assert got[1].nearest_bench == 100
-        assert not got[1].contaminated
-        # normal vector: zero-norm BENCH vector contributes 0.0, not NaN
-        assert got[2].max_cos == 1.0 and got[2].nearest_bench == 100
-        assert got[3].max_cos == 0.0 and got[3].nearest_bench == 100
-    assert sorted(map(tuple, a.values())) == sorted(map(tuple, e.values()))
+    assert len(got) == 3
+    # zero-norm corpus vector: cos 0.0 everywhere, smallest bid wins
+    assert got[1].max_cos == 0.0
+    assert got[1].nearest_bench == 100
+    assert not got[1].contaminated
+    # normal vector: zero-norm BENCH vector contributes 0.0, not NaN
+    assert got[2].max_cos == 1.0 and got[2].nearest_bench == 100
+    assert got[2].contaminated
+    assert got[3].max_cos == 0.0 and got[3].nearest_bench == 100
 
 
-def test_semantic_contamination_string_ids_arrow(spark, tmp_path):
-    """The arrow kernel derives id types from the schemas: string doc
-    ids must come back as strings with correct attribution."""
+def test_semantic_contamination_string_ids(spark, tmp_path):
+    """Id types derive from the schemas: string doc ids must come back
+    as strings with correct attribution and the smallest-id tie-break."""
     from nyc_tlc_analytics_pipeline_spark.operators import decontam
 
     bench = _roundtrip(
@@ -103,7 +95,7 @@ def test_semantic_contamination_string_ids_arrow(spark, tmp_path):
         [("d-1", [2.0, 0.0]), ("d-2", [1.0, 1.0])],
         "vec_id string, embedding array<double>",
     )
-    out = decontam.semantic_contamination(corpus, bench, 0.9, kernel="arrow")
+    out = decontam.semantic_contamination(corpus, bench, 0.9)
     assert dict(out.dtypes)["vec_id"] == "string"
     assert dict(out.dtypes)["nearest_bench"] == "string"
     got = {r.vec_id: r for r in out.collect()}

@@ -115,11 +115,11 @@ def test_video_fake_contract_holds_with_codec(spark):
     orig = mm._IMAGEIO
     mm._IMAGEIO = object()  # simulate 'imageio importable'
     try:
-        kernel = mm.sample_video_frames_stub(every_ms=500, fake=True)
+        sample = mm.sample_video_frames_stub(every_ms=500, fake=True)
         import pandas as pd
 
         out = list(
-            kernel(
+            sample(
                 iter(
                     [
                         pd.DataFrame(
@@ -277,11 +277,13 @@ def test_streaming_curate_matches_sequential_batches(
 
 
 def test_semdedup_arrow_equals_expr_string_ids(spark):
-    """The Arrow matmul pair kernel and the expression join produce
-    identical rounded output — including STRING ids (the kernel derives
+    """The Arrow matmul pair kernel reproduces the rounded pairs the
+    expression join produced — including STRING ids (the kernel derives
     the output id type from the input schema) and singleton buckets
     (empty kernel frames must still type-convert)."""
+    import hashlib
     import random
+    from collections import Counter
 
     from nyc_tlc_analytics_pipeline_spark.operators import cluster
 
@@ -294,21 +296,20 @@ def test_semdedup_arrow_equals_expr_string_ids(spark):
     kw = dict(
         k=4, iters=2, threshold=0.2, max_cluster_size=16, n_planes=8, seed=1
     )
-    a = sorted(
-        (r.cluster_id, r.doc_a, r.doc_b, r.cos_sim)
-        for r in cluster.semdedup_pairs(df, "vec_id", "embedding", **kw).collect()
-    )
-    e = sorted(
-        (r.cluster_id, r.doc_a, r.doc_b, r.cos_sim)
-        for r in cluster.semdedup_pairs(
-            df, "vec_id", "embedding", impl="expr", **kw
-        ).collect()
-    )
-    assert a == e and len(a) > 0
+    out = cluster.semdedup_pairs(df, "vec_id", "embedding", **kw)
+    assert dict(out.dtypes)["doc_a"] == dict(out.dtypes)["doc_b"] == "string"
+    got = sorted((r.cluster_id, r.doc_a, r.doc_b, r.cos_sim) for r in out.collect())
+    assert len(got) == 537
+    assert Counter(p[0] for p in got) == {0: 210, 1: 276, 2: 36, 3: 15}
+    assert got[-1] == (3, "doc-045", "doc-057", 0.739639)
+    assert (2, "doc-006", "doc-015", 0.94123) in got
+    # every pair, exactly: md5 of the sorted tuples' repr
+    digest = hashlib.md5(repr(got).encode()).hexdigest()
+    assert digest == "eca006b65120f52c76ab35b6f46276d9"
     tiny = spark.createDataFrame(rows[:3], "vec_id string, embedding array<double>")
     assert (
         cluster.semdedup_pairs(
             tiny, "vec_id", "embedding", k=2, iters=1, threshold=0.99
-        ).count()
-        >= 0
+        ).collect()
+        == []
     )

@@ -113,12 +113,9 @@ def test_kmeans_separates_planted_blobs(spark):
 
 
 def test_kmeans_assignment_is_map_side(spark):
-    """Assignment must never shuffle the vectors, in either impl:
-    arrow (default) is a single MapInPandas stage with the centroid
-    matrix in the kernel closure — no join, no exchange at all; expr
-    carries the k×dim matrix as a broadcast 1-ROW frame (r5: column,
-    not plan literals), so its only join is that scalar attach and its
-    only Exchange the broadcast."""
+    """Assignment must never shuffle the vectors: a single MapInPandas
+    stage with the centroid matrix in the kernel closure — no join, no
+    exchange at all."""
     from nyc_tlc_analytics_pipeline_spark.operators import cluster
 
     df = spark.createDataFrame(
@@ -130,13 +127,6 @@ def test_kmeans_assignment_is_map_side(spark):
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Join" not in plan and "Exchange" not in plan
-
-    expr = cluster.assign_clusters(vecs, [[0.0, 0.0], [9.0, 0.0]], impl="expr")
-    plan = expr._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastNestedLoopJoin") == 1  # the 1-row attach
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    # no shuffle of the data: every Exchange present is the broadcast
-    assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
 
 def test_pagerank_cycle_is_uniform(spark):

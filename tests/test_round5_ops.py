@@ -84,25 +84,6 @@ def test_span_removal_min_df_threshold(spark):
     assert all(r.n_removed == 0 for r in out)
 
 
-def test_kmeans_arrow_and_expr_impls_agree_exactly(spark):
-    """The Arrow kernel and the column-expression assignment must give
-    IDENTICAL rounded trajectories (centroids and (cid, dist2) per
-    vector) — the property that lets the arrow default keep the
-    expr-derived DuckDB oracle.  Summation-order drift between numpy
-    matmul and the fold form sits ~8 orders below the 1e-9 rounding
-    nudge."""
-    from nyc_tlc_analytics_pipeline_spark.operators import cluster
-    from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a_e, c_e = cluster.kmeans_fit(emb, "vec_id", "embedding", 16, 2, impl="expr")
-    a_a, c_a = cluster.kmeans_fit(emb, "vec_id", "embedding", 16, 2, impl="arrow")
-    assert c_e == c_a
-    re = sorted((r.vid, r.cid, r.dist2) for r in a_e.collect())
-    ra = sorted((r.vid, r.cid, r.dist2) for r in a_a.collect())
-    assert re == ra
-
-
 def test_redact_contaminated_spans(spark):
     from nyc_tlc_analytics_pipeline_spark.operators.decontam import (
         redact_contaminated_spans,

@@ -168,20 +168,6 @@ def test_quantized_reconstruction_error_within_half_step(spark, emb):
     assert worst <= 0.5 + 1e-6
 
 
-def test_quantized_arrow_kernel_equals_expression_form(emb):
-    """The default numpy kernel and the pure-expression twin produce
-    IDENTICAL rows (exact integer dots; rounded doubles) — the q62
-    kernel-pinning pattern that lets one oracle cover both paths."""
-    qvec = [float(x) for x in emb.filter(col("vec_id") == 0).head()["embedding"]]
-    a = similarity.quantized_cosine_topk(
-        emb, qvec, k=25, exclude_ids=(0,), kernel="arrow"
-    ).collect()
-    e = similarity.quantized_cosine_topk(
-        emb, qvec, k=25, exclude_ids=(0,), kernel="expr"
-    ).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in e]
-
-
 def test_quantized_topk_recall_and_score_error(emb):
     qvec = [float(x) for x in emb.filter(col("vec_id") == 0).head()["embedding"]]
     exact = {

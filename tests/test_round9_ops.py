@@ -139,11 +139,6 @@ def test_quantized_topk_schema_agnostic(spark):
     got_b = similarity.binary_rerank_topk(df, q, k=5, m=10)
     assert set(got_b.columns) == {"vec_id", "payload", "hamming", "cos_sim"}
     assert got_b.count() == 5
-    # and the expression twin stays pinned to the arrow kernel
-    got_e = similarity.quantized_cosine_topk(df, q, k=5, kernel="expr")
-    assert sorted(map(tuple, got_e.collect())) == sorted(
-        map(tuple, got_q.collect())
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -546,17 +541,3 @@ def test_hybrid_rrf_fusion_semantics(spark, tmp_path):
     # doc 1 is the only doc in BOTH lists -> highest fused score
     assert got[0].doc_id == 1
     assert by_id[1].lex_rank is not None and by_id[1].vec_rank is not None
-
-
-def test_semantic_contamination_kernels_agree(spark):
-    """The Arrow matmul kernel (production default) must equal the
-    pure-expression oracle twin row-for-row on real data — the
-    q62/q146 kernel-vs-expression equality pin."""
-    from nyc_tlc_analytics_pipeline_spark.operators import decontam
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    bench = emb.filter(col("label") == 9)
-    corpus = emb.filter(col("label").isNotNull() & (col("label") != 9))
-    a = decontam.semantic_contamination(corpus, bench, 0.35, kernel="arrow")
-    e = decontam.semantic_contamination(corpus, bench, 0.35, kernel="expr")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, e.collect()))

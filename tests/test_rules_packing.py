@@ -75,9 +75,9 @@ def test_filter_by_rules_keeps_only_passing(spark):
     assert [r["doc_id"] for r in kept] == [1]
 
 
-def _rules_parity_frame(spark, sf_docs=None):
-    """Adversarial corpus for the arrow==expr equality pin: threshold
-    edges, CJK, null text, empty-ish docs, punctuation storms."""
+def _rules_edge_frame(spark):
+    """Adversarial corpus for the battery: threshold edges, CJK, null
+    text, empty-ish docs, punctuation storms."""
     rows = [
         (1, " ".join(f"word{i}" for i in range(40))),          # clean pass
         (2, "only three tokens"),                               # bad_length
@@ -98,69 +98,59 @@ def _rules_parity_frame(spark, sf_docs=None):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+# (bad_length, bad_mean_len, bad_alpha, bad_symbols, bad_repetition,
+#  bad_top_bigram, rules_pass) per doc of _rules_edge_frame — the values
+# the column-expression battery (which the oracle SQL restates) produced
+_T, _F = True, False
+_EDGE_FLAGS = {
+    1: (_F, _F, _F, _F, _F, _F, _T),
+    2: (_T, _F, _F, _F, _F, _T, _F),
+    3: (_F, _F, _F, _F, _T, _T, _F),
+    4: (_F, _F, _T, _T, _F, _T, _F),
+    5: (_F, _F, _T, _F, _F, _F, _F),
+    6: (_F, _F, _F, _F, _F, _F, _T),
+    7: (_F, _T, _F, _F, _F, _F, _F),
+    8: (_T, None, _F, _F, _F, _F, _F),  # null tokens: size(null) = -1
+    9: (_T, _T, _T, _F, _F, _F, _F),
+    10: (_T, _T, _T, _F, _F, _T, _F),
+    11: (_F, _F, _F, _F, _F, _T, _F),
+    12: (_F, _F, _F, _F, _F, _T, _F),
+    13: (_F, _F, _F, _F, _F, _F, _T),
+}
+
+
 def test_rules_arrow_impl_matches_expr(spark):
-    """The mapInArrow battery must be value-identical to the expression
-    battery — per-flag, including nulls and rules_pass 3VL."""
-    df = _rules_parity_frame(spark)
+    """The Arrow battery reproduces, per flag and including nulls and
+    rules_pass 3VL, the flags the expression battery produced."""
+    df = _rules_edge_frame(spark)
     cols = ["doc_id", *rules.RULE_FLAG_NAMES, "rules_pass"]
-    a = {
+    got = {
         r["doc_id"]: tuple(r[c] for c in cols[1:])
-        for r in rules.apply_rules(df, "text", impl="arrow").select(*cols).collect()
+        for r in rules.apply_rules(df, "text").select(*cols).collect()
     }
-    e = {
-        r["doc_id"]: tuple(r[c] for c in cols[1:])
-        for r in rules.apply_rules(df, "text", impl="expr").select(*cols).collect()
-    }
-    assert a == e
+    assert got == _EDGE_FLAGS
 
 
 def test_rules_arrow_impl_matches_expr_with_precomputed_toks(spark):
-    """Same pin through the q55/curation shape: tokens precomputed as a
+    """Same flags through the q55/curation shape: tokens precomputed as a
     column, extra passthrough columns preserved."""
     from nyc_tlc_analytics_pipeline_spark.operators import text as T
 
-    df = _rules_parity_frame(spark).withColumn("tk", T.tokens("text")).withColumn(
+    df = _rules_edge_frame(spark).withColumn("tk", T.tokens("text")).withColumn(
         "lang", F.lit("en")
     )
+    out = rules.apply_rules(df, "text", toks="tk")
+    assert out.columns == [*df.columns, *rules.RULE_FLAG_NAMES, "rules_pass"]
     cols = ["doc_id", "lang", *rules.RULE_FLAG_NAMES, "rules_pass"]
-    a = {
+    got = {
         r["doc_id"]: tuple(r[c] for c in cols[1:])
-        for r in rules.apply_rules(df, "text", toks="tk", impl="arrow")
-        .select(*cols)
-        .collect()
+        for r in out.select(*cols).collect()
     }
-    e = {
-        r["doc_id"]: tuple(r[c] for c in cols[1:])
-        for r in rules.apply_rules(df, "text", toks="tk", impl="expr")
-        .select(*cols)
-        .collect()
-    }
-    assert a == e
+    assert got == {d: ("en", *flags) for d, flags in _EDGE_FLAGS.items()}
     # the token column itself must round-trip the kernel unchanged
-    tk_a = rules.apply_rules(df, "text", toks="tk", impl="arrow").select(
-        "doc_id", "tk"
-    ).collect()
+    tk_a = out.select("doc_id", "tk").collect()
     tk_e = df.select("doc_id", "tk").collect()
     assert sorted(map(tuple, tk_a)) == sorted(map(tuple, tk_e))
-
-
-def test_rules_arrow_impl_matches_expr_on_corpus(spark):
-    """Full-corpus equality at the smoke SF — the production pin."""
-    from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
-
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    cols = ["doc_id", *rules.RULE_FLAG_NAMES, "rules_pass"]
-    a = sorted(
-        tuple(r[c] for c in cols)
-        for r in rules.apply_rules(docs, "text", impl="arrow").select(*cols).collect()
-    )
-    e = sorted(
-        tuple(r[c] for c in cols)
-        for r in rules.apply_rules(docs, "text", impl="expr").select(*cols).collect()
-    )
-    assert a == e
 
 
 # -- decontam -------------------------------------------------------------
