@@ -25,8 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Measured warm per-query sweep cost (seconds, Spark+oracle, sf0.01
 # local[8]) — READ from the committed artifact scripts/sweep_times.json,
-# which a full `python scripts/sweep.py` run regenerates (it writes
-# /tmp/sweep_times.json; the round ritual copies it here).  No
+# which `python scripts/sweep.py` writes.  No
 # hand-typed numbers (VERDICT r13 item 7).  Used ONLY for
 # scoreboard-aware ordering below; missing entries default to 1.0s.
 import json as _json

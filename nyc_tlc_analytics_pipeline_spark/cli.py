@@ -434,12 +434,10 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(pl.init_dims(args.zones_csv)))
     elif args.command == "load-zones":
         from .operators import dimensions
-        from .sources import sinks
         from .sources.readers import read_zones_csv
 
-        raw = read_zones_csv(pl.spark, args.zones_csv)
-        zones = dimensions.build_dim_zones(raw)
-        print(json.dumps({"dim_zones": sinks.overwrite(zones, pl.dim("dim_zones"))}))
+        zones = dimensions.build_dim_zones(read_zones_csv(pl.spark, args.zones_csv))
+        print(json.dumps({"dim_zones": pl.rebuild("dim_zones", zones)}))
     elif args.command == "load":
         print(json.dumps(pl.load_landing_dir(args.landing_dir), indent=2))
     elif args.command == "quality":
@@ -483,6 +481,7 @@ def main(argv: list[str] | None = None) -> int:
             out = job.run(retries=args.retries, resume=not args.no_resume)
         print(json.dumps(out, indent=2, sort_keys=True))
     elif args.command == "status":
+        from .sources.manifest import ManifestTable
         from .sources.readers import table_info
 
         def dir_bytes(path: str) -> int:
@@ -503,14 +502,7 @@ def main(argv: list[str] | None = None) -> int:
                 if not os.path.isdir(path):
                     continue
                 try:
-                    # bronze/meta tables are read through their manifest
-                    if layer == "bronze":
-                        df = pl.raw(name.removeprefix("raw_"))
-                    elif layer == "meta":
-                        df = pl.read_meta(name)
-                    else:
-                        df = pl.spark.read.parquet(path)
-                    info = table_info(df)
+                    info = table_info(ManifestTable(pl.spark, path).read())
                     tables[f"{layer}.{name}"] = {
                         "row_count": info["row_count"],
                         "n_columns": len(info["columns"]),

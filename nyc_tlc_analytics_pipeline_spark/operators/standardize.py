@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, concat, lit
 
 from ..functions.scalar import day_of_week, epoch_minutes, nullif_div
-from ..sources.sinks import counted
 
 # Column order of the unified fact table (superset of the reference's
 # fact_trips, sql/ddl/03_fact_tables.sql:12-58, plus the §1.4 fix columns).
@@ -237,12 +236,3 @@ def build_fact_trips(
         out = out.unionByName(p)
     return out
 
-
-def write_fact_trips(fact: DataFrame, path: str, mode: str = "overwrite") -> int:
-    """Materialize the silver fact table partitioned for pruning: the
-    (service_type, pickup_date) layout serves the same access paths as the
-    reference's idx_trips_service_date B-tree (03_fact_tables.sql:61-65).
-    Returns the rows written."""
-    out, obs = counted(fact)
-    out.write.mode(mode).partitionBy("service_type", "pickup_date").parquet(path)
-    return obs.get["rows"]

@@ -5,22 +5,28 @@ parquet warehouse.
 
 Warehouse layout (medallion, replacing the single DB file):
 
-    <warehouse>/bronze/raw_<service>/{_log/,data/<uuid>/}
-    <warehouse>/silver/fact_trips/service_type=*/pickup_date=*/...
+    <warehouse>/bronze/raw_<service>/
+    <warehouse>/silver/{dim_*,fact_trips}/
     <warehouse>/gold/agg_*/
-    <warehouse>/meta/{ingestion_log,data_quality_metrics}/{_log/,data/<uuid>/}
+    <warehouse>/meta/{ingestion_log,data_quality_metrics}/
     <warehouse>/meta/e2e_state.json
 
+Every table is a manifest table (``sources.manifest``): a ``_log/`` of
+commits over ``data/<uuid>/`` parquet directories, so each has a
+recorded schema, an atomic replace and a version, and a read infers
+no schema.  Bronze and meta tables are appended to; a bronze append is
+tagged with its source file, so re-ingesting a month is a no-op even
+under concurrent loaders.  The dims, ``fact_trips`` and the gold tables
+are rebuilt whole (``TlcPipeline.rebuild``), and the superseded data is
+reclaimed at once.  ``fact_trips`` is laid out in
+``service_type=*/pickup_date=*/`` directories, which serve the same
+access paths the reference indexed (SURVEY §4).
+
 Each stage runs one Spark job per table it writes: row counts come from
-the write itself (``sinks.counted``), the quality checks of a service are
-one aggregate, and manifest tables are read with the schema their log
-recorded.  Writes that do not depend on each other (the dims, the three
-services' quality aggregates, the gold tables) run side by side from a
-small thread pool.  Bronze and meta tables are manifest tables
-(``sources.manifest``): a bronze append is tagged with its source file,
-so re-ingesting a month is a no-op even under concurrent loaders.  The
-silver partitioning serves the same access paths the reference indexed
-(SURVEY §4)."""
+the write itself (``sinks.counted``), and the quality checks of a
+service are one aggregate.  Writes that do not depend on each other (the
+dims, the three services' quality aggregates, the gold tables) run side
+by side from a small thread pool."""
 
 from __future__ import annotations
 
@@ -54,6 +60,12 @@ LANDING_PREFIXES = (
 SIDE_BY_SIDE = 4
 # run_e2e's stages, in order
 E2E_STAGES = ("init_dims", "ingest", "quality", "build_fact", "build_aggregates")
+# the tables TlcPipeline.rebuild writes, as tables() returns them
+DIMS = ("dim_zones", "dim_date", "dim_time", "dim_service", "dim_hvfhs_company")
+GOLD = ("agg_pricing_by_zone_hour", "agg_hvfhv_take_rates", "agg_market_share", "agg_daily_summary")
+# fact_trips' directory layout: the access paths of the reference's
+# idx_trips_service_date B-tree (03_fact_tables.sql:61-65), pruned at planning
+FACT_PARTITIONS = ("service_type", "pickup_date")
 
 T = TypeVar("T")
 
@@ -108,6 +120,23 @@ class TlcPipeline:
     def meta(self, name: str) -> str:
         return os.path.join(self.config.warehouse_dir, "meta", name)
 
+    def _rebuilt(self, name: str) -> ManifestTable:
+        """A table ``rebuild`` writes: a gold table, or a silver one (a dim
+        or fact_trips)."""
+        return ManifestTable(self.spark, self.gold(name) if name in GOLD else self.dim(name))
+
+    def rebuild(self, name: str, df: DataFrame) -> int:
+        """Replace table ``name`` (fact_trips in ``FACT_PARTITIONS``
+        directories) with ``df`` and delete the data it replaced: these
+        tables are derived, so no history is kept.  Returns the rows
+        written."""
+        out, obs = sinks.counted(df)
+        table = self._rebuilt(name)
+        table.expire(
+            table.overwrite(out, partition_by=FACT_PARTITIONS if name == "fact_trips" else ())
+        )
+        return obs.get["rows"]
+
     # -- stage 1: init (dims) ---------------------------------------------
     def init_dims(self, zones_csv: str | None = None) -> dict[str, int]:
         """Build + materialize the dimensions (reference stage 1: DDL init;
@@ -116,10 +145,7 @@ class TlcPipeline:
         dims = dimensions.build_all_dims(self.spark, raw_zones=raw_zones)
         return side_by_side(
             self.spark,
-            {
-                name: lambda df=df, name=name: sinks.overwrite(df, self.dim(name))
-                for name, df in dims.items()
-            },
+            {name: lambda df=df, name=name: self.rebuild(name, df) for name, df in dims.items()},
         )
 
     # -- stage 2: ingest ---------------------------------------------------
@@ -197,36 +223,21 @@ class TlcPipeline:
         fact = standardize.build_fact_trips(
             yellow=loaded.get("yellow"), green=loaded.get("green"), hvfhv=loaded.get("hvfhv")
         )
-        return standardize.write_fact_trips(fact, self.fact_path)
+        return self.rebuild("fact_trips", fact)
 
     def build_aggregates(self) -> dict[str, int]:
-        fact = self.spark.read.parquet(self.fact_path)
-        aggs = aggregations.build_all(fact)
+        aggs = aggregations.build_all(self._rebuilt("fact_trips").read())
         return side_by_side(
             self.spark,
-            {
-                name: lambda df=df, name=name: sinks.overwrite(df, self.gold(name))
-                for name, df in aggs.items()
-            },
+            {name: lambda df=df, name=name: self.rebuild(name, df) for name, df in aggs.items()},
         )
 
     # -- analytics ---------------------------------------------------------
     def tables(self) -> dict[str, DataFrame]:
-        t = {"fact_trips": self.spark.read.parquet(self.fact_path)}
-        for name in ("dim_zones", "dim_date", "dim_time", "dim_service", "dim_hvfhs_company"):
-            p = self.dim(name)
-            if os.path.isdir(p):
-                t[name] = self.spark.read.parquet(p)
-        for name in (
-            "agg_pricing_by_zone_hour",
-            "agg_hvfhv_take_rates",
-            "agg_market_share",
-            "agg_daily_summary",
-        ):
-            p = self.gold(name)
-            if os.path.isdir(p):
-                t[name] = self.spark.read.parquet(p)
-        return t
+        """Every rebuilt table that has been written, read at its latest
+        version."""
+        t = {name: self._rebuilt(name) for name in ("fact_trips", *DIMS, *GOLD)}
+        return {name: mt.read() for name, mt in t.items() if mt.latest_version()}
 
     def run_analytics(self, name: str) -> DataFrame:
         from .plans.analytics import ANALYTICS

@@ -1,8 +1,8 @@
 """Manifest-committed table: concurrent-writer-safe append/overwrite on
 plain parquet files, Delta/Iceberg-style but dependency-free.
 
-Why this exists: every bronze and meta table of ``TlcPipeline`` is a
-manifest table.  Two Spark jobs writing plain parquet to the same
+Why this exists: every warehouse table of ``TlcPipeline`` is a manifest
+table.  Two Spark jobs writing plain parquet to the same
 directory stage through one ``_temporary`` directory and can interleave
 each other's commit phases (reference analogue: the
 ``INSERT ... WHERE source_file NOT IN (...)`` guard,
@@ -30,6 +30,9 @@ with an optimistic-concurrency commit log:
   directory of a snapshot shares one schema, ``read`` passes it to the
   reader and skips the footer-inference job; entries written without a
   schema, or a snapshot whose entries disagree, fall back to inference.
+- An ``overwrite`` may lay its rows out by ``partition_by`` columns
+  (``col=value/`` directories, pruned at planning).  The entry records
+  them; appends and ``compact`` to that snapshot write the same layout.
 
 Idempotency composes with it: ``append(df, tag=source_file)`` refuses a
 tag that any committed entry already carries — the check is re-run
@@ -60,9 +63,11 @@ set:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -124,8 +129,9 @@ class ManifestTable:
     def snapshot(self, version: int | None = None) -> dict:
         """Replay the log up to ``version`` (default: latest).  Returns
         ``{"version": v, "dirs": [...], "tags": {tag: version},
-        "expired_before": v, "schema": json-or-None}``; ``schema`` is
-        None when an entry carries none or the entries disagree.
+        "expired_before": v, "schema": json-or-None, "partition_by": [...]}``;
+        ``schema`` is None when an entry carries none or the entries
+        disagree.
 
         Starts from the newest CHECKPOINT at or below the target version
         when one exists (the Delta ``_last_checkpoint`` idea): a
@@ -136,6 +142,7 @@ class ManifestTable:
         dirs: list[str] = []
         tags: dict[str, int] = {}
         schema = None
+        partition_by: list[str] = []
         top = 0
         exp = 0
         cps = [
@@ -150,6 +157,7 @@ class ManifestTable:
             dirs, tags, top = list(cp["dirs"]), dict(cp["tags"]), cp["version"]
             exp = cp.get("expired_before", 0)
             schema = cp.get("schema")
+            partition_by = cp.get("partition_by", [])
         for v in self._versions():
             if v <= top:
                 continue
@@ -169,6 +177,7 @@ class ManifestTable:
                 dirs, tags = [], (tags if e.get("keep_tags") else {})
             if not dirs:
                 schema = e.get("schema")
+                partition_by = e.get("partition_by", [])
             elif e.get("schema") != schema:
                 schema = None
             dirs.extend(e["dirs"])
@@ -187,7 +196,7 @@ class ManifestTable:
                     f"watermark is gone by design"
                 )
         return {"version": top, "dirs": dirs, "tags": tags,
-                "expired_before": exp, "schema": schema}
+                "expired_before": exp, "schema": schema, "partition_by": partition_by}
 
     def write_checkpoint(self) -> int | None:
         """Materialize the current replayed state as
@@ -263,16 +272,21 @@ class ManifestTable:
             except FileNotFoundError:
                 pass
 
-    def _stage(self, df: DataFrame) -> str:
+    def _stage(self, df: DataFrame, partition_by: Sequence[str] = ()) -> str:
         """Write df to a private uuid directory; invisible until committed."""
         d = uuid.uuid4().hex
-        df.write.mode("overwrite").parquet(os.path.join(self.data_dir, d))
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(os.path.join(self.data_dir, d))
         return d
 
-    @staticmethod
-    def _schema(df: DataFrame) -> dict:
-        """The schema a staged write of ``df`` reads back with."""
-        return _as_nullable(df.schema.jsonValue())
+    def _entry(self, action: str, df: DataFrame, partition_by: Sequence[str], **extra) -> dict:
+        """Stage ``df`` and return the log entry that commits it.  Its
+        schema is the one the staged files read back with: every field
+        nullable, the partition columns last."""
+        staged = self._stage(df, partition_by)
+        fields = [f for f in df.schema.fields if f.name not in partition_by]
+        schema = StructType(fields + [df.schema[c] for c in partition_by])
+        return {"action": action, "dirs": [staged], "schema": _as_nullable(schema.jsonValue()),
+                "partition_by": list(partition_by), **extra}
 
     # -- public API --------------------------------------------------------
     def append(self, df: DataFrame, tag: str | None = None) -> int | None:
@@ -283,25 +297,24 @@ class ManifestTable:
         snap = self.snapshot()
         if tag is not None and tag in snap["tags"]:
             return None  # cheap pre-check; re-checked at commit time
-        staged = self._stage(df)
-        return self._publish(
-            {"action": "append", "dirs": [staged], "tag": tag, "schema": self._schema(df)}
-        )
+        return self._publish(self._entry("append", df, snap["partition_by"], tag=tag))
 
-    def overwrite(self, df: DataFrame, tag: str | None = None) -> int:
+    def overwrite(
+        self, df: DataFrame, tag: str | None = None, partition_by: tuple[str, ...] = ()
+    ) -> int:
         """Concurrent-safe truncate-rebuild: readers see either the old
-        snapshot or the new one, never a mix."""
-        staged = self._stage(df)
-        v = self._publish(
-            {"action": "overwrite", "dirs": [staged], "tag": tag, "schema": self._schema(df)}
-        )
+        snapshot or the new one, never a mix.  ``partition_by`` lays the
+        rows out in ``col=value/`` directories, which later appends and
+        compactions keep."""
+        v = self._publish(self._entry("overwrite", df, partition_by, tag=tag))
         assert v is not None  # overwrite never tag-skips
         return v
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read (optionally time-traveled to ``version``), with
-        the schema the snapshot recorded: no Spark job runs until the
-        frame is used."""
+        the schema the snapshot recorded: no schema-inference job runs.
+        Each directory of a partitioned table is its own partition root,
+        so those are read one by one and unioned."""
         snap = self.snapshot(version)
         if not snap["dirs"]:
             raise FileNotFoundError(f"manifest table {self.path} is empty")
@@ -309,7 +322,9 @@ class ManifestTable:
         reader = self.spark.read
         if snap["schema"] is not None:
             reader = reader.schema(StructType.fromJson(snap["schema"]))
-        return reader.parquet(*paths)
+        if not snap["partition_by"]:
+            return reader.parquet(*paths)
+        return functools.reduce(DataFrame.unionByName, [reader.parquet(p) for p in paths])
 
     def compact(self, target_partitions: int = 8) -> int | None:
         """Small-file compaction: rewrite the CURRENT snapshot into one
@@ -335,20 +350,17 @@ class ManifestTable:
         snap = self.snapshot()
         if not snap["dirs"]:
             return None
-        df = self.read(snap["version"]).repartition(target_partitions)
-        staged = self._stage(df)
-        v = self._publish(
-            {
-                "action": "overwrite",
-                "dirs": [staged],
-                "tag": f"compact-v{snap['version']}",
-                "keep_tags": True,
-                "expect_parent": snap["version"],
-                "schema": self._schema(df),
-            }
+        # hashed on the partition columns, each partition directory gets
+        # its rows from one task, so one file
+        pb = snap["partition_by"]
+        df = self.read(snap["version"]).repartition(target_partitions, *pb)
+        entry = self._entry(
+            "overwrite", df, pb, tag=f"compact-v{snap['version']}",
+            keep_tags=True, expect_parent=snap["version"],
         )
+        v = self._publish(entry)
         if v is None:  # CAS lost: leave the table alone, drop our staging
-            shutil.rmtree(os.path.join(self.data_dir, staged), ignore_errors=True)
+            shutil.rmtree(os.path.join(self.data_dir, entry["dirs"][0]), ignore_errors=True)
         else:
             # a fresh compact is the natural checkpoint moment: the state
             # is one directory, so the checkpoint is minimal

@@ -1,9 +1,9 @@
-"""Sinks: counted overwrite, CSV and pandas export, small literal frames,
-the ingestion-log rows and the training-shard writer.
+"""Sinks: a write's row counter, CSV and pandas export, small literal
+frames, the ingestion-log rows and the training-shard writer.
 
-Appends to the bronze and meta tables go through ``sources.manifest``
-instead: its commit log makes an append tagged with its source file
-idempotent, even under concurrent writers (reference: the
+Every warehouse table is written through ``sources.manifest`` instead:
+its commit log makes a rebuild atomic, and an append tagged with its
+source file idempotent, even under concurrent writers (reference: the
 ``source_file NOT IN (...)`` anti-join, src/database/schema_drift.py:213-215
 + pre-check loader.py:147-165)."""
 
@@ -35,16 +35,6 @@ def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
 
     names = DataType.fromDDL(schema).names
     return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
-
-
-def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
-    """Truncate-rebuild sink (S10).  Returns the rows written."""
-    out, obs = counted(df)
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return obs.get["rows"]
 
 
 def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:

@@ -1,7 +1,14 @@
 """Full driver-contract sweep: run every __spark_entry__.queries() entry
 with a VANILLA SparkSession against its oracle_sql() in DuckDB at sf0.01,
 timing each query.  Mirrors the harness comparator (sorted column names,
-row count, order-insensitive stringified rows)."""
+row count, order-insensitive stringified rows).
+
+    python scripts/sweep.py [name-filter ...]
+
+The session runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on).  The measured times go to ``scripts/sweep_times.json``,
+which ``__spark_entry__`` reads; a filtered sweep updates only its own
+queries' entries."""
 
 from __future__ import annotations
 
@@ -13,6 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SWEEP_SF", "/root/testdata/sf0.01")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+TIMES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "sweep_times.json")
 ONLY = sys.argv[1:]  # optional query-name filters (substring match)
 
 
@@ -22,7 +31,7 @@ def main() -> int:
 
     import __spark_entry__ as e
 
-    spark = SparkSession.builder.master("local[8]").getOrCreate()
+    spark = SparkSession.builder.master(f"local[{CPUS}]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -101,10 +110,13 @@ def main() -> int:
     slow = sorted(times.items(), key=lambda kv: -kv[1])[:8]
     print("slowest:", json.dumps(dict(slow)))
     print(f"storage high-water: {storage_hw} MB (released per query)")
-    with open("/tmp/sweep_times.json", "w") as f:
-        json.dump(
-            {"sf": SF, "times": times, "storage_hw_mb": storage_hw}, f
-        )
+    try:
+        with open(TIMES) as f:
+            times = {**json.load(f)["times"], **times}
+    except (OSError, ValueError, KeyError):
+        pass
+    with open(TIMES, "w") as f:
+        json.dump({"sf": SF, "times": times, "storage_hw_mb": storage_hw}, f)
     if fails:
         print("FAILURES:", fails)
         return 1

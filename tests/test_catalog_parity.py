@@ -67,6 +67,19 @@ def _prefetch(spark, name):
     _PREFETCH[name] = _PREFETCH_POOL.submit(work)
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _drain_prefetch(spark):
+    """Stop the prefetch thread before the session's SparkSession stops:
+    the lookahead query scheduled by the last test would otherwise still
+    be running against a stopped context."""
+    global _PREFETCH_POOL
+    yield
+    if _PREFETCH_POOL is not None:
+        _PREFETCH_POOL.shutdown(wait=True, cancel_futures=True)
+        _PREFETCH_POOL = None
+    _PREFETCH.clear()
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, duck_smoke, name):
     spec = QUERIES[name]

@@ -297,6 +297,32 @@ def test_compact_merges_files_preserves_rows_and_tags(spark, tmp_path):
     assert sorted(r.id for r in mt.read(pre_version).collect()) == before
 
 
+def test_compact_keeps_partition_layout(spark, tmp_path):
+    """A partitioned table keeps its layout through an append and a
+    compact: one directory per partition value, pruned at planning."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    df = spark.range(40).select(
+        "id", (F.col("id") % 2).cast("string").alias("a"), (F.col("id") % 5).alias("b")
+    )
+    mt.overwrite(df, partition_by=("a", "b"))
+    mt.append(df)
+    assert mt.read().count() == 80
+    assert mt.compact(target_partitions=2) is not None
+    (d,) = mt.snapshot()["dirs"]
+    assert sorted(n for n in os.listdir(os.path.join(mt.data_dir, d)) if "=" in n) == ["a=0", "a=1"]
+    assert mt.snapshot()["partition_by"] == ["a", "b"]
+    q = mt.read().filter("a = '1' AND b = 3")
+    assert q.columns == ["id", "a", "b"]
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert re.search(r"\ba#\d+", pf) and re.search(r"\bb#\d+", pf), pf
+    assert sorted(r.id for r in q.collect()) == [3, 3, 13, 13, 23, 23, 33, 33]
+
+
 def test_compact_cas_aborts_instead_of_dropping_concurrent_append(
     spark, tmp_path
 ):

@@ -12,7 +12,7 @@ import pytest
 from .conftest import spark_jobs
 
 from nyc_tlc_analytics_pipeline_spark.core.config import PipelineConfig
-from nyc_tlc_analytics_pipeline_spark.pipeline import TlcPipeline
+from nyc_tlc_analytics_pipeline_spark.pipeline import DIMS, GOLD, TlcPipeline
 
 from .tlc_synth import synth_green, synth_hvfhv, synth_yellow, synth_zones
 
@@ -58,14 +58,63 @@ def test_run_e2e(pipeline, landing):
 def test_reload_is_idempotent(pipeline, landing):
     results = pipeline.load_landing_dir(str(landing))
     assert all(r["status"] == "skipped_already_loaded" for r in results)
-    assert pipeline.spark.read.parquet(pipeline.fact_path).count() == 1350
+    assert pipeline.tables()["fact_trips"].count() == 1350
 
 
 def test_fact_partition_layout(pipeline):
-    base = pipeline.fact_path
+    """fact_trips' one data directory is laid out by service and pickup
+    date, and its log records the two columns."""
+    fact = pipeline._rebuilt("fact_trips")
+    assert fact.snapshot()["partition_by"] == ["service_type", "pickup_date"]
+    (data,) = os.listdir(fact.data_dir)
+    base = os.path.join(fact.data_dir, data)
     assert os.path.isdir(os.path.join(base, "service_type=yellow"))
     parts = os.listdir(os.path.join(base, "service_type=yellow"))
     assert any(p.startswith("pickup_date=") for p in parts)
+    assert pipeline.tables()["fact_trips"].columns[-2:] == ["service_type", "pickup_date"]
+
+
+def test_tables_runs_no_spark_job(spark, pipeline):
+    """Every table is read with the schema its log recorded: reading the
+    warehouse infers nothing.  The fixture's fact table has 49-55 date
+    directories per service, and Spark lists a level of more than 32
+    directories with a Spark job, so the listing is kept on the driver
+    here: this test is about schema inference."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "1000")
+    try:
+        with spark_jobs(spark) as ids:
+            t = pipeline.tables()
+    finally:
+        spark.conf.unset(key)
+    assert set(t) == {"fact_trips", *DIMS, *GOLD}
+    assert ids == []
+
+
+def test_rerun_replaces_rebuilt_tables(spark, landing, tmp_path):
+    """A second full run replaces the dims, fact_trips and the gold
+    tables instead of adding to them, and leaves one data directory per
+    table."""
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    zones = str(landing / "taxi_zones.csv")
+    first = p.run_e2e(str(landing), zones_csv=zones, resume=False)
+    second = p.run_e2e(str(landing), zones_csv=zones, resume=False)
+    assert second["fact_rows"] == first["fact_rows"] == 1350
+    t = p.tables()
+    assert t["fact_trips"].count() == 1350
+    for name, rows in first["aggregates"].items():
+        assert t[name].count() == rows, name
+    for name in ("fact_trips", *DIMS, *GOLD):
+        assert len(os.listdir(p._rebuilt(name).data_dir)) == 1, name
+
+
+def test_tables_reads_a_rebuilt_gold_table(spark, tmp_path):
+    """Frames returned after a rebuild hold its rows, not the old ones."""
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    assert p.rebuild("agg_market_share", spark.range(3).toDF("k")) == 3
+    assert sorted(r.k for r in p.tables()["agg_market_share"].collect()) == [0, 1, 2]
+    assert p.rebuild("agg_market_share", spark.range(10, 12).toDF("k")) == 2
+    assert sorted(r.k for r in p.tables()["agg_market_share"].collect()) == [10, 11]
 
 
 def test_analytics_over_warehouse(pipeline):
@@ -138,7 +187,7 @@ def test_killed_stage_resumes_without_rerunning_earlier_stages(spark, landing, t
     assert summary["fact_rows"] == 1350
     assert summary["files_loaded"] == 3  # journaled result, stage not re-executed
     assert p.read_meta("ingestion_log").count() == 3  # no dup entries
-    assert p.spark.read.parquet(p.fact_path).count() == 1350
+    assert p.tables()["fact_trips"].count() == 1350
 
 
 def test_resume_loads_files_landed_after_the_failed_run(spark, landing, tmp_path):
@@ -169,7 +218,7 @@ def test_resume_loads_files_landed_after_the_failed_run(spark, landing, tmp_path
     log = [r.source_file for r in p.read_meta("ingestion_log").collect()]
     assert len(log) == 4 and len(set(log)) == 4
     assert p._load_state()["stages"]["ingest"]["result"][-1]["source_file"] == late
-    fact = p.spark.read.parquet(p.fact_path)
+    fact = p.tables()["fact_trips"]
     assert fact.filter(f"source_file = '{late}'").count() > 0
 
 
@@ -250,7 +299,7 @@ def test_resume_after_a_catch_up_load_that_kept_failing(spark, landing, tmp_path
     assert summary["files_skipped"] == 0
     log = [r.source_file for r in p.read_meta("ingestion_log").collect()]
     assert len(log) == 4 and len(set(log)) == 4
-    fact = p.spark.read.parquet(p.fact_path)
+    fact = p.tables()["fact_trips"]
     assert fact.filter(f"source_file = '{late}'").count() > 0
 
 
@@ -309,14 +358,15 @@ def test_side_by_side_keeps_caller_job_group(spark):
 
 def test_run_e2e_job_budget(spark, landing, tmp_path):
     """A full run costs one Spark job per table written plus one scan per
-    source and one quality aggregate per service: 36 jobs on this
-    fixture.  A change that reads a table back to count it, or splits an
-    aggregate, fails here."""
+    source and one quality aggregate per service, and reads fact_trips
+    back for the gold tables without inferring its schema: 35 jobs on
+    this fixture.  A change that reads a table back to count it, infers
+    a schema the log recorded, or splits an aggregate, fails here."""
     p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
     with spark_jobs(spark) as ids:
         summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"))
     assert summary["fact_rows"] == 1350
-    assert len(ids) <= 36
+    assert len(ids) <= 35
 
 
 def test_cli_analytics_unknown_query(pipeline, capsys):
@@ -421,7 +471,7 @@ def test_concurrent_loaders_under_default_config(spark, landing, tmp_path):
 
 def test_cli_status_reports_tables(pipeline, capsys):
     """`status` (reference db-stats) prints per-table row counts across
-    all warehouse layers, reading bronze through the configured format."""
+    all warehouse layers, reading every table through its manifest."""
     from nyc_tlc_analytics_pipeline_spark.cli import main
 
     rc = main(["--warehouse-dir", pipeline.config.warehouse_dir, "status"])

@@ -130,17 +130,16 @@ def test_no_cartesian_products_in_catalog(catalog_plans):
 
 
 def test_fact_scan_prunes_partitions(spark, tmp_path):
-    from nyc_tlc_analytics_pipeline_spark.operators.standardize import (
-        build_fact_trips,
-        write_fact_trips,
-    )
+    from nyc_tlc_analytics_pipeline_spark.core.config import PipelineConfig
+    from nyc_tlc_analytics_pipeline_spark.operators.standardize import build_fact_trips
+    from nyc_tlc_analytics_pipeline_spark.pipeline import TlcPipeline
 
     from .tlc_synth import synth_yellow
 
     fact = build_fact_trips(yellow=spark.createDataFrame(synth_yellow(300)))
-    path = str(tmp_path / "fact")
-    write_fact_trips(fact, path)
-    rb = spark.read.parquet(path).filter(
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    p.rebuild("fact_trips", fact)
+    rb = p.tables()["fact_trips"].filter(
         "service_type = 'yellow' AND pickup_date = DATE'2025-01-10'"
     )
     plan = _plan(rb)

@@ -413,7 +413,10 @@ def test_cli_load_zones_and_download_sample_surface(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out)
     assert rc in (0, None)
     assert out["dim_zones"] == len(synth_zones())
-    zones = spark.read.parquet(f"{wh}/silver/dim_zones")
+    from nyc_tlc_analytics_pipeline_spark.core.config import PipelineConfig
+    from nyc_tlc_analytics_pipeline_spark.pipeline import TlcPipeline
+
+    zones = TlcPipeline(spark, PipelineConfig(warehouse_dir=wh)).tables()["dim_zones"]
     assert "zone_id" in zones.columns or "location_id" in zones.columns
 
     assert SAMPLE_MONTHS == ("2024-01", "2024-06", "2024-12")
