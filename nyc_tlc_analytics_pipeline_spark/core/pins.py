@@ -37,6 +37,10 @@ one cache entry set per batch, ADVICE r13), and ``scripts/sweep.py``
 releases per query so a full catalog sweep's storage-memory high-water
 stays one-query-sized.  ``release_pins`` only drops cache entries —
 lineage is intact, so a late consumer recomputes instead of breaking.
+A pin belongs to the thread that made it: ``release_pins`` drops only
+the calling thread's pins, so a stage ending in one thread never drops
+the cache of a frame another thread (a catalog query beside a
+``CurateJob``, a streaming face) is still using.
 ``bench.py`` releases between every timed window so each measurement
 computes the full query from the parquet inputs (cache-manager plan
 matching would otherwise let a warm run — or a later query sharing a
@@ -51,33 +55,39 @@ import threading
 
 from pyspark.sql import DataFrame
 
-_LOCK = threading.Lock()
-_PINNED: list[DataFrame] = []
+_OWNED = threading.local()  # .pins: the calling thread's registered frames
+
+
+def _pins() -> list[DataFrame]:
+    if not hasattr(_OWNED, "pins"):
+        _OWNED.pins = []
+    return _OWNED.pins
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """Lazily persist ``df`` and register it for :func:`release_pins`.
+    """Lazily persist ``df`` and register it for :func:`release_pins`
+    in the calling thread.
 
     Returns the persisted frame (same object).  Safe to call on an
     already-persisted frame — Spark's cache manager keeps one entry per
     logical plan, and release unpersists idempotently."""
     out = df.persist()
-    with _LOCK:
-        _PINNED.append(out)
+    _pins().append(out)
     return out
 
 
 def release_pins() -> int:
-    """Unpersist every frame registered since the last release.
+    """Unpersist every frame the calling thread registered since its
+    last release.
 
     Non-blocking (``blocking=False``): the executor-side block drop is
     async, which is fine — the point is dropping the *reference* so the
     store never accumulates unboundedly.  Frames whose JVM is already
     gone are skipped.  Returns the number of pins released."""
-    with _LOCK:
-        pins, _PINNED[:] = _PINNED[:], []
+    pins = _pins()
+    released, pins[:] = pins[:], []
     n = 0
-    for df in pins:
+    for df in released:
         try:
             df.unpersist(blocking=False)
             n += 1
@@ -103,6 +113,6 @@ def releasing(fn):
 
 
 def pinned_count() -> int:
-    """Number of currently registered (unreleased) pins — test hook."""
-    with _LOCK:
-        return len(_PINNED)
+    """Number of the calling thread's registered (unreleased) pins —
+    test hook."""
+    return len(_pins())

@@ -12,6 +12,12 @@ funnel-attribution accounting the job emits is exactly the q132
 registered form (per-(source, stage) doc/token counts), extended with
 the post-funnel stages (segment-emptied, contaminated) so every input
 document is accounted for once.
+
+The incremental face (:meth:`CurateJob.run_incremental`) and the
+streaming face (``streaming.curate``) classify new batches against a
+completed run and commit the novel content to one
+:class:`IncrementStore`: four tagged manifest tables, read back through
+one standing-state function.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pyspark.sql.functions import col, lit
 
 from .core.journal import Journal
 from .operators import curation, curriculum, dedup, decontam, lm, packing
+from .sources.manifest import ManifestTable
 from .sources.sinks import write_corpus_shards
 
 
@@ -270,111 +277,14 @@ class CurateJob:
             json.dump(summary, f, indent=2, sort_keys=True)
         return summary
 
+
     # -- incremental face -----------------------------------------------
     # The per-index incremental contract (q78/q147/q163/q180: increment
     # cost = O(batch + matches), the standing corpus' text never
     # re-read) applied to the whole job: classify a NEW batch against
-    # the completed run's final pool, keep only genuinely novel content,
-    # and append it as an idempotent batch-tagged increment directory.
-
-    _INC_AUX_SUFFIXES = (
-        "_attribution", "_gated", "_clean", "_bands", "_segidx",
-    )
-
-    def _standing_pool(self, exclude_tag: str | None = None) -> DataFrame:
-        """The corpus an incoming batch is classified against: the base
-        run's ``final`` pool plus every COMPLETED increment (its
-        ``increments/<tag>`` dir carries parquet's ``_SUCCESS`` marker),
-        excluding the in-flight tag.  Without folding prior increments
-        in, a second batch repeating batch 1's novel content would be
-        'new' again and appended twice (ADVICE r12).  The union is a
-        metadata-only plan over already-written parquet — the standing
-        corpus text is still never re-written, only re-scanned by the
-        O(batch + matches) incremental classifiers."""
-        pool = self.spark.read.parquet(self.path("final")).select(
-            "doc_id", "text"
-        )
-        inc_root = self.path("increments")
-        try:
-            names = sorted(os.listdir(inc_root))
-        except OSError:
-            names = []
-        for name in names:
-            if name == exclude_tag or name.endswith(self._INC_AUX_SUFFIXES):
-                continue
-            d = os.path.join(inc_root, name)
-            if not os.path.isfile(os.path.join(d, "_SUCCESS")):
-                continue  # crashed/partial increment: not standing yet
-            pool = pool.unionByName(
-                self.spark.read.parquet(d).select("doc_id", "text")
-            )
-        return pool
-
-    def _completed_inc_tags(self, exclude_tag: str | None = None) -> list[str]:
-        try:
-            names = sorted(os.listdir(self.path("increments")))
-        except OSError:
-            return []
-        return [
-            n
-            for n in names
-            if n != exclude_tag
-            and not n.endswith(self._INC_AUX_SUFFIXES)
-            and os.path.isfile(self.path(f"increments/{n}/_SUCCESS"))
-        ]
-
-    def _standing_indexes(self, exclude_tag: str | None = None):
-        """The PERSISTED standing-index artifacts an increment classifies
-        against (``stage_index`` wrote the base; ``inc_append`` appends a
-        per-tag slice for each completed increment):
-
-        - ``lm_stats`` — the base pool's bigram model, deliberately FIXED
-          (the CCNet reference-model posture: batches are judged by the
-          curated base corpus, not by a drifting union);
-        - ``standing_bands`` — base band table ∪ completed increments'
-          band slices (band signatures are per-doc, so union is exact);
-        - ``seg_index`` — base segment index ∪ per-increment slices
-          (each slice indexes the increment's text AS APPENDED — the
-          rebuilt doc's own segment grid, i.e. what a future batch must
-          be compared against; a rare boundary-shifted rebuild can
-          re-produce a hash the base index already holds, which only
-          double-marks that segment dup_vs_corpus — never resurrects it).
-
-        Returns ``(None, None, None)`` for runs completed before the
-        index stage existed — callers fall back to deriving the
-        artifacts from the standing pool (the legacy O(standing) path).
-        """
-        if not os.path.isfile(
-            os.path.join(self.path("index/lsh_bands"), "_SUCCESS")
-        ):
-            return None, None, None
-        stats = self.spark.read.parquet(self.path("index/bigram_stats"))
-        bands = self.spark.read.parquet(self.path("index/lsh_bands"))
-        segs = self.spark.read.parquet(self.path("index/segments"))
-        for t in self._completed_inc_tags(exclude_tag):
-            bp = self.path(f"increments/{t}_bands")
-            sp = self.path(f"increments/{t}_segidx")
-            # Self-heal a completed increment whose slices are missing
-            # (crash between inc_decontam's _SUCCESS and inc_append's
-            # slice writes, with the tag never resumed; or an increment
-            # that predates stage_index).  _standing_pool counts the tag
-            # as standing, so skipping it here would let duplicates of
-            # its docs classify 'new' and append twice (ADVICE r13).
-            # Deriving the slice from increments/<tag> and WRITING it
-            # back is O(that increment) once, then free forever.
-            if not os.path.isfile(os.path.join(bp, "_SUCCESS")):
-                inc = self.spark.read.parquet(self.path(f"increments/{t}"))
-                dedup.lsh_band_table(inc, "doc_id", "text").write.mode(
-                    "overwrite"
-                ).parquet(bp)
-            bands = bands.unionByName(self.spark.read.parquet(bp))
-            if not os.path.isfile(os.path.join(sp, "_SUCCESS")):
-                inc = self.spark.read.parquet(self.path(f"increments/{t}"))
-                dedup.segment_index_table(
-                    inc, "doc_id", "text", self.seg_len
-                ).write.mode("overwrite").parquet(sp)
-            segs = segs.unionByName(self.spark.read.parquet(sp))
-        return stats, bands, segs
+    # the completed run's final pool and the increments standing so far,
+    # keep only genuinely novel content, and commit it to the increment
+    # store under the batch tag.
 
     def run_incremental(
         self,
@@ -383,92 +293,56 @@ class CurateJob:
         retries: int = 2,
         resume: bool = True,
     ) -> dict:
-        """Process one incoming batch against a COMPLETED curate run:
+        """Process one incoming batch against a COMPLETED curate run,
+        committing to the :class:`IncrementStore` at
+        ``<out_dir>/increments``:
 
         1. ``inc_gate`` — rules gate + perplexity filter on the batch,
            then MinHash-LSH classification against the standing pool
            (``incremental_minhash_classify``): ``dup_vs_corpus`` and
-           later in-batch copies drop; per-document attribution
+           later in-batch copies drop; the per-document attribution
            (rules / perplexity / duplicate_batch / duplicate_corpus /
-           kept) persists next to the batch increment.
+           kept) is appended to the store's ``attribution`` table.
         2. ``inc_segment`` — rebuild survivors from only the segments
            the standing corpus hasn't seen (incremental segment
            classify vs the standing index), dropping emptied docs.
         3. ``inc_decontam`` — benchmark gate (skip without a bench).
-        4. ``inc_append`` — write the surviving docs to
-           ``increments/<tag>/`` (idempotent overwrite: the tag is the
-           md5 of the batch path unless given, so a crashed re-run
-           converges instead of double-appending).
+        4. ``inc_append`` — :meth:`IncrementStore.commit` the surviving
+           docs and their index slices under the batch tag (the md5 of
+           the batch path unless given): a re-run skips what the tag
+           already committed instead of appending twice.
 
+        Stages hand off through parquet under ``scratch/inc_<tag>/``.
         Same journal semantics as :meth:`run`, per batch tag."""
         import hashlib
 
-        from .operators import curation as _curation
-
         tag = batch_tag or hashlib.md5(batch_path.encode()).hexdigest()[:12]
-        if tag.endswith(self._INC_AUX_SUFFIXES):
-            # aux dirs live beside increments/<tag> as <tag>_bands etc.;
-            # a user tag ending in an aux suffix would be misread as a
-            # sibling increment's aux dir and silently excluded from the
-            # standing pool
-            raise ValueError(
-                f"batch_tag must not end with {self._INC_AUX_SUFFIXES}"
-            )
+        store = IncrementStore(self.spark, self.out_dir, self.path("increments"))
         stages = Journal(
             self.path(f"meta/curate_inc_{tag}.json"),
             ("inc_gate", "inc_segment", "inc_decontam", "inc_append"),
             resume,
         )
         batch = self.spark.read.parquet(batch_path)
-        # The standing pool an increment classifies against is the
-        # base run's `final` UNIONED with every already-completed
-        # increment (excluding this tag): without the union, batch 2
-        # repeating batch 1's novel content is classified 'new'
-        # again and appended twice, violating the append-only-novel
-        # contract for multi-batch use (ADVICE r12).
-        standing = self._standing_pool(exclude_tag=tag)
-        # persisted index artifacts (stage_index + per-increment slices):
-        # the standing pool's TEXT above is scanned only for candidate
-        # verification (left-semi pruned); bands / segment hashes / the
-        # LM model come from disk, so the increment is O(batch+matches).
-        # All-None on legacy runs → bands/segments are derived from the
-        # pool; the LM model is still fixed on the base `final` below.
-        lm_stats, standing_bands, seg_index = self._standing_indexes(
-            exclude_tag=tag
-        )
-        if lm_stats is None:
-            # Legacy run (no persisted index): still FIX the reference
-            # model on the base `final` pool, not the drifting
-            # final ∪ increments union — both paths must judge a batch
-            # by the same CCNet reference-model posture (ADVICE r13).
-            lm_stats = lm.corpus_bigram_stats(
-                self.spark.read.parquet(self.path("final"))
-            )
+        standing, lm_stats, standing_bands, seg_index = store.standing(tag)
+
+        def scratch(name: str) -> str:
+            return self.path(f"scratch/inc_{tag}/{name}")
 
         def inc_gate() -> dict:
             # ONE implementation shared with the registered conformance
-            # query (q187): rules gate + perplexity vs the STANDING
-            # pool's model (the CCNet fixed-model shape — a small batch
-            # must not be judged by its own 4-document statistics) +
-            # incremental MinHash classification, all inside
-            # curation.incremental_gate_attribution so job and oracle
-            # can never drift (the q132 pattern).
-            attr, classified = _curation.incremental_gate_attribution(
+            # query (q187) and the streaming face, so job and oracle
+            # can never drift (the q132 pattern)
+            attr, classified = curation.incremental_gate_attribution(
                 batch, standing, self.ppl_cutoff, threshold=self.threshold,
                 lm_stats=lm_stats, standing_bands=standing_bands,
             )
-            attr.write.mode("overwrite").parquet(
-                self.path(f"increments/{tag}_attribution")
-            )
+            store.append(store.attribution, attr, tag)
             classified.filter(col("status") == "new").select(
                 "doc_id", "source", "lang", "text", "n_tokens"
-            ).write.mode("overwrite").parquet(
-                self.path(f"increments/{tag}_gated")
-            )
+            ).write.mode("overwrite").parquet(scratch("gated"))
             rows = (
-                self.spark.read.parquet(
-                    self.path(f"increments/{tag}_attribution")
-                )
+                store.batch(store.attribution, tag)
                 .groupBy("stage")
                 .count()
                 .collect()
@@ -476,72 +350,35 @@ class CurateJob:
             return {r["stage"]: r["count"] for r in rows}
 
         def inc_segment() -> dict:
-            pool = self.spark.read.parquet(
-                self.path(f"increments/{tag}_gated")
-            )
-            idx = (
-                seg_index
-                if seg_index is not None
-                else dedup.segment_index_table(
-                    standing, "doc_id", "text", self.seg_len
-                )
-            )
-            out = _curation.rebuild_new_segments(
-                pool, idx, self.seg_len
-            )
-            out.write.mode("overwrite").parquet(
-                self.path(f"increments/{tag}_clean")
-            )
+            pool = self.spark.read.parquet(scratch("gated"))
+            curation.rebuild_new_segments(
+                pool, seg_index, self.seg_len
+            ).write.mode("overwrite").parquet(scratch("clean"))
             n_in = pool.count()
-            n_out = self.spark.read.parquet(
-                self.path(f"increments/{tag}_clean")
-            ).count()
+            n_out = self.spark.read.parquet(scratch("clean")).count()
             return {"n_docs_in": n_in, "n_docs_out": n_out,
                     "n_emptied_or_dupseg": n_in - n_out}
 
         def inc_decontam() -> dict:
-            pool = self.spark.read.parquet(
-                self.path(f"increments/{tag}_clean")
-            )
+            pool = self.spark.read.parquet(scratch("clean"))
             if self.bench_path is None:
-                pool.write.mode("overwrite").parquet(
-                    self.path(f"increments/{tag}")
-                )
+                pool.write.mode("overwrite").parquet(scratch("final"))
                 return {"skipped": True, "n_removed": 0}
             bench = self.spark.read.parquet(self.bench_path)
-            cleanp = decontam.decontaminate(
+            decontam.decontaminate(
                 pool, bench, n=self.decontam_n
-            )
-            cleanp.write.mode("overwrite").parquet(
-                self.path(f"increments/{tag}")
-            )
-            n_out = self.spark.read.parquet(
-                self.path(f"increments/{tag}")
-            ).count()
-            return {
-                "skipped": False,
-                "n_removed": pool.count() - n_out,
-            }
+            ).write.mode("overwrite").parquet(scratch("final"))
+            n_out = self.spark.read.parquet(scratch("final")).count()
+            return {"skipped": False, "n_removed": pool.count() - n_out}
 
         def inc_append() -> dict:
-            inc = self.spark.read.parquet(self.path(f"increments/{tag}"))
-            if standing_bands is not None:
-                # maintain the standing indexes: this tag's band slice
-                # (signatures of the text AS APPENDED) and segment-hash
-                # slice, so the NEXT batch classifies against
-                # base ∪ increments without re-deriving either.
-                # Idempotent per-tag overwrites, like every inc write.
-                dedup.lsh_band_table(inc, "doc_id", "text").write.mode(
-                    "overwrite"
-                ).parquet(self.path(f"increments/{tag}_bands"))
-                dedup.segment_index_table(
-                    inc, "doc_id", "text", self.seg_len
-                ).write.mode("overwrite").parquet(
-                    self.path(f"increments/{tag}_segidx")
-                )
-            n = inc.count()
-            toks = inc.agg(F.sum("n_tokens")).head()[0] or 0
-            return {"n_docs_appended": n, "tokens_appended": int(toks)}
+            store.commit(tag, self.spark.read.parquet(scratch("final")), self.seg_len)
+            # from the committed rows: a re-run's appends are skipped
+            got = store.batch(store.docs, tag).agg(
+                F.count("*").alias("n"), F.sum("n_tokens").alias("tokens")
+            ).head()
+            return {"n_docs_appended": got["n"],
+                    "tokens_appended": int(got["tokens"] or 0)}
 
         gate = stages.run("inc_gate", inc_gate, retries)
         seg = stages.run("inc_segment", inc_segment, retries)
@@ -557,3 +394,100 @@ class CurateJob:
         with open(self.path(f"meta/curate_inc_{tag}_summary.json"), "w") as f:
             json.dump(summary, f, indent=2, sort_keys=True)
         return summary
+
+
+#: the column of every increment-store row that names its batch
+BATCH_TAG = "__batch_tag"
+
+
+class IncrementStore:
+    """The store both incremental faces (``CurateJob.run_incremental``
+    and ``streaming.curate.run_streaming_curate``) commit to: four
+    manifest tables under ``store_dir`` — ``attribution`` (every batch
+    document with the stage that removed or kept it), ``docs`` (the
+    appended curated docs, segment-rebuilt), ``bands`` and ``segments``
+    (those docs' LSH band and segment-hash index slices).  Every row
+    carries its batch in :data:`BATCH_TAG`, and every append is tagged,
+    so a batch's rows commit at most once per table.
+
+    A batch STANDS — later batches classify against it — once its
+    ``docs`` commit exists.  :meth:`commit` appends the two index slices
+    first and the docs last: a crash in between leaves slices no reader
+    sees, and resuming the tag commits only the appends still missing.
+
+    ``base_dir`` is a completed ``CurateJob`` run: its ``final`` pool
+    and ``index/`` artifacts are the standing state every batch starts
+    from."""
+
+    def __init__(self, spark: SparkSession, base_dir: str, store_dir: str) -> None:
+        if not os.path.isfile(
+            os.path.join(base_dir, "index", "lsh_bands", "_SUCCESS")
+        ):
+            raise ValueError(
+                f"{base_dir} has no persisted index artifacts — run "
+                "CurateJob.run() (its 'index' stage writes them) first"
+            )
+        self.spark = spark
+        self.base_dir = base_dir
+        self.attribution, self.docs, self.bands, self.segments = (
+            ManifestTable(spark, os.path.join(store_dir, name))
+            for name in ("attribution", "docs", "bands", "segments")
+        )
+
+    def batch(self, table: ManifestTable, tag: str) -> DataFrame:
+        """The committed rows of one batch in ``table``."""
+        return table.read().filter(col(BATCH_TAG) == tag)
+
+    def append(self, table: ManifestTable, df: DataFrame, tag: str) -> None:
+        table.append(df.withColumn(BATCH_TAG, lit(tag)), tag=tag)
+
+    def commit(
+        self,
+        tag: str,
+        docs: DataFrame,
+        seg_len: int,
+        n: int = 3,
+        num_hashes: int = 16,
+        bands: int = 4,
+    ) -> None:
+        """Append a batch's surviving ``docs`` with their band and
+        segment-index slices (each slice indexes the text AS APPENDED:
+        what a later batch must be compared against) — docs last."""
+        self.append(
+            self.bands,
+            dedup.lsh_band_table(docs, "doc_id", "text", n, num_hashes, bands),
+            tag,
+        )
+        self.append(
+            self.segments,
+            dedup.segment_index_table(docs, "doc_id", "text", seg_len),
+            tag,
+        )
+        self.append(self.docs, docs, tag)
+
+    def standing(self, exclude_tag: str) -> tuple[DataFrame, ...]:
+        """``(pool, lm_stats, bands, seg_index)`` a batch classifies
+        against: the base run's ``final`` pool and ``index/`` tables ∪
+        the rows of every standing batch except ``exclude_tag`` (the
+        batch being classified, so a re-run never meets its own
+        survivors).  ``lm_stats`` is the base pool's bigram model,
+        deliberately FIXED (the CCNet reference-model posture: batches
+        are judged by the curated base corpus, not by a drifting
+        union).  A rare boundary-shifted rebuild can repeat a hash the
+        base segment index holds, which only double-marks that segment
+        dup_vs_corpus — never resurrects it."""
+        def base(name: str) -> DataFrame:
+            return self.spark.read.parquet(os.path.join(self.base_dir, name))
+
+        pool = base("final").select("doc_id", "text")
+        bands = base("index/lsh_bands")
+        segs = base("index/segments")
+        tags = [t for t in self.docs.snapshot()["tags"] if t != exclude_tag]
+        if tags:
+            def rows(table: ManifestTable) -> DataFrame:
+                return table.read().filter(col(BATCH_TAG).isin(tags)).drop(BATCH_TAG)
+
+            pool = pool.unionByName(rows(self.docs).select("doc_id", "text"))
+            bands = bands.unionByName(rows(self.bands))
+            segs = segs.unionByName(rows(self.segments))
+        return pool, base("index/bigram_stats"), bands, segs

@@ -25,16 +25,11 @@ def validate_parquet(spark: SparkSession, path: str, expected: StructType | None
     }
 
 
-def read_service_parquet(
-    spark: SparkSession, path: str, service: str, align: bool = True
-) -> DataFrame:
+def read_service_parquet(spark: SparkSession, path: str, service: str) -> DataFrame:
     """Read one monthly service file, aligned to the registry schema
     (missing cols → NULL, extras dropped, types cast — the Spark form of
     the reference's drift-evolved load, SURVEY §3.3)."""
-    df = spark.read.parquet(path)
-    if align:
-        df = align_to_schema(df, RAW_SCHEMAS[service], strict_types=False)
-    return df
+    return align_to_schema(spark.read.parquet(path), RAW_SCHEMAS[service], strict_types=False)
 
 
 # the taxi-zone lookup's published columns, in file order

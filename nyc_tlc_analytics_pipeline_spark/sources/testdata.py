@@ -54,20 +54,22 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-#: (applicationId, table path) -> source DataFrame.  DataFrames are
-#: immutable, so handing every caller the same object is safe; building
-#: one costs ~0.15 s of driver time (file listing + footer schema) and a
-#: multi-query session loads the same static tables hundreds of times.
-#: The memo holds PLANS, never data — nothing about what a query
-#: computes is cached — and the test-data/scaled-bench paths it serves
-#: are write-once within a session.
-_TABLE_MEMO: dict[tuple[str, str], DataFrame] = {}
+#: (applicationId, table path, inode, size, mtime_ns) -> source
+#: DataFrame.  DataFrames are immutable, so handing every caller the
+#: same object is safe; building one costs ~0.15 s of driver time (file
+#: listing + footer schema) and a multi-query session loads the same
+#: static tables hundreds of times.  The memo holds PLANS, never data —
+#: nothing about what a query computes is cached — and the file's
+#: identity is part of the key, so a table rewritten at the same path
+#: is read afresh.
+_TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_conf(spark)
     path = table_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, path)
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, path, st.st_ino, st.st_size, st.st_mtime_ns)
     df = _TABLE_MEMO.get(key)
     if df is None:
         df = spark.read.parquet(path)

@@ -2,48 +2,42 @@
 ``CurateJob.run_incremental`` — each document micro-batch runs the full
 incremental gate (rules → fixed base-model perplexity →
 ``incremental_minhash_classify`` → incremental segment rebuild) against
-the base run's PERSISTED index artifacts plus the survivors accumulated
-so far, and only genuinely novel content (docs surviving the gate,
-rebuilt from corpus-unseen segments) joins the curated store and its
-indexes.
+the base run's PERSISTED index artifacts plus the batches standing so
+far, and only genuinely novel content (docs surviving the gate, rebuilt
+from corpus-unseen segments) joins the curated store and its indexes.
 
 Shares its classification arithmetic with the batch faces —
 ``curation.incremental_gate_attribution`` (q187's registered form) and
-``curation.rebuild_new_segments`` — so the three faces (registered
-conformance query, journaled batch job, streaming ingest) can never
-drift.  Per-batch cost is the run_incremental shape measured at 100×
-standing (BENCH_SCALING.md round 13): O(batch + matches + index scan),
-with the bigram model FIXED to the base pool (the CCNet reference-model
-posture — micro-batches must not drift the judge).
+``curation.rebuild_new_segments`` — and its store with
+``run_incremental``: one ``curate.IncrementStore``, whose standing-state
+function both faces call, so the three faces (registered conformance
+query, journaled batch job, streaming ingest) can never drift.
+Per-batch cost is the run_incremental shape measured at 100× standing
+(BENCH_SCALING.md round 13): O(batch + matches + index scan), with the
+bigram model FIXED to the base pool (the CCNet reference-model posture
+— micro-batches must not drift the judge).
 
-Exactly-once across at-least-once foreachBatch replays follows
-``run_streaming_near_dup``'s manifest discipline: all four stores
-(attribution, curated docs, band index, segment index) commit each
-batch under an idempotency tag, and every standing snapshot filters to
-``__batch_id < current`` so a replayed batch never classifies against
-its own survivors.
+Exactly-once across at-least-once foreachBatch replays: every store
+table commits a batch under its idempotency tag, and a batch stands
+only once its ``docs`` commit exists, so a replayed batch never
+classifies against its own survivors and commits only what its first
+attempt left missing.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import col, lit
+from pyspark.sql.functions import col
 
 from ..core.pins import releasing
-from ..operators import curation, dedup
-from ..sources.manifest import ManifestTable
+from ..curate import IncrementStore
+from ..operators import curation
 
 
 def run_streaming_curate(
     doc_stream: DataFrame,
     base_dir: str,
-    attr_path: str,
-    docs_path: str,
-    bands_path: str,
-    segs_path: str,
+    store_dir: str,
     checkpoint_path: str,
     ppl_cutoff: float = 3.41,
     threshold: float = 0.5,
@@ -56,23 +50,14 @@ def run_streaming_curate(
 
     ``base_dir`` is a COMPLETED ``CurateJob`` run directory — its
     ``final`` pool, ``index/`` artifacts and bigram model seed the
-    standing state.  Writes four manifest tables: ``attr_path`` (every
-    input doc with batch id and stage — rules / perplexity /
-    duplicate_corpus / duplicate_batch / kept), ``docs_path`` (the
-    appended curated docs, segment-rebuilt), ``bands_path`` /
-    ``segs_path`` (the survivors' LSH band and segment-hash index
-    slices future batches probe)."""
+    standing state.  Each micro-batch commits to the
+    :class:`~..curate.IncrementStore` at ``store_dir`` under the tag
+    ``batch-<id>``: every input doc's stage (rules / perplexity /
+    duplicate_corpus / duplicate_batch / kept) to ``attribution``, the
+    appended curated docs (segment-rebuilt) to ``docs``, and their LSH
+    band and segment-hash slices, which later batches probe."""
     spark = doc_stream.sparkSession
-    if not os.path.isfile(
-        os.path.join(base_dir, "index", "lsh_bands", "_SUCCESS")
-    ):
-        raise ValueError(
-            f"{base_dir} has no persisted index artifacts — run "
-            "CurateJob.run() (its 'index' stage writes them) first"
-        )
-
-    def base(name: str) -> str:
-        return os.path.join(base_dir, name)
+    store = IncrementStore(spark, base_dir, store_dir)
 
     # releasing(): the gate pins (gated/scored/kept in
     # incremental_gate_attribution) are re-created per micro-batch —
@@ -83,29 +68,7 @@ def run_streaming_curate(
         if batch_df.isEmpty():
             return
         tag = f"batch-{batch_id:020d}"
-        attr_t = ManifestTable(spark, attr_path)
-        docs_t = ManifestTable(spark, docs_path)
-        bands_t = ManifestTable(spark, bands_path)
-        segs_t = ManifestTable(spark, segs_path)
-
-        # standing = base final ∪ strictly-earlier streamed survivors
-        standing = spark.read.parquet(base("final")).select("doc_id", "text")
-        standing_bands = spark.read.parquet(base("index/lsh_bands"))
-        seg_index = spark.read.parquet(base("index/segments"))
-        lm_stats = spark.read.parquet(base("index/bigram_stats"))
-        if docs_t.snapshot()["dirs"]:
-            prior = docs_t.read().filter(col("__batch_id") < lit(batch_id))
-            standing = standing.unionByName(prior.select("doc_id", "text"))
-            standing_bands = standing_bands.unionByName(
-                bands_t.read()
-                .filter(col("__batch_id") < lit(batch_id))
-                .select("doc", "band", "bucket")
-            )
-            seg_index = seg_index.unionByName(
-                segs_t.read()
-                .filter(col("__batch_id") < lit(batch_id))
-                .drop("__batch_id")
-            )
+        standing, lm_stats, standing_bands, seg_index = store.standing(tag)
 
         # a micro-batch is consumed by several plan branches — pin it
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -126,21 +89,8 @@ def run_streaming_curate(
             gated_new, seg_index, seg_len, small_batch=True
         ).localCheckpoint(eager=True)
 
-        attr_t.append(attr.withColumn("__batch_id", lit(batch_id)), tag=tag)
-        docs_t.append(
-            rebuilt.withColumn("__batch_id", lit(batch_id)), tag=tag
-        )
-        bands_t.append(
-            dedup.lsh_band_table(
-                rebuilt, "doc_id", "text", n, num_hashes, bands
-            ).withColumn("__batch_id", lit(batch_id)),
-            tag=tag,
-        )
-        segs_t.append(
-            dedup.segment_index_table(rebuilt, "doc_id", "text", seg_len)
-            .withColumn("__batch_id", lit(batch_id)),
-            tag=tag,
-        )
+        store.append(store.attribution, attr, tag)
+        store.commit(tag, rebuilt, seg_len, n, num_hashes, bands)
 
     (
         doc_stream.writeStream.outputMode("append")

@@ -1,7 +1,8 @@
 """core.pins — the one shared-frame pin idiom (VERDICT r13 items 3/4):
 pin() is a LAZY persist (plan-only builders stay plan-only), release
-drops every registered cache entry, and the job-shaped callers
-(CurateJob stages, streaming foreachBatch, sweep) actually release."""
+drops every cache entry the calling thread registered, and the
+job-shaped callers (CurateJob stages, streaming foreachBatch, sweep)
+actually release."""
 
 from __future__ import annotations
 
@@ -51,6 +52,25 @@ def test_release_survives_consumers(spark):
     release_pins()
     after = df.groupBy("m").count().collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
+
+
+def test_release_drops_only_the_calling_threads_pins(spark):
+    """A pin belongs to the thread that made it: another thread's
+    release (a stage ending beside a running query) leaves it cached."""
+    import threading
+
+    release_pins()
+    df = pin(spark.range(500).select((F.col("id") * 3).alias("x")))
+    assert df.count() == 500
+    released = []
+    other = threading.Thread(target=lambda: released.append(release_pins()))
+    other.start()
+    other.join()
+    assert released == [0]
+    assert df.storageLevel.useMemory  # still cached
+    assert pinned_count() == 1
+    assert release_pins() == 1
+    assert not df.storageLevel.useMemory
 
 
 def test_releasing_decorator_releases_on_error(spark):

@@ -258,9 +258,10 @@ def test_curate_incremental_batch(spark, tmp_path, curate_job_copy):
     (c) an in-batch duplicate pair classifies each correctly, appends
     only novel content, and a re-run of the same batch is a journaled
     no-op with identical outputs (idempotent increments)."""
-    from nyc_tlc_analytics_pipeline_spark.curate import CurateJob
+    from nyc_tlc_analytics_pipeline_spark.curate import CurateJob, IncrementStore
 
     job = curate_job_copy  # completed base run (session fixture copy)
+    store = IncrementStore(spark, job.out_dir, job.path("increments"))
     final = spark.read.parquet(job.path("final"))
     # build the batch from two standing docs (verbatim copies) + two
     # fresh docs (one duplicated in-batch, shingle-disjoint vocab)
@@ -292,16 +293,16 @@ def test_curate_incremental_batch(spark, tmp_path, curate_job_copy):
     assert gate.get("duplicate_corpus", 0) == 2
     assert gate.get("duplicate_batch", 0) == 1
     assert gate.get("kept", 0) == 1
-    inc = spark.read.parquet(job.path("increments/b1"))
+    inc = store.batch(store.docs, "b1")
     assert inc.count() == summary["appended"]["n_docs_appended"] == 1
     assert inc.head()["doc_id"] == 900003
 
     # idempotent: same batch tag again -> journaled, identical output
     again = job.run_incremental(bpath, batch_tag="b1")
-    # a completed journal restarts fresh but every stage overwrite
-    # converges to the same state
+    # a completed journal restarts fresh: the store skips the committed
+    # tag, and the result is read from the rows it committed
     assert again["appended"] == summary["appended"]
-    assert spark.read.parquet(job.path("increments/b1")).count() == 1
+    assert store.batch(store.docs, "b1").count() == 1
     # and the MAIN run's journal was never touched by the batch journal
     import json as _json
 

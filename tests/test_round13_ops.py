@@ -25,7 +25,10 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     duplicate_corpus (the standing pool now includes increment b1) and
     append nothing for it — the append-only-novel contract across
     increments; a genuinely new doc in batch 2 still lands."""
+    from nyc_tlc_analytics_pipeline_spark.curate import IncrementStore
+
     job = curate_job_copy  # completed base run (session fixture copy)
+    store = IncrementStore(spark, job.out_dir, job.path("increments"))
     final = spark.read.parquet(job.path("final"))
     standing_rows = final.orderBy("doc_id").limit(8).collect()
 
@@ -59,7 +62,7 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     s2 = job.run_incremental(b2, batch_tag="b2")
     assert s2["gate"].get("duplicate_corpus", 0) == 1  # novel1 vs inc b1
     assert s2["gate"].get("kept", 0) == 1              # novel2
-    inc2 = spark.read.parquet(job.path("increments/b2"))
+    inc2 = store.batch(store.docs, "b2")
     assert inc2.count() == 1
     assert inc2.head()["doc_id"] == 920002
 
@@ -68,7 +71,7 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     # 'kept' for b1, not a dup of itself)
     again = job.run_incremental(b1, batch_tag="b1")
     assert again["appended"] == s1["appended"]
-    assert spark.read.parquet(job.path("increments/b1")).count() == 1
+    assert store.batch(store.docs, "b1").count() == 1
 
 
 def test_pack_contiguous_single_range_shuffle(spark):
@@ -178,8 +181,7 @@ def test_streaming_curate_matches_sequential_batches(
     import shutil
     import time
 
-    from nyc_tlc_analytics_pipeline_spark.curate import CurateJob
-    from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
+    from nyc_tlc_analytics_pipeline_spark.curate import CurateJob, IncrementStore
     from nyc_tlc_analytics_pipeline_spark.streaming.curate import (
         run_streaming_curate,
     )
@@ -220,9 +222,8 @@ def test_streaming_curate_matches_sequential_batches(
         os.utime(dst, (time.time() + k * 10, time.time() + k * 10))
         bpaths.append(tmp)
 
-    attr_p, docs_p = str(tmp_path / "attr"), str(tmp_path / "store")
-    bands_p, segs_p = str(tmp_path / "bands"), str(tmp_path / "segs")
-    ckpt = str(tmp_path / "ckpt")
+    store_p, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    store = IncrementStore(spark, base_out, store_p)
 
     def run():
         stream = (
@@ -232,17 +233,13 @@ def test_streaming_curate_matches_sequential_batches(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        run_streaming_curate(
-            stream, base_out, attr_p, docs_p, bands_p, segs_p, ckpt
-        )
+        run_streaming_curate(stream, base_out, store_p, ckpt)
 
     run()
     got_attr = {
-        r.doc_id: r.stage for r in ManifestTable(spark, attr_p).read().collect()
+        r.doc_id: r.stage for r in store.attribution.read().collect()
     }
-    got_docs = {
-        r.doc_id for r in ManifestTable(spark, docs_p).read().collect()
-    }
+    got_docs = {r.doc_id for r in store.docs.read().collect()}
 
     # sequential twin on a COPY of the completed base run
     seq_out = str(tmp_path / "seq")
@@ -250,18 +247,12 @@ def test_streaming_curate_matches_sequential_batches(
     sjob = CurateJob(spark, docs_path, seq_out)
     for k, bp in enumerate(bpaths):
         sjob.run_incremental(bp, batch_tag=f"b{k}")
-    want_attr = {}
-    for k in range(len(batches)):
-        for r in spark.read.parquet(
-            os.path.join(seq_out, f"increments/b{k}_attribution")
-        ).collect():
-            want_attr[r.doc_id] = r.stage
-    want_docs = set()
-    for k in range(len(batches)):
-        for r in spark.read.parquet(
-            os.path.join(seq_out, f"increments/b{k}")
-        ).collect():
-            want_docs.add(r.doc_id)
+    seq = IncrementStore(spark, seq_out, sjob.path("increments"))
+    want_attr = {
+        r.doc_id: r.stage for r in seq.attribution.read().collect()
+    }
+    want_docs = {r.doc_id for r in seq.docs.read().collect()}
+    assert sorted(seq.docs.snapshot()["tags"]) == ["b0", "b1"]
 
     assert got_attr == want_attr
     assert got_docs == want_docs
@@ -271,9 +262,9 @@ def test_streaming_curate_matches_sequential_batches(
     assert got_attr[940002] == "kept"
 
     # replay with the same checkpoint: availableNow finds nothing new
-    n_before = ManifestTable(spark, docs_p).read().count()
+    n_before = store.docs.read().count()
     run()
-    assert ManifestTable(spark, docs_p).read().count() == n_before
+    assert store.docs.read().count() == n_before
 
 
 def test_semdedup_arrow_equals_expr_string_ids(spark):

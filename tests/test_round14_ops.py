@@ -1,14 +1,11 @@
-"""Round-14 advisor-fix tests (ADVICE r13):
+"""Increment-store commit order and standing-index tests:
 
-1. A completed increment whose band/segidx slices are MISSING (crash
-   between inc_decontam's _SUCCESS and inc_append's slice writes, or a
-   legacy increment predating stage_index) must still be visible to the
-   standing indexes — `_standing_indexes` self-heals the slices from
-   the increment's text, so a later batch repeating that content
-   classifies duplicate_corpus instead of being appended twice.
-2. The legacy (no persisted index) run_incremental path must judge a
-   batch by the SAME fixed base-final bigram model as the indexed path
-   — identical gate attribution for the same batch either way.
+1. ``IncrementStore.commit`` appends a batch's band and segment slices
+   before its docs, and a batch stands only once its docs commit
+   exists: a crash between the two leaves slices no later batch sees,
+   and resuming the tag commits the docs alone — one copy of each.
+2. ``run_incremental`` refuses a base run without persisted ``index/``
+   artifacts (there is no index-less path).
 3. `incremental_segment_classify` must emit exactly ONE row per batch
    segment occurrence even when the standing index holds the same hash
    in several per-increment slices, on BOTH the small-batch broadcast
@@ -17,13 +14,10 @@
 
 from __future__ import annotations
 
-import os
 import shutil
 
-from pyspark.sql import functions as F
+import pytest
 from pyspark.sql.functions import col
-
-from .conftest import SF_SMOKE
 
 
 def _mk_batch(spark, tmp_path, name, rows):
@@ -45,12 +39,19 @@ def _splice(standing_rows, a, b, c):
     )
 
 
-def test_missing_increment_slices_self_heal(spark, tmp_path, curate_job_copy):
-    """Delete b1's band/segidx slices after it completed; batch 2
-    repeating b1's novel content must STILL classify duplicate_corpus
-    (pre-fix: the missing slices were silently skipped while the pool
-    counted b1 as standing → the duplicate re-appended)."""
+def test_failed_docs_commit_is_invisible_and_resumes_once(
+    spark, tmp_path, curate_job_copy, monkeypatch
+):
+    """b1's docs append fails after its slices committed.  b2, repeating
+    b1's doc, classifies against base only (b1's slices are not
+    standing), so the doc is kept whole; resuming b1 then commits its
+    docs, and each table holds exactly one commit of b1's rows."""
+    from nyc_tlc_analytics_pipeline_spark.core.journal import StageFailed
+    from nyc_tlc_analytics_pipeline_spark.curate import IncrementStore
+    from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
+
     job = curate_job_copy  # completed base run (session fixture copy)
+    store = IncrementStore(spark, job.out_dir, job.path("increments"))
     standing_rows = (
         spark.read.parquet(job.path("final")).orderBy("doc_id").limit(8)
         .collect()
@@ -58,76 +59,48 @@ def test_missing_increment_slices_self_heal(spark, tmp_path, curate_job_copy):
     novel1 = _splice(standing_rows, 2, 3, 4)
     b1 = _mk_batch(spark, tmp_path, "b1.parquet",
                    [(910001, "web", "en", novel1)])
-    s1 = job.run_incremental(b1, batch_tag="b1")
-    assert s1["appended"]["n_docs_appended"] == 1
 
-    # simulate the crash-between-stages / legacy-increment state
-    shutil.rmtree(job.path("increments/b1_bands"))
-    shutil.rmtree(job.path("increments/b1_segidx"))
+    append = ManifestTable.append
 
+    def docs_append_fails(table, df, tag=None):
+        if table.path == store.docs.path:
+            raise RuntimeError("killed before the docs commit")
+        return append(table, df, tag)
+
+    monkeypatch.setattr(ManifestTable, "append", docs_append_fails)
+    with pytest.raises(StageFailed, match="inc_append"):
+        job.run_incremental(b1, batch_tag="b1", retries=0)
+    monkeypatch.undo()
+    assert "b1" in store.bands.snapshot()["tags"]
+    assert "b1" in store.segments.snapshot()["tags"]
+    assert "b1" not in store.docs.snapshot()["tags"]
+
+    _, _, bands, segs = store.standing("b2")
+    assert bands.filter(col("doc") == 910001).count() == 0
+    assert segs.filter(col("first_doc") == 910001).count() == 0
     b2 = _mk_batch(spark, tmp_path, "b2.parquet",
                    [(920001, "web", "en", novel1)])
     s2 = job.run_incremental(b2, batch_tag="b2")
-    assert s2["gate"].get("duplicate_corpus", 0) == 1
-    assert s2["gate"].get("kept", 0) == 0
-    assert spark.read.parquet(job.path("increments/b2")).count() == 0
-    # and the slices were healed back onto disk for the NEXT batch
-    assert os.path.isfile(
-        os.path.join(job.path("increments/b1_bands"), "_SUCCESS")
-    )
-    assert os.path.isfile(
-        os.path.join(job.path("increments/b1_segidx"), "_SUCCESS")
-    )
+    assert s2["gate"].get("kept", 0) == 1
+    assert s2["appended"]["n_docs_appended"] == 1
+    assert store.batch(store.docs, "b2").head()["text"] == novel1
+
+    s1 = job.run_incremental(b1, batch_tag="b1")  # resumes at inc_append
+    assert s1["appended"]["n_docs_appended"] == 1
+    for table in (store.docs, store.bands, store.segments):
+        assert [e.get("tag") for e in table.history()].count("b1") == 1
+        rows = store.batch(table, "b1")
+        assert 0 < rows.count() == rows.distinct().count()
+    assert store.batch(store.docs, "b1").head()["doc_id"] == 910001
 
 
-def test_legacy_path_same_fixed_model_as_indexed(spark, tmp_path, curate_job_copy):
-    """Indexed run vs index-less copy of the SAME run state: one batch
-    must get identical per-document gate attribution — the legacy path
-    now fixes the bigram model on base `final` exactly like the indexed
-    path (pre-fix it scored against the drifting final ∪ increments
-    union)."""
-    job = curate_job_copy  # completed base run (session fixture copy)
-    standing_rows = (
-        spark.read.parquet(job.path("final")).orderBy("doc_id").limit(8)
-        .collect()
-    )
+def test_run_incremental_needs_indexed_base_run(spark, tmp_path, curate_job_copy):
+    job = curate_job_copy
+    shutil.rmtree(job.path("index"))
     b1 = _mk_batch(spark, tmp_path, "b1.parquet",
-                   [(910001, "web", "en", _splice(standing_rows, 2, 3, 4))])
-    job.run_incremental(b1, batch_tag="b1")
-
-    from nyc_tlc_analytics_pipeline_spark.curate import CurateJob
-
-    out2 = str(tmp_path / "out2")
-    shutil.copytree(job.out_dir, out2)
-    shutil.rmtree(os.path.join(out2, "index"))
-    job2 = CurateJob(
-        spark, os.path.join(SF_SMOKE, "documents.parquet"), out2
-    )
-
-    batch = [
-        (920001, "web", "en", _splice(standing_rows, 5, 6, 7)),
-        (920002, "web", "en", _splice(standing_rows, 2, 3, 4)),  # dup of b1
-        (920003, "web", "en", "zz qq xx vv " * 10),  # rules/ppl fodder
-    ]
-    b2a = _mk_batch(spark, tmp_path, "b2a.parquet", batch)
-    b2b = _mk_batch(spark, tmp_path, "b2b.parquet", batch)
-    job.run_incremental(b2a, batch_tag="b2")
-    job2.run_incremental(b2b, batch_tag="b2")
-
-    attr1 = {
-        r["doc_id"]: r["stage"]
-        for r in spark.read.parquet(
-            job.path("increments/b2_attribution")
-        ).collect()
-    }
-    attr2 = {
-        r["doc_id"]: r["stage"]
-        for r in spark.read.parquet(
-            os.path.join(out2, "increments/b2_attribution")
-        ).collect()
-    }
-    assert attr1 == attr2 and len(attr1) == 3
-    assert attr1[920002] == "duplicate_corpus"
+                   [(910001, "web", "en", "alpha bravo charlie")])
+    with pytest.raises(ValueError, match="no persisted index"):
+        job.run_incremental(b1, batch_tag="b1")
 
 
 def test_segment_classify_one_row_per_occurrence_both_paths(spark):

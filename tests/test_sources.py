@@ -313,3 +313,24 @@ def test_orc_partitioned_write_prunes(spark, tmp_path):
     assert back.filter(F.col("n_regionkey") == 1).count() == df.filter(
         F.col("n_regionkey") == 1
     ).count()
+
+
+def test_load_table_reads_a_table_replaced_at_the_same_path(spark, tmp_path):
+    """The plan memo is keyed on the file's identity as well as its
+    path: a table file replaced in place is read afresh, schema and
+    rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
+
+    def write(**cols):
+        tmp = str(tmp_path / "next.parquet")
+        pq.write_table(pa.table(cols), tmp)
+        os.replace(tmp, str(tmp_path / "region.parquet"))
+
+    write(r_regionkey=[0, 1, 2])
+    assert load_table(spark, str(tmp_path), "region").count() == 3
+    write(r_regionkey=[10, 11], r_name=["EAST", "WEST"])
+    rows = load_table(spark, str(tmp_path), "region").collect()
+    assert sorted(tuple(r) for r in rows) == [(10, "EAST"), (11, "WEST")]
