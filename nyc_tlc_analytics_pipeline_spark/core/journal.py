@@ -10,12 +10,18 @@ stage's JSON-sized ``result``.  Completed stages are skipped on re-entry;
 every stage body is an idempotent write, so a retry after a partial
 failure converges to the same state.  A stage reopened after it
 succeeded keeps its last result, even if the re-run fails, so a stage
-that extends its own result (the ingest catch-up) resumes from it."""
+that extends its own result (the ingest catch-up) resumes from it.
+
+A journal is thread-safe per stage: several threads may each ``run``
+their own stage at once (``run_e2e`` runs independent stages side by
+side).  Record updates and saves happen under one lock, so every save
+writes the records of all stages finished so far."""
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 from collections.abc import Callable, Iterable
 from typing import Any
 
@@ -24,7 +30,8 @@ from .pins import release_pins
 
 class StageFailed(RuntimeError):
     """A stage exhausted its retries; the journal on disk marks every
-    earlier stage complete, so a re-run resumes at this stage."""
+    stage that finished complete, so a re-run resumes at this stage and
+    the stages that had not finished."""
 
     def __init__(self, stage: str, attempts: int, cause: Exception):
         super().__init__(f"stage {stage!r} failed after {attempts} attempt(s): {cause}")
@@ -53,6 +60,7 @@ class Journal:
         self.stages = load(path)["stages"] if resume else {}
         if all(self.done(s) for s in stages):
             self.stages = {}  # previous run finished — start fresh
+        self._lock = threading.Lock()
 
     def done(self, name: str) -> bool:
         return self.stages.get(name, {}).get("status") == "success"
@@ -63,10 +71,12 @@ class Journal:
 
     def reopen(self, name: str) -> None:
         """Make a stage that succeeded run again on its next ``run``."""
-        if self.done(name):
-            self.stages[name]["status"] = "reopened"
+        with self._lock:
+            if self.done(name):
+                self.stages[name]["status"] = "reopened"
 
     def save(self) -> None:
+        """Write every record to ``path``; callers hold the lock."""
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
@@ -91,17 +101,19 @@ class Journal:
                 continue
             finally:
                 release_pins()
-            self.stages[name] = {
-                "status": "success",
-                "attempts": attempt,
-                "result": result,
-                "errors": errors,
-            }
-            self.save()
+            with self._lock:
+                self.stages[name] = {
+                    "status": "success",
+                    "attempts": attempt,
+                    "result": result,
+                    "errors": errors,
+                }
+                self.save()
             return result
         record = {"status": "failed", "attempts": retries + 1, "errors": errors}
-        if "result" in self.stages.get(name, {}):  # a reopened stage keeps it
-            record["result"] = self.stages[name]["result"]
-        self.stages[name] = record
-        self.save()
+        with self._lock:
+            if "result" in self.stages.get(name, {}):  # a reopened stage keeps it
+                record["result"] = self.stages[name]["result"]
+            self.stages[name] = record
+            self.save()
         raise StageFailed(name, retries + 1, last)

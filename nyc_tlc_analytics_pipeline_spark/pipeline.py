@@ -1,7 +1,12 @@
 """End-to-end pipeline orchestration: the reference's four Prefect stages
 (init → ingest → quality → transform; reference:
-src/orchestration/flows.py:228-294) as plain driver-side phases over a
-parquet warehouse.
+src/orchestration/flows.py:228-294) as driver-side stages over a
+parquet warehouse, run as the dependency graph they form:
+
+    init_dims  ∥  ingest → (quality  ∥  build_fact → build_aggregates)
+
+The dims feed no later stage, and quality and build_fact read only
+bronze, so only these edges order the stages (``TlcPipeline.run_e2e``).
 
 Warehouse layout (medallion, replacing the single DB file):
 
@@ -13,20 +18,20 @@ Warehouse layout (medallion, replacing the single DB file):
 
 Every table is a manifest table (``sources.manifest``): a ``_log/`` of
 commits over ``data/<uuid>/`` parquet directories, so each has a
-recorded schema, an atomic replace and a version, and a read infers
-no schema.  Bronze and meta tables are appended to; a bronze append is
-tagged with its source file, so re-ingesting a month is a no-op even
-under concurrent loaders.  The dims, ``fact_trips`` and the gold tables
-are rebuilt whole (``TlcPipeline.rebuild``), and the superseded data is
-reclaimed at once.  ``fact_trips`` is laid out in
+recorded schema and row count, an atomic replace and a version, and a
+read infers no schema.  Bronze and meta tables are appended to; a bronze
+append is tagged with its source file, so re-ingesting a month is a
+no-op even under concurrent loaders.  The dims, ``fact_trips`` and the
+gold tables are rebuilt whole (``TlcPipeline.rebuild``), and the
+superseded data is reclaimed at once.  ``fact_trips`` is laid out in
 ``service_type=*/pickup_date=*/`` directories, which serve the same
 access paths the reference indexed (SURVEY §4).
 
 Each stage runs one Spark job per table it writes: row counts come from
-the write itself (``sinks.counted``), and the quality checks of a
-service are one aggregate.  Writes that do not depend on each other (the
-dims, the three services' quality aggregates, the gold tables) run side
-by side from a small thread pool."""
+the write itself (the manifest commit records them), and the quality
+checks of a service are one aggregate.  Writes that do not depend on
+each other (the dims, the landing files, the three services' quality
+aggregates, the gold tables) run side by side from a small thread pool."""
 
 from __future__ import annotations
 
@@ -84,7 +89,8 @@ def unloaded_files(landing_dir: str, loads: list[dict]) -> list[tuple[str, str]]
 
 def side_by_side(spark: SparkSession, calls: dict[str, Callable[[], T]]) -> dict[str, T]:
     """Run independent calls from a thread pool; returns their results in
-    ``calls`` order and re-raises the first failure.  Each call runs with
+    ``calls`` order.  Every call runs to its end; then the first failure
+    in ``calls`` order is re-raised.  Each call runs with
     the caller's job description and job group, copied per call: a
     shared copy would be mutated by every concurrent query."""
     def inherit(fn):
@@ -130,12 +136,10 @@ class TlcPipeline:
         directories) with ``df`` and delete the data it replaced: these
         tables are derived, so no history is kept.  Returns the rows
         written."""
-        out, obs = sinks.counted(df)
         table = self._rebuilt(name)
-        table.expire(
-            table.overwrite(out, partition_by=FACT_PARTITIONS if name == "fact_trips" else ())
-        )
-        return obs.get["rows"]
+        version = table.overwrite(df, partition_by=FACT_PARTITIONS if name == "fact_trips" else ())
+        table.expire(version)
+        return table.entry(version)["rows"]
 
     # -- stage 1: init (dims) ---------------------------------------------
     def init_dims(self, zones_csv: str | None = None) -> dict[str, int]:
@@ -163,34 +167,64 @@ class TlcPipeline:
 
     def load_file(self, path: str, service: str) -> dict:
         """Validate → align → bronze append tagged with the source
-        filename, so a file already loaded is skipped (SURVEY §3.3)."""
-        df, obs = sinks.counted(read_service_parquet(self.spark, path, service))
+        filename, so a file already loaded is not written again (SURVEY
+        §3.3).  Returns the file's ingestion_log entry, from the bronze
+        commit that carries its tag: the rows it committed and the file
+        size."""
         fname = os.path.basename(path)
-        tagged = df.withColumn("source_file", F.lit(fname)).withColumn(
-            "ingestion_timestamp", F.current_timestamp()
+        tagged = (
+            read_service_parquet(self.spark, path, service)
+            .withColumn("source_file", F.lit(fname))
+            .withColumn("ingestion_timestamp", F.current_timestamp())
         )
-        written = self._bronze_manifest(service).append(tagged, tag=fname) is not None
-        # after a skip nothing ran over df, and obs.get would wait forever
-        rows = obs.get["rows"] if written else 0
-        entry = {
+        bronze = self._bronze_manifest(service)
+        version = bronze.append(tagged, tag=fname, file_size_bytes=os.path.getsize(path))
+        commit = bronze.entry(version or bronze.snapshot()["tags"][fname])
+        return {
             "service_type": service,
             "source_file": fname,
-            "rows_loaded": rows,
-            "file_size_bytes": os.path.getsize(path) if os.path.exists(path) else 0,
-            "status": "success" if written else "skipped_already_loaded",
+            "rows_loaded": commit.get("rows", 0),
+            "file_size_bytes": commit.get("file_size_bytes", 0),
         }
-        self._meta_table("ingestion_log").append(sinks.ingestion_log_rows(self.spark, [entry]))
-        return entry
+
+    def _log_loads(self, loaded: list[dict]) -> list[dict]:
+        """Append one ingestion_log row per entry of ``loaded``, in order:
+        ``success`` for a file that no earlier append named (a file whose
+        bronze commit outlived a failed log append is logged now, with
+        its committed rows), ``skipped_already_loaded`` with 0 rows
+        otherwise.  Each append records the files it names, and commits
+        only over the log version whose names it checked, so two loaders
+        never both log a file as loaded."""
+        log = self._meta_table("ingestion_log")
+        while True:
+            history = log.history()
+            version = history[-1]["version"] if history else 0
+            named = {f for e in history for f in e.get("source_files", ())}
+            entries = [
+                {**e, "rows_loaded": 0, "status": "skipped_already_loaded"}
+                if e["source_file"] in named
+                else {**e, "status": "success"}
+                for e in loaded
+            ]
+            rows = sinks.ingestion_log_rows(self.spark, entries)
+            files = [e["source_file"] for e in entries]
+            if log.append(rows, expect_version=version, source_files=files) is not None:
+                return entries
 
     def load_landing_dir(self, landing_dir: str, loads: list[dict] | None = None) -> list[dict]:
         """Glob the landing dir and load every recognized service file
-        (reference: DataLoader.load_all_downloaded_files).  Given the
-        entries of earlier loads, load only the files they lack and
-        append to them, so a retried or resumed ingest loads each file
-        once."""
+        (reference: DataLoader.load_all_downloaded_files), side by side,
+        then log them in one ingestion_log append.  Given the entries of
+        earlier loads, load only the files they lack and append to them,
+        so a retried or resumed ingest loads each file once."""
         loads = [] if loads is None else loads
-        for path, service in unloaded_files(landing_dir, loads):
-            loads.append(self.load_file(path, service))
+        todo = unloaded_files(landing_dir, loads)
+        if todo:
+            loaded = side_by_side(
+                self.spark,
+                {path: lambda path=path, service=service: self.load_file(path, service) for path, service in todo},
+            )
+            loads.extend(self._log_loads(list(loaded.values())))
         return loads
 
     def raw(self, service: str) -> DataFrame:
@@ -261,39 +295,67 @@ class TlcPipeline:
     ) -> dict:
         """The full pipeline (reference: cli.py run-e2e → full_pipeline_flow)
         with per-stage retry + resume (``core.journal``): each stage retries
-        ``retries`` times (reference default, flows.py:34), completion is
-        journaled to ``meta/e2e_state.json``, and a re-run after a failure
-        skips the already-completed stages (their idempotent writes are not
-        repeated, so e.g. ingestion_log gets no duplicate entries).  A
+        ``retries`` times (reference default, flows.py:34) and its
+        completion is journaled to ``meta/e2e_state.json``.
+
+        The stages run as their dependency graph, side by side where no
+        edge orders them: ``init_dims ∥ ingest → (quality ∥ build_fact →
+        build_aggregates)``.  A stage starts only once its inputs have
+        succeeded.  A stage that fails beyond its retries stops only the
+        stages that depend on it; the others run to the end and are
+        journaled, and then ``StageFailed`` is raised for the first
+        failed stage in ``E2E_STAGES`` order.  A re-run after a failure
+        skips the completed stages (their idempotent writes are not
+        repeated, so e.g. ingestion_log gets no duplicate entries), so it
+        runs only the failed stages and those that depend on them.  A
         journaled ingest stage does NOT freeze the file set: resume
         re-scans the landing dir and loads, through the same retry loop,
         any files that arrived after the failed run.  ``resume=False``
         discards prior state and runs everything."""
         stages = journal.Journal(self._state_path, E2E_STAGES, resume)
-        dims = stages.run("init_dims", lambda: self.init_dims(zones_csv), retries)
-        # the ingest result lists every file loaded so far; a resumed run
-        # loads only the files missing from it (those landed after the
-        # failed run), so no journaled file gets a second ingestion_log
-        # row, and a retry skips the files its failed attempt loaded
-        loads: list[dict] = list(stages.result("ingest") or [])
-        if unloaded_files(landing_dir, loads):
-            stages.reopen("ingest")
-        loads = stages.run("ingest", lambda: self.load_landing_dir(landing_dir, loads), retries)
-        qc_pct = stages.run(
-            "quality",
-            lambda: {
+
+        def ingest() -> list[dict]:
+            # the ingest result lists every file loaded so far; a resumed
+            # run loads only the files missing from it (those landed after
+            # the failed run), so no journaled file gets a second
+            # ingestion_log row, and a retry skips the files its failed
+            # attempt logged
+            loads: list[dict] = list(stages.result("ingest") or [])
+            if unloaded_files(landing_dir, loads):
+                stages.reopen("ingest")
+            return stages.run("ingest", lambda: self.load_landing_dir(landing_dir, loads), retries)
+
+        def quality_pct() -> dict[str, float]:
+            return {
                 s: round(quality.overall_quality_pct(rs), 2)
                 for s, rs in self.run_quality_checks().items()
+            }
+
+        def transform() -> tuple[int, dict[str, int]]:
+            fact_rows = stages.run("build_fact", self.build_fact, retries)
+            return fact_rows, stages.run("build_aggregates", self.build_aggregates, retries)
+
+        def from_bronze() -> tuple[list[dict], dict]:
+            loads = ingest()
+            return loads, side_by_side(
+                self.spark,
+                {"quality": lambda: stages.run("quality", quality_pct, retries), "transform": transform},
+            )
+
+        out = side_by_side(
+            self.spark,
+            {
+                "init_dims": lambda: stages.run("init_dims", lambda: self.init_dims(zones_csv), retries),
+                "ingest": from_bronze,
             },
-            retries,
         )
-        fact_rows = stages.run("build_fact", self.build_fact, retries)
-        aggs = stages.run("build_aggregates", self.build_aggregates, retries)
+        loads, after_ingest = out["ingest"]
+        fact_rows, aggs = after_ingest["transform"]
         return {
-            "dims": dims,
+            "dims": out["init_dims"],
             "files_loaded": len([r for r in loads if r["status"] == "success"]),
             "files_skipped": len([r for r in loads if r["status"] != "success"]),
-            "quality_pct": qc_pct,
+            "quality_pct": after_ingest["quality"],
             "fact_rows": fact_rows,
             "aggregates": aggs,
         }

@@ -26,10 +26,11 @@ with an optimistic-concurrency commit log:
   readers get snapshot isolation for free: ``read(version=...)`` is
   time travel, and a reader holding version V is unaffected by later
   commits.
-- Each entry records the schema of the rows it committed.  While every
-  directory of a snapshot shares one schema, ``read`` passes it to the
-  reader and skips the footer-inference job; entries written without a
-  schema, or a snapshot whose entries disagree, fall back to inference.
+- Each entry records the schema and the number of the rows it committed
+  (the count comes from the write itself, so it costs no job).  While
+  every directory of a snapshot shares one schema, ``read`` passes it to
+  the reader and skips the footer-inference job; entries written without
+  a schema, or a snapshot whose entries disagree, fall back to inference.
 - An ``overwrite`` may lay its rows out by ``partition_by`` columns
   (``col=value/`` directories, pruned at planning).  The entry records
   them; appends and ``compact`` to that snapshot write the same layout.
@@ -69,7 +70,8 @@ import os
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
@@ -118,7 +120,8 @@ class ManifestTable:
             int(n[: -len(suffix)]) for n in names if n.endswith(suffix)
         )
 
-    def _read_entry(self, version: int) -> dict:
+    def entry(self, version: int) -> dict:
+        """The committed log entry of ``version``."""
         with open(os.path.join(self.log_dir, f"{version:020d}.json")) as f:
             return json.load(f)
 
@@ -163,7 +166,7 @@ class ManifestTable:
                 continue
             if version is not None and v > version:
                 break
-            e = self._read_entry(v)
+            e = self.entry(v)
             if e["action"] == "expire":
                 # retention watermark: data below it is reclaimed; the
                 # entry carries no dirs and never touches tags
@@ -281,23 +284,46 @@ class ManifestTable:
     def _entry(self, action: str, df: DataFrame, partition_by: Sequence[str], **extra) -> dict:
         """Stage ``df`` and return the log entry that commits it.  Its
         schema is the one the staged files read back with: every field
-        nullable, the partition columns last."""
-        staged = self._stage(df, partition_by)
+        nullable, the partition columns last; its row count is observed
+        by the write."""
+        obs = Observation()
+        staged = self._stage(df.observe(obs, F.count(F.lit(1)).alias("rows")), partition_by)
         fields = [f for f in df.schema.fields if f.name not in partition_by]
         schema = StructType(fields + [df.schema[c] for c in partition_by])
-        return {"action": action, "dirs": [staged], "schema": _as_nullable(schema.jsonValue()),
+        return {"action": action, "dirs": [staged], "rows": obs.get["rows"],
+                "schema": _as_nullable(schema.jsonValue()),
                 "partition_by": list(partition_by), **extra}
 
+    def _commit(self, entry: dict) -> int | None:
+        """Publish a staged entry; when it does not commit (its tag was
+        committed meanwhile, or its ``expect_parent`` is stale), delete
+        what it staged."""
+        import shutil
+
+        v = self._publish(entry)
+        if v is None:
+            shutil.rmtree(os.path.join(self.data_dir, entry["dirs"][0]), ignore_errors=True)
+        return v
+
     # -- public API --------------------------------------------------------
-    def append(self, df: DataFrame, tag: str | None = None) -> int | None:
+    def append(
+        self, df: DataFrame, tag: str | None = None, expect_version: int | None = None, **info
+    ) -> int | None:
         """Concurrent-safe append.  ``tag`` is an idempotency key (e.g. the
         source filename): if any committed entry already carries it, the
         append is skipped and None is returned — including when the tag
-        was committed by a concurrent writer DURING our own attempt."""
+        was committed by a concurrent writer DURING our own attempt.
+        Given ``expect_version``, the append commits only as the next
+        version after it and returns None otherwise (compare-and-swap).
+        ``info`` is recorded in the commit's log entry."""
         snap = self.snapshot()
         if tag is not None and tag in snap["tags"]:
             return None  # cheap pre-check; re-checked at commit time
-        return self._publish(self._entry("append", df, snap["partition_by"], tag=tag))
+        if expect_version is not None:
+            if snap["version"] != expect_version:
+                return None
+            info["expect_parent"] = expect_version
+        return self._commit(self._entry("append", df, snap["partition_by"], tag=tag, **info))
 
     def overwrite(
         self, df: DataFrame, tag: str | None = None, partition_by: tuple[str, ...] = ()
@@ -345,8 +371,6 @@ class ManifestTable:
         pre-compact versions keeps working until an EXPLICIT
         :meth:`expire` reclaims history below a chosen watermark —
         retention never happens implicitly."""
-        import shutil
-
         snap = self.snapshot()
         if not snap["dirs"]:
             return None
@@ -358,10 +382,8 @@ class ManifestTable:
             "overwrite", df, pb, tag=f"compact-v{snap['version']}",
             keep_tags=True, expect_parent=snap["version"],
         )
-        v = self._publish(entry)
-        if v is None:  # CAS lost: leave the table alone, drop our staging
-            shutil.rmtree(os.path.join(self.data_dir, entry["dirs"][0]), ignore_errors=True)
-        else:
+        v = self._commit(entry)  # None: CAS lost, the table is left alone
+        if v is not None:
             # a fresh compact is the natural checkpoint moment: the state
             # is one directory, so the checkpoint is minimal
             self.write_checkpoint()
@@ -406,7 +428,7 @@ class ManifestTable:
         referenced_old: set[str] = set()
         for u in self._versions():
             if u < before_version:
-                referenced_old.update(self._read_entry(u).get("dirs", []))
+                referenced_old.update(self.entry(u).get("dirs", []))
         doomed = sorted(
             d
             for d in referenced_old - keep
@@ -421,7 +443,7 @@ class ManifestTable:
 
     def history(self) -> list[dict]:
         """The committed log, oldest first (audit / debugging surface)."""
-        return [self._read_entry(v) for v in self._versions()]
+        return [self.entry(v) for v in self._versions()]
 
     def diff(
         self,

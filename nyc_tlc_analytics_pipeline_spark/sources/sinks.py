@@ -1,5 +1,5 @@
-"""Sinks: a write's row counter, CSV and pandas export, small literal
-frames, the ingestion-log rows and the training-shard writer.
+"""Sinks: CSV and pandas export, small literal frames, the
+ingestion-log rows and the training-shard writer.
 
 Every warehouse table is written through ``sources.manifest`` instead:
 its commit log makes a rebuild atomic, and an append tagged with its
@@ -9,21 +9,13 @@ source file idempotent, even under concurrent writers (reference: the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 # ingestion_log.log_id = unix_micros(ingestion_timestamp) * slots + row
 # position: room for this many rows per append before ids could collide
 _LOG_ID_SLOTS = 1000
-
-
-def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` with a row counter filled in by the next action over it, so a
-    write reports its row count without a second job.  Read
-    ``obs.get["rows"]`` only after that action ran: before, it blocks."""
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

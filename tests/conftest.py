@@ -66,9 +66,14 @@ def spark_jobs(spark):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+# the session's cores and shuffle partitions: the CPUs this process may
+# run on, as bench.py and scripts/sweep.py size theirs
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = build_session(app_name="tests", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     yield s
     s.stop()
 

@@ -4,9 +4,12 @@ load/save, resume and retry rules, without a Spark session."""
 from __future__ import annotations
 
 import json
+import threading
+import types
 
 import pytest
 
+from nyc_tlc_analytics_pipeline_spark.core import journal
 from nyc_tlc_analytics_pipeline_spark.core.journal import Journal, StageFailed, load
 
 STAGES = ("a", "b")
@@ -97,3 +100,39 @@ def test_stage_failed_carries_stage_attempts_and_last_cause(tmp_path):
         "attempts": 3,
         "errors": [f"RuntimeError: attempt {i}" for i in (1, 2, 3)],
     }
+
+
+def test_stages_run_at_once_are_both_saved(tmp_path, monkeypatch):
+    """Two threads run their own stages of one journal at once: both
+    records reach the saved journal, and neither save breaks the other."""
+    path = str(tmp_path / "state.json")
+    j = Journal(path, STAGES)
+    together = threading.Barrier(2, timeout=10)
+    saving = threading.Barrier(2)
+
+    def dump(obj, f):
+        # hold a save open until the other thread's save starts too; saves
+        # the journal serializes stop waiting after a second
+        try:
+            saving.wait(timeout=1)
+        except threading.BrokenBarrierError:
+            pass
+        json.dump(obj, f)
+
+    monkeypatch.setattr(journal, "json", types.SimpleNamespace(load=json.load, dump=dump))
+    results, errors = {}, []
+
+    def run(name):
+        try:
+            results[name] = j.run(name, lambda: (together.wait(), name)[1], retries=0)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(name,)) for name in STAGES]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and results == {"a": "a", "b": "b"}
+    assert load(path)["stages"] == {"a": _ok("a"), "b": _ok("b")}

@@ -189,7 +189,7 @@ def test_expire_races_concurrent_append_and_boundary_read(spark, tmp_path):
     # only the dirs referenced exclusively below the watermark died; the
     # racer's dir (staged during the race) was never in the doomed set
     assert sorted(res["removed_dirs"]) == sorted(
-        t._read_entry(1)["dirs"] + t._read_entry(2)["dirs"]
+        t.entry(1)["dirs"] + t.entry(2)["dirs"]
     )
     assert t.read().count() == 3 + 4 + 2  # c + d + racer
     assert {r["src"] for r in t.read().select("src").distinct().collect()} == {

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 
@@ -314,6 +315,106 @@ def test_log_ids_unique_and_ordered_across_appends(spark, landing, tmp_path):
     assert in_order == sorted(set(in_order))
 
 
+def test_failed_log_append_after_bronze_commits_logs_each_file_once(
+    spark, landing, tmp_path, monkeypatch
+):
+    """The ingestion_log append fails once after the three bronze appends
+    committed: the retried ingest stage logs every file once, as loaded,
+    with the rows its bronze commit recorded."""
+    from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
+
+    real, failed = ManifestTable.append, []
+
+    def append(self, df, *a, **kw):
+        if self.path.endswith("ingestion_log") and not failed:
+            failed.append(self.path)
+            raise RuntimeError("log append lost")
+        return real(self, df, *a, **kw)
+
+    monkeypatch.setattr(ManifestTable, "append", append)
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"), retries=1)
+    assert len(failed) == 1
+    assert summary["files_loaded"] == 3 and summary["files_skipped"] == 0
+    assert p._load_state()["stages"]["ingest"]["errors"] == ["RuntimeError: log append lost"]
+    log = p.read_meta("ingestion_log").collect()
+    assert sorted((r.source_file, r.status, r.rows_loaded) for r in log) == [
+        ("fhvhv_tripdata_2025-01.parquet", "success", 800),
+        ("green_tripdata_2025-01.parquet", "success", 150),
+        ("yellow_tripdata_2025-01.parquet", "success", 400),
+    ]
+
+
+@pytest.mark.parametrize(
+    "waiter, starter",
+    [("init_dims", "load_landing_dir"), ("run_quality_checks", "build_fact")],
+)
+def test_independent_stages_run_side_by_side(spark, landing, tmp_path, waiter, starter):
+    """Stages that no edge of the graph orders overlap: ``waiter`` blocks
+    until ``starter`` has started, which would time out if they ran one
+    after the other."""
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    started, seen = threading.Event(), []
+    real_waiter, real_starter = getattr(p, waiter), getattr(p, starter)
+
+    def wait_then_run(*a, **kw):
+        seen.append(started.wait(timeout=30))
+        return real_waiter(*a, **kw)
+
+    def start(*a, **kw):
+        started.set()
+        return real_starter(*a, **kw)
+
+    setattr(p, waiter, wait_then_run)
+    setattr(p, starter, start)
+    summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"), retries=0)
+    assert seen == [True]
+    assert summary["fact_rows"] == 1350
+
+
+def test_failed_init_dims_stops_no_other_stage(spark, landing, tmp_path):
+    """init_dims dies beyond its retries: the stages that do not depend on
+    it run to the end and are journaled, StageFailed names init_dims, and
+    the resume re-runs init_dims alone."""
+    from nyc_tlc_analytics_pipeline_spark.pipeline import E2E_STAGES, StageFailed
+
+    p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
+    methods = ("init_dims", "load_landing_dir", "run_quality_checks", "build_fact", "build_aggregates")
+    calls: list[str] = []
+
+    def counting(name, fn):
+        def call(*a, **kw):
+            calls.append(name)
+            return fn(*a, **kw)
+
+        return call
+
+    real = {m: getattr(p, m) for m in methods}
+    for m in methods:
+        setattr(p, m, counting(m, real[m]))
+
+    def dead(*a, **kw):
+        raise RuntimeError("dims killed")
+
+    p.init_dims = counting("init_dims", dead)
+    zones = str(landing / "taxi_zones.csv")
+    with pytest.raises(StageFailed) as ei:
+        p.run_e2e(str(landing), zones_csv=zones, retries=1)
+    assert ei.value.stage == "init_dims"
+    assert calls.count("init_dims") == 2
+    state = p._load_state()["stages"]
+    assert state["init_dims"]["status"] == "failed"
+    assert [state[s]["status"] for s in E2E_STAGES[1:]] == 4 * ["success"]
+    assert p.tables()["fact_trips"].count() == 1350
+
+    p.init_dims = counting("init_dims", real["init_dims"])
+    calls.clear()
+    summary = p.run_e2e(str(landing), zones_csv=zones)
+    assert calls == ["init_dims"]
+    assert summary["dims"]["dim_zones"] == 13 and summary["fact_rows"] == 1350
+    assert p.read_meta("ingestion_log").count() == 3
+
+
 def test_retried_quality_stage_appends_metrics_once(spark, landing, tmp_path, monkeypatch):
     """The first quality attempt fails in green's checks; the retry must
     not leave the other services' metrics from that attempt behind."""
@@ -357,16 +458,18 @@ def test_side_by_side_keeps_caller_job_group(spark):
 
 
 def test_run_e2e_job_budget(spark, landing, tmp_path):
-    """A full run costs one Spark job per table written plus one scan per
-    source and one quality aggregate per service, and reads fact_trips
-    back for the gold tables without inferring its schema: 35 jobs on
-    this fixture.  A change that reads a table back to count it, infers
-    a schema the log recorded, or splits an aggregate, fails here."""
+    """A full run costs one Spark job per table written (the three bronze
+    files logged by one ingestion_log append) plus one scan per source
+    and one quality aggregate per service, and reads fact_trips back for
+    the gold tables without inferring its schema: 33 jobs on this
+    fixture.  A change that reads a table back to count it, infers a
+    schema the log recorded, splits an aggregate, or logs each file in
+    its own append, fails here."""
     p = TlcPipeline(spark, PipelineConfig(warehouse_dir=str(tmp_path / "wh")))
     with spark_jobs(spark) as ids:
         summary = p.run_e2e(str(landing), zones_csv=str(landing / "taxi_zones.csv"))
     assert summary["fact_rows"] == 1350
-    assert len(ids) <= 35
+    assert len(ids) <= 33
 
 
 def test_cli_analytics_unknown_query(pipeline, capsys):
