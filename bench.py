@@ -293,9 +293,8 @@ def main() -> None:
         # delta a regression (BENCH_SCALING.md round-9 note)
         "calibration": round(host_calibration(), 4),
         "calibration_pre": calibration_pre,
-        # per-query mid-run load samples + their max: the anchor gate
-        # (scripts/bench_anchor.sh) accepts a run only if the WHOLE
-        # window stayed idle, not just its endpoints
+        # per-query mid-run load samples + their max: a run is quiet
+        # only if the WHOLE window stayed idle, not just its endpoints
         "queries_calibration": mid_cal,
         "calibration_mid_max": max(mid_cal.values()) if mid_cal else None,
     }

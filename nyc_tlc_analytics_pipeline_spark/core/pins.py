@@ -31,9 +31,10 @@ Release
 Pins registered here are released by the job-shaped caller that owns
 the action: ``CurateJob`` stages release on stage completion (stages
 hand off through parquet, so a stage's pins are dead the moment its
-write lands), the streaming faces release per micro-batch (the gate
-re-pins per batch — without release a long-running query accumulates
-one cache entry set per batch, ADVICE r13), and ``scripts/sweep.py``
+write lands), the streaming faces release per micro-batch in
+``streaming.events.for_each_batch`` (the gate re-pins per batch —
+without release a long-running query accumulates one cache entry set
+per batch, ADVICE r13), and ``scripts/sweep.py``
 releases per query so a full catalog sweep's storage-memory high-water
 stays one-query-sized.  ``release_pins`` only drops cache entries —
 lineage is intact, so a late consumer recomputes instead of breaking.
@@ -98,10 +99,10 @@ def release_pins() -> int:
 
 def releasing(fn):
     """Wrap a job-shaped callable so its pins are released on exit —
-    the foreachBatch idiom: ``.foreachBatch(releasing(classify_batch))``
-    drops the gate's per-micro-batch cache entries after each batch's
-    writes land (success or failure), instead of accumulating one set
-    per batch for the life of the streaming query."""
+    ``streaming.events.for_each_batch`` wraps every micro-batch in it,
+    dropping the batch's cache entries after its writes land (success
+    or failure) instead of accumulating one set per batch for the life
+    of the streaming query."""
 
     def wrapped(*args, **kwargs):
         try:

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -312,8 +313,10 @@ class CurateJob:
            the batch path unless given): a re-run skips what the tag
            already committed instead of appending twice.
 
-        Stages hand off through parquet under ``scratch/inc_<tag>/``.
-        Same journal semantics as :meth:`run`, per batch tag."""
+        Stages hand off through parquet under ``scratch/inc_<tag>/``,
+        deleted once all four stages are journaled: a later run of the
+        tag starts a fresh journal and rewrites it.  Same journal
+        semantics as :meth:`run`, per batch tag."""
         import hashlib
 
         tag = batch_tag or hashlib.md5(batch_path.encode()).hexdigest()[:12]
@@ -384,6 +387,7 @@ class CurateJob:
         seg = stages.run("inc_segment", inc_segment, retries)
         dec = stages.run("inc_decontam", inc_decontam, retries)
         app = stages.run("inc_append", inc_append, retries)
+        shutil.rmtree(self.path(f"scratch/inc_{tag}"), ignore_errors=True)
         summary = {
             "tag": tag,
             "gate": gate,

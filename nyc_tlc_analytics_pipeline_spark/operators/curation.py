@@ -45,7 +45,6 @@ def curation_funnel_stages(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
     lm_stats: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared funnel stages, returned separately so callers compose
@@ -88,7 +87,6 @@ def curation_funnel_stages(
     p = dedup.near_dup_pairs(
         kept, id_col, text_col, pairs=pairs, pair_source=pair_source,
         n=n, threshold=threshold, num_hashes=num_hashes, bands=bands,
-        hash_mode=hash_mode,
     ).select("doc_a", "doc_b")
     keepers = (
         dedup.canonical_keep_best(
@@ -113,7 +111,6 @@ def funnel_attribution(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
     lm_stats: DataFrame | None = None,
 ) -> DataFrame:
     """Every document attributed to the funnel stage that removed it —
@@ -128,7 +125,7 @@ def funnel_attribution(
     gated, scored, keepers = curation_funnel_stages(
         docs, ppl_cutoff, id_col, text_col,
         pairs=pairs, pair_source=pair_source, n=n, threshold=threshold,
-        num_hashes=num_hashes, bands=bands, hash_mode=hash_mode,
+        num_hashes=num_hashes, bands=bands,
         lm_stats=lm_stats,
     )
     return (
@@ -165,7 +162,6 @@ def incremental_gate_attribution(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
     lm_stats: DataFrame | None = None,
     standing_bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -227,7 +223,7 @@ def incremental_gate_attribution(
     classified = dedup.incremental_minhash_classify(
         kept, standing.select(id_col, text_col), id_col, text_col,
         n=n, num_hashes=num_hashes, bands=bands, threshold=threshold,
-        hash_mode=hash_mode, standing_bands=standing_bands,
+        standing_bands=standing_bands,
     )
     attr = (
         batch.select(

@@ -11,8 +11,9 @@ Design for 100 TB:
   the bucket — the classic LSH trick that keeps the join linear-ish.
 - All hashing is expression-level (md5 / xxhash64 built-ins) — no Python.
 
-``minhash`` uses ``xxhash64(shingle, seed)`` per hash function: one shuffle
-of (doc, shingle) pairs, then ``min_by``-style aggregation per seed.
+MinHash signatures take md5-derived hash values (:func:`minhash_signatures`)
+so a DuckDB oracle can recompute every signature and band: one shuffle of
+(doc, shingle) pairs, then a ``min`` aggregation per hash function.
 """
 
 from __future__ import annotations
@@ -296,54 +297,41 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_hashes: int = 16,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Per-doc MinHash signature: for seed k, min over shingles of a
     seeded uniform hash.  One explode + one groupBy; the signature is an
     array column ordered by seed.
 
-    ``hash_mode="md5"`` (default) derives four independent 32-bit hash
-    values from each digest — hash k is the 8-hex-char chunk ``k % 4`` of
+    Four independent 32-bit hash values come from each digest — hash k
+    is the 8-hex-char chunk ``k % 4`` of
     ``md5((k // 4) || ':' || shingle)`` — so 16 hash functions cost only
     4 md5 evaluations per shingle (subexpression elimination shares each
     digest across its 4 chunk-mins), a 4× cut in the dominant hashing
     cost.  Mins are taken on the hex STRING: fixed-width lexicographic
     order over uniform hex is itself a uniform order, and both Spark and
     DuckDB produce byte-identical md5 hex, so the whole signature (and
-    the LSH bands derived from it) is oracle-checkable end-to-end.
-    ``hash_mode="xxhash64"`` is the cheaper JVM-only path (array<long>)
-    when cross-engine verification isn't needed."""
+    the LSH bands derived from it) is oracle-checkable end-to-end."""
     return _signatures_from_shingles(
-        doc_shingles(df, id_col, text_col, n), num_hashes, hash_mode
+        doc_shingles(df, id_col, text_col, n), num_hashes
     )
 
 
-def _signatures_from_shingles(
-    per_doc: DataFrame, num_hashes: int = 16, hash_mode: str = "md5"
-) -> DataFrame:
+def _signatures_from_shingles(per_doc: DataFrame, num_hashes: int = 16) -> DataFrame:
     """The signature aggregate over an existing (doc, sh) shingle frame —
     split out so pipelines that also need the shingle sets for exact
     verification (``minhash_dedup_pairs``) shingle ONCE and share the
     frame instead of re-tokenizing per consumer."""
     sh = per_doc.select("doc", F.explode_outer("sh").alias("shingle"))
-    if hash_mode == "md5":
-        mins = [
-            F.min(
-                F.substring(
-                    F.md5(F.concat(lit(f"{k // 4}:"), col("shingle"))),
-                    (k % 4) * 8 + 1,
-                    8,
-                )
-            ).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-    elif hash_mode == "xxhash64":
-        mins = [
-            F.min(F.xxhash64(col("shingle"), lit(k))).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
+    mins = [
+        F.min(
+            F.substring(
+                F.md5(F.concat(lit(f"{k // 4}:"), col("shingle"))),
+                (k % 4) * 8 + 1,
+                8,
+            )
+        ).alias(f"h{k}")
+        for k in range(num_hashes)
+    ]
     sig = sh.groupBy("doc").agg(*mins)
     return sig.select(
         "doc", F.array(*[col(f"h{k}") for k in range(num_hashes)]).alias("signature")
@@ -449,7 +437,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard ≥ threshold.
 
@@ -477,7 +464,7 @@ def minhash_dedup_pairs(
             "sh_h", F.transform(col("sh"), lambda s: F.xxhash64(s))
         )
     )
-    sigs = _signatures_from_shingles(per_doc, num_hashes, hash_mode)
+    sigs = _signatures_from_shingles(per_doc, num_hashes)
     cands = lsh_candidate_pairs(sigs, bands, rows_per_band)
     a = per_doc.select(col("doc").alias("doc_a"), col("sh_h").alias("sh_a"))
     b = per_doc.select(col("doc").alias("doc_b"), col("sh_h").alias("sh_b"))
@@ -632,20 +619,15 @@ def simhash_near_pairs(
     bits: int = 32,
     prefix_bits: int = 8,
     max_hamming: int = 6,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: bucket on the top ``prefix_bits`` bits
     (cheap LSH — near-identical docs share the prefix with high
     probability), equi-join within buckets, filter on Hamming distance.
 
-    ``hash_mode="md5"`` uses :func:`simhash_md5` (bits ≤ 32) so a DuckDB
-    oracle can recompute the identical hashes; default xxhash64 is the
-    cheaper JVM-only path."""
-    hash_col = (
-        simhash_md5(text_col, bits) if hash_mode == "md5" else simhash(text_col, bits)
-    )
+    Hashes with :func:`simhash_md5` (bits ≤ 32) so a DuckDB oracle can
+    recompute the identical hashes."""
     hashed = parallelize_input(df).select(
-        col(id_col).alias("doc"), hash_col.alias("sh")
+        col(id_col).alias("doc"), simhash_md5(text_col, bits).alias("sh")
     ).withColumn("bucket", F.shiftrightunsigned(col("sh"), bits - prefix_bits))
     a = hashed.select(col("doc").alias("doc_a"), col("sh").alias("sh_a"), "bucket")
     b = hashed.select(col("doc").alias("doc_b"), col("sh").alias("sh_b"), "bucket")
@@ -1035,7 +1017,6 @@ def lsh_band_table(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """The corpus' MinHash-LSH INDEX: one (doc, band, bucket) row per
     signature band — the artifact a production dedup PERSISTS (write
@@ -1043,7 +1024,7 @@ def lsh_band_table(
     standing corpus' text.  docs×bands rows of fixed-width md5 strings:
     at 370M docs × 4 bands that's a ~50 GB table vs re-shingling 100 TB
     of text on every refresh."""
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, hash_mode)
+    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes)
     return banded_buckets(sigs, bands, num_hashes // bands)
 
 
@@ -1056,7 +1037,6 @@ def incremental_minhash_classify(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    hash_mode: str = "md5",
     standing_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Classify an incoming batch against the standing corpus by NEAR-
@@ -1085,11 +1065,11 @@ def incremental_minhash_classify(
     # candidates + both sides of the in-batch self-join) — pin it so
     # the 16-hash signature chain runs once
     b_bands = pin(lsh_band_table(
-        batch, id_col, text_col, n, num_hashes, bands, hash_mode
+        batch, id_col, text_col, n, num_hashes, bands
     ))
     if standing_bands is None:
         standing_bands = lsh_band_table(
-            standing, id_col, text_col, n, num_hashes, bands, hash_mode
+            standing, id_col, text_col, n, num_hashes, bands
         )
     cand = (
         b_bands.select(col("doc").alias("bd"), "band", "bucket")
@@ -1167,7 +1147,6 @@ def incremental_minhash_report(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    hash_mode: str = "md5",
     standing_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group report over :func:`incremental_minhash_classify` —
@@ -1182,7 +1161,6 @@ def incremental_minhash_report(
         num_hashes,
         bands,
         threshold,
-        hash_mode,
         standing_bands,
     )
     return (
@@ -1384,7 +1362,6 @@ def near_dup_pairs(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """The shared near-dup pair SOURCE for every pair-consuming operator
     (keep-best canonical dedup, leakage-safe splits, funnel attribution,
@@ -1413,7 +1390,7 @@ def near_dup_pairs(
     if pair_source == "minhash":
         return minhash_dedup_pairs(
             df, id_col, text_col, n=n, num_hashes=num_hashes,
-            bands=bands, threshold=threshold, hash_mode=hash_mode,
+            bands=bands, threshold=threshold,
         )
     if pair_source == "jaccard":
         return jaccard_pairs(df, id_col, text_col, n=n, threshold=threshold).select(
@@ -1486,7 +1463,6 @@ def canonical_dedup(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Keep-best canonical dedup END TO END: resolve the near-dup pair
     set (:func:`near_dup_pairs` — MinHash-LSH by DEFAULT, exact Jaccard
@@ -1501,7 +1477,6 @@ def canonical_dedup(
     p = near_dup_pairs(
         df, id_col, text_col, pairs=pairs, pair_source=pair_source,
         n=n, threshold=threshold, num_hashes=num_hashes, bands=bands,
-        hash_mode=hash_mode,
     ).select("doc_a", "doc_b")
     return canonical_keep_best(df, p, id_col, score_col)
 
@@ -1517,7 +1492,6 @@ def dedup_threshold_curve(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Dedup-savings threshold curve in ONE pair pass: pairs are
     generated once at the LOOSEST candidate threshold
@@ -1536,7 +1510,6 @@ def dedup_threshold_curve(
     jp = near_dup_pairs(
         df, id_col, text_col, pairs=pairs, pair_source=pair_source,
         n=n, threshold=lo, num_hashes=num_hashes, bands=bands,
-        hash_mode=hash_mode,
     ).select(
         "doc_a", "doc_b", F.round(col("jaccard") + lit(1e-9), 6).alias("j")
     ).transform(pin)
@@ -1573,7 +1546,6 @@ def near_dup_gate_audit(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
     max_source_units: int | None = AUDIT_SOURCE_CAP_UNITS,
 ) -> DataFrame:
     """Candidate-generator quality audit: precision AND recall of the
@@ -1618,7 +1590,7 @@ def near_dup_gate_audit(
     truth = jaccard_pairs(
         df, id_col, text_col, n=n, threshold=threshold
     ).select("doc_a", "doc_b")
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, hash_mode)
+    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes)
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
     n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
     n_cand = cand.agg(F.count("*").cast("long").alias("n_candidates"))
@@ -1859,7 +1831,7 @@ def bbit_calibration(
     from ..functions.scalar import rnd
 
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, "md5")
+    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes)
     cands = lsh_candidate_pairs(sigs, bands, rows_per_band)
     packed = sigs.select(
         "doc", "signature", bbit_pack(col("signature"), num_hashes, b).alias("packed")

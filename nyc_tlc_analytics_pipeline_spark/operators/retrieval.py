@@ -379,7 +379,7 @@ def hard_negatives(
 
     # conservative near-dup exclusion: the anchors' banded signatures
     # probed against the corpus band index (raw gate, no verify)
-    sigs_c = _dedup.minhash_signatures(df, id_col, text_col, n, num_hashes, "md5")
+    sigs_c = _dedup.minhash_signatures(df, id_col, text_col, n, num_hashes)
     sigs_a = sigs_c.join(
         anchors.select(col(id_col).alias("doc")), "doc", "left_semi"
     )

@@ -825,7 +825,6 @@ def hashed_cosine_calibration(
     threshold: float = 0.05,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Representation-calibration report: near-dup pairs bucketed by
     their n-gram Jaccard, each bucket's mean/min cosine between the
@@ -851,7 +850,6 @@ def hashed_cosine_calibration(
     jp = dedup.near_dup_pairs(
         docs, id_col, text_col, pairs=pairs, pair_source=pair_source,
         n=n, threshold=threshold, num_hashes=num_hashes, bands=bands,
-        hash_mode=hash_mode,
     ).select("doc_a", "doc_b", rnd("jaccard", 6).alias("jaccard"))
     a = hv.select(col(id_col).alias("doc_a"), "bucket", col("val").alias("va"))
     b = hv.select(col(id_col).alias("doc_b"), "bucket", col("val").alias("vb"))

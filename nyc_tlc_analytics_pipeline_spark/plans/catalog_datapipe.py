@@ -577,7 +577,7 @@ ORDER BY doc_a, doc_b
 def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(
-        docs, "doc_id", "text", n=3, threshold=_Q25_THRESHOLD, hash_mode="md5"
+        docs, "doc_id", "text", n=3, threshold=_Q25_THRESHOLD
     )
     return pairs.withColumn("jaccard", rnd("jaccard", 6)).orderBy("doc_a", "doc_b")
 
@@ -627,8 +627,7 @@ ORDER BY doc_a, doc_b
 def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_near_pairs(
-        docs, "doc_id", "text", bits=32, prefix_bits=12, max_hamming=6,
-        hash_mode="md5",
+        docs, "doc_id", "text", bits=32, prefix_bits=12, max_hamming=6
     ).orderBy("doc_a", "doc_b")
 
 
@@ -8161,8 +8160,8 @@ banded AS (
 
 
 def _minhash_pair_ctes(threshold: float) -> str:
-    """DuckDB twin of ``dedup.minhash_dedup_pairs(hash_mode='md5',
-    num_hashes=16, bands=4)`` over a (doc_id, shingle) CTE named ``sh``
+    """DuckDB twin of ``dedup.minhash_dedup_pairs(num_hashes=16,
+    bands=4)`` over a (doc_id, shingle) CTE named ``sh``
     — the q28 oracle chain, parameterized so every MinHash-mode
     production registration shares one replay.  Emits CTEs
     mh/sig/banded/cand/docsh and ``mpairs`` = (doc_a, doc_b, j) with
@@ -10237,7 +10236,7 @@ def q161(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dedup.near_dup_gate_audit(
         sample, "doc_id", "text", n=3, threshold=_Q25_THRESHOLD,
-        num_hashes=16, bands=4, hash_mode="md5",
+        num_hashes=16, bands=4,
     )
 
 

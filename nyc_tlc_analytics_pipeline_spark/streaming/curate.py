@@ -17,11 +17,10 @@ Per-batch cost is the run_incremental shape measured at 100× standing
 bigram model FIXED to the base pool (the CCNet reference-model posture
 — micro-batches must not drift the judge).
 
-Exactly-once across at-least-once foreachBatch replays: every store
-table commits a batch under its idempotency tag, and a batch stands
-only once its ``docs`` commit exists, so a replayed batch never
-classifies against its own survivors and commits only what its first
-attempt left missing.
+Runs on :func:`~.events.for_each_batch` (its docstring states the
+exactly-once rule): every store table commits a batch under its tag,
+and :meth:`IncrementStore.standing` leaves out the batch being
+classified.
 """
 
 from __future__ import annotations
@@ -29,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import col
 
-from ..core.pins import releasing
 from ..curate import IncrementStore
 from ..operators import curation
+from .events import for_each_batch
 
 
 def run_streaming_curate(
@@ -56,18 +55,9 @@ def run_streaming_curate(
     duplicate_corpus / duplicate_batch / kept) to ``attribution``, the
     appended curated docs (segment-rebuilt) to ``docs``, and their LSH
     band and segment-hash slices, which later batches probe."""
-    spark = doc_stream.sparkSession
-    store = IncrementStore(spark, base_dir, store_dir)
+    store = IncrementStore(doc_stream.sparkSession, base_dir, store_dir)
 
-    # releasing(): the gate pins (gated/scored/kept in
-    # incremental_gate_attribution) are re-created per micro-batch —
-    # without release a long-running query accumulates one cache-entry
-    # set per batch (ADVICE r13)
-    @releasing
-    def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tag = f"batch-{batch_id:020d}"
+    def classify_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
         standing, lm_stats, standing_bands, seg_index = store.standing(tag)
 
         # a micro-batch is consumed by several plan branches — pin it
@@ -92,11 +82,4 @@ def run_streaming_curate(
         store.append(store.attribution, attr, tag)
         store.commit(tag, rebuilt, seg_len, n, num_hashes, bands)
 
-    (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(classify_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(doc_stream, checkpoint_path, classify_batch)

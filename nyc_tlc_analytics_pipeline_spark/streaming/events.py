@@ -17,9 +17,14 @@ Design:
   equivalent of the batch lag+running-sum plan in catalog q19.
 - Sinks in tests use ``format("memory")`` + ``trigger(availableNow=True)``
   so a bounded directory drains deterministically.
+- Side-effecting sinks — the incremental gold here, the near-dup and
+  curation ingests in ``near_dup.py`` and ``curate.py`` — all run on
+  :func:`for_each_batch`, which states their exactly-once rule.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..core.pins import releasing
 
 EVENT_STREAM_SCHEMA = StructType(
     [
@@ -236,6 +243,42 @@ def run_to_memory_sink(
     q.awaitTermination()
 
 
+def for_each_batch(
+    stream: DataFrame,
+    checkpoint_path: str,
+    fn: Callable[[DataFrame, str, int], None],
+) -> None:
+    """Drain ``stream`` (availableNow) through ``fn(batch_df, tag,
+    batch_id)``, once per non-empty micro-batch; ``tag`` is
+    ``batch-<20-digit id>``.  Pins (core.pins) are released after each
+    batch, so a long-running query never accumulates one cache-entry set
+    per batch.
+
+    The exactly-once rule of every face built on it: foreachBatch is
+    only at-least-once for side effects — a crash between a batch's
+    writes and the checkpoint commit re-delivers the batch with the same
+    id.  So ``fn`` writes only ``ManifestTable`` commits under ``tag``
+    (a replay finds its tag committed and the append is a no-op), and
+    whatever it reads back from its own stores is the rows of strictly
+    EARLIER batches: a replay that finds some tables committed and
+    others not classifies exactly as the first attempt did and commits
+    only what that attempt left missing."""
+
+    @releasing
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            fn(batch_df, f"batch-{batch_id:020d}", batch_id)
+
+    (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(run_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_incremental_gold(
     raw_stream: DataFrame,
     gold_path: str,
@@ -244,24 +287,21 @@ def run_incremental_gold(
     keys: list[str],
     merge_spec: dict[str, str],
 ) -> None:
-    """foreachBatch sink that maintains a PARTIAL-form gold aggregate
-    incrementally: each raw micro-batch is aggregated to the gold shape
-    INSIDE the sink (``to_partial(batch_df)`` — additive components
-    only, the ``operators.incremental`` contract) and merged into the
-    stored gold by key, never re-scanning event history.  Aggregating
-    inside the sink — rather than streaming an update-mode aggregate in
-    — matters: update-mode emits CUMULATIVE per-key rows, which a sum
-    merge would double-count.
+    """:func:`for_each_batch` sink that maintains a PARTIAL-form gold
+    aggregate incrementally: each raw micro-batch is aggregated to the
+    gold shape INSIDE the sink (``to_partial(batch_df)`` — additive
+    components only, the ``operators.incremental`` contract) and merged
+    into the stored gold by key, never re-scanning event history.
+    Aggregating inside the sink — rather than streaming an update-mode
+    aggregate in — matters: update-mode emits CUMULATIVE per-key rows,
+    which a sum merge would double-count.
 
     This is the streaming face of ``incremental.merge_partials``: batch
     backfill and streaming refresh produce identical gold because both
     are the same associative merge.  The gold store is a
-    ``sources.manifest.ManifestTable`` — that, not the checkpoint alone,
-    is what makes the refresh exactly-once: foreachBatch is only
-    at-least-once for side effects (a crash between the gold write and
-    the checkpoint commit replays the batch), so each batch commits
-    with an idempotency tag and a replayed batch that finds its tag
-    already committed is a no-op.  A crash mid-write leaves an
+    ``sources.manifest.ManifestTable``; each batch's merge commits one
+    version under the batch tag, so a replayed batch finds its tag and
+    is a no-op.  A crash mid-write leaves an
     uncommitted staging dir (invisible; vacuumable) with the previous
     snapshot intact — a plain ``mode("overwrite")`` parquet gold would
     instead delete history before writing and a mid-write crash would
@@ -275,11 +315,8 @@ def run_incremental_gold(
 
     spark = raw_stream.sparkSession
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def merge_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
         mt = ManifestTable(spark, gold_path)
-        tag = f"batch-{batch_id:020d}"
         snap = mt.snapshot()
         if tag in snap["tags"]:
             return  # replayed batch: already merged into a committed gold
@@ -294,11 +331,4 @@ def run_incremental_gold(
         # driver-side materialization needed
         mt.overwrite(merged, tag=tag)
 
-    (
-        raw_stream.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(raw_stream, checkpoint_path, merge_batch)

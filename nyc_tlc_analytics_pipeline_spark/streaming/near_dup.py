@@ -1,35 +1,52 @@
-"""Streaming near-duplicate ingest: the streaming face of the
-incremental MinHash refresh (``dedup.incremental_minhash_classify``,
-conformance q147).
+"""Streaming near-duplicate ingest: the streaming faces of the
+incremental refreshes — MinHash (``dedup.incremental_minhash_classify``,
+conformance q147), embedding (q163) and segment (q180) dedup — plus the
+IVF index ingest (q165).
 
 Each document micro-batch is classified against the ACCUMULATED survivor
 store — dup_vs_corpus / dup_in_batch / new — and only the survivors
-(status ``new``) join the store and its persisted (doc, band, bucket)
-LSH index, so the index a batch probes is exactly the set of documents
-an offline keep-first dedup would have kept at that point in the
-arrival order.  Per-batch cost is O(batch + candidate matches): the
-probe is one (band, bucket) equi-join against the index and standing
-text is only shingled for candidates (left-semi prune), never the whole
-store — the property that lets a 100 TB corpus ingest continuously
-instead of re-pairing weekly.
+(status ``new``) join the store and its persisted probe index, so the
+index a batch probes is exactly the set of documents an offline
+keep-first dedup would have kept at that point in the arrival order.
+Per-batch cost is O(batch + candidate matches): the probe is one
+equi-join against the index and standing text is only read for
+candidates (left-semi prune), never the whole store — the property that
+lets a 100 TB corpus ingest continuously instead of re-pairing weekly.
 
-Exactly-once across at-least-once foreachBatch replays follows
-``run_incremental_gold``'s manifest discipline: each of the three
-stores (statuses, survivor docs, band index) commits the batch under an
-idempotency tag, and the standing snapshot is filtered to
-``__batch_id < current`` so a replay that finds some tables committed
-and others not can never classify a batch against its own survivors.
+Every face runs on :func:`~.events.for_each_batch`, whose docstring
+states the exactly-once rule.  Here it takes two helpers: every store
+row carries its ``__batch_id`` (:func:`_commit`), and a batch probes
+only the rows of strictly earlier batches (:func:`_earlier`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col, lit
 
-from ..core.pins import releasing
 from ..operators import dedup
 from ..sources.manifest import ManifestTable
+from .events import for_each_batch
+
+
+def _earlier(path: str, batch_id: int, *cols: str) -> DataFrame | None:
+    """``cols`` of the rows earlier batches committed to the manifest
+    table at ``path``, or None while the table is empty.  A replayed
+    batch never meets its own rows, and a table its first attempt left
+    empty reads as "no standing rows"."""
+    table = ManifestTable(SparkSession.active(), path)
+    if not table.snapshot()["dirs"]:
+        return None
+    return table.read().filter(col("__batch_id") < lit(batch_id)).select(*cols)
+
+
+def _commit(tag: str, batch_id: int, tables: list[tuple[str, DataFrame]]) -> None:
+    """Append each ``(path, df)``, in order, under ``tag`` with every row
+    tagged by its ``__batch_id``."""
+    for path, df in tables:
+        ManifestTable(df.sparkSession, path).append(
+            df.withColumn("__batch_id", lit(batch_id)), tag=tag
+        )
 
 
 def run_streaming_near_dup(
@@ -51,67 +68,33 @@ def run_streaming_near_dup(
     its batch id and status; ``docs_path`` — the survivor store (the
     deduplicated corpus); ``bands_path`` — the survivors' LSH band
     index, the only thing future batches probe."""
-    spark = doc_stream.sparkSession
 
-    @releasing  # drop the dedup pins (core.pins) after each micro-batch
-    def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tag = f"batch-{batch_id:020d}"
-        status_t = ManifestTable(spark, status_path)
-        docs_t = ManifestTable(spark, docs_path)
-        bands_t = ManifestTable(spark, bands_path)
-
-        # replay-safe standing snapshot: strictly earlier batches only
-        snap = docs_t.snapshot()
-        if snap["dirs"]:
-            standing = docs_t.read(version=snap["version"]).filter(
-                col("__batch_id") < lit(batch_id)
-            )
-            standing_bands = (
-                ManifestTable(spark, bands_path)
-                .read()
-                .filter(col("__batch_id") < lit(batch_id))
-                .select("doc", "band", "bucket")
-            )
-        else:
-            standing = batch_df.limit(0)
-            standing_bands = None
-
+    def classify_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
+        standing = _earlier(docs_path, batch_id, *batch_df.columns)
         # a micro-batch is small by construction; classifying it uses it
         # several times (bands, shingles, within-batch pairs) — pin it
         batch_df = batch_df.localCheckpoint(eager=True)
         st = dedup.incremental_minhash_classify(
             batch_df,
-            standing.drop("__batch_id"),
+            batch_df.limit(0) if standing is None else standing,
             id_col,
             text_col,
             n,
             num_hashes,
             bands,
             threshold,
-            standing_bands=standing_bands,
-        ).withColumn("__batch_id", lit(batch_id))
-        st = st.localCheckpoint(eager=True)
-
-        status_t.append(st.select(id_col, "status", "__batch_id"), tag=tag)
+            standing_bands=_earlier(bands_path, batch_id, "doc", "band", "bucket"),
+        ).localCheckpoint(eager=True)
         survivors = st.filter(col("status") == "new").drop("status")
-        docs_t.append(survivors, tag=tag)
-        bands_t.append(
-            dedup.lsh_band_table(
+        _commit(tag, batch_id, [
+            (status_path, st.select(id_col, "status")),
+            (docs_path, survivors),
+            (bands_path, dedup.lsh_band_table(
                 survivors, id_col, text_col, n, num_hashes, bands
-            ).withColumn("__batch_id", lit(batch_id)),
-            tag=tag,
-        )
+            )),
+        ])
 
-    (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(classify_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(doc_stream, checkpoint_path, classify_batch)
 
 
 def compact_near_dup_store(
@@ -131,8 +114,8 @@ def compact_near_dup_store(
     commit aborts the compaction, never loses rows; idempotency tags
     survive, so replay safety is untouched).
 
-    The ``__batch_id`` column rides through the rewrite, so the
-    replay-safe ``< current batch`` snapshot filter keeps working on a
+    The ``__batch_id`` column rides through the rewrite, so
+    :func:`_earlier` keeps reading only earlier batches from a
     compacted store.  Returns {table: new_version_or_None} — None means
     the CAS lost to a concurrent writer (retry at a quiet moment)."""
     out: dict[str, int | None] = {}
@@ -172,66 +155,30 @@ def run_streaming_embedding_near_dup(
     have kept at that point in arrival order.  Per-batch cost matches
     the q163 contract: one bucket equi-join against the index, standing
     VECTORS fetched for candidate matches only (left-semi prune inside
-    the classifier).  Replay idempotency follows the text twin: three
-    manifest tables committed under one batch tag, standing snapshot
-    filtered to strictly earlier batches."""
-    spark = vec_stream.sparkSession
+    the classifier)."""
 
-    @releasing  # drop the dedup pins (core.pins) after each micro-batch
-    def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tag = f"batch-{batch_id:020d}"
-        status_t = ManifestTable(spark, status_path)
-        vecs_t = ManifestTable(spark, vecs_path)
-        buckets_t = ManifestTable(spark, buckets_path)
-
-        # replay-safe standing snapshot: strictly earlier batches only
-        snap = vecs_t.snapshot()
-        if snap["dirs"]:
-            standing = vecs_t.read(version=snap["version"]).filter(
-                col("__batch_id") < lit(batch_id)
-            )
-            standing_buckets = (
-                ManifestTable(spark, buckets_path)
-                .read()
-                .filter(col("__batch_id") < lit(batch_id))
-                .select("doc", "bucket")
-            )
-        else:
-            standing = batch_df.limit(0)
-            standing_buckets = None
-
+    def classify_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
+        standing = _earlier(vecs_path, batch_id, *batch_df.columns)
         batch_df = batch_df.localCheckpoint(eager=True)
         st = dedup.incremental_embedding_classify(
             batch_df,
-            standing.drop("__batch_id"),
+            batch_df.limit(0) if standing is None else standing,
             planes,
             threshold,
             id_col,
             vec_col,
-            standing_buckets=standing_buckets,
-        ).withColumn("__batch_id", lit(batch_id))
-        st = st.localCheckpoint(eager=True)
-
-        status_t.append(st.select(id_col, "status", "__batch_id"), tag=tag)
+            standing_buckets=_earlier(buckets_path, batch_id, "doc", "bucket"),
+        ).localCheckpoint(eager=True)
         survivors = st.filter(col("status") == "new").drop("status")
-        vecs_t.append(survivors, tag=tag)
-        buckets_t.append(
-            dedup.embedding_bucket_table(
+        _commit(tag, batch_id, [
+            (status_path, st.select(id_col, "status")),
+            (vecs_path, survivors),
+            (buckets_path, dedup.embedding_bucket_table(
                 survivors, planes, id_col, vec_col
-            ).withColumn("__batch_id", lit(batch_id)),
-            tag=tag,
-        )
+            )),
+        ])
 
-    (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(classify_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(vec_stream, checkpoint_path, classify_batch)
 
 
 def run_streaming_ivf_ingest(
@@ -257,28 +204,14 @@ def run_streaming_ivf_ingest(
     vs fresh batches is the retrain alarm."""
     from ..operators.similarity import assign_ivf_bucket
 
-    spark = vec_stream.sparkSession
-
-    @releasing  # drop the dedup pins (core.pins) after each micro-batch
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = ManifestTable(spark, index_path)
-        idx.append(
-            batch_df.withColumn(
+    def ingest_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
+        _commit(tag, batch_id, [
+            (index_path, batch_df.withColumn(
                 "cid", assign_ivf_bucket(vec_col, centroids)
-            ).withColumn("__batch_id", lit(batch_id)),
-            tag=f"batch-{batch_id:020d}",
-        )
+            )),
+        ])
 
-    (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(vec_stream, checkpoint_path, ingest_batch)
 
 
 def run_streaming_segment_dedup(
@@ -298,65 +231,32 @@ def run_streaming_segment_dedup(
     index a batch probes is exactly what an offline keep-first pass
     over the arrival order would have kept.  Per-batch cost is
     O(batch segments + matches): the probe is one hash equi-join, the
-    standing corpus' text is never re-read.
+    standing corpus' text is never re-read."""
 
-    Exactly-once follows ``run_streaming_near_dup``'s manifest
-    discipline: both stores commit under the batch idempotency tag and
-    the standing snapshot filters to ``__batch_id < current``, so a
-    replay can never classify a batch against its own appends."""
-    spark = doc_stream.sparkSession
-
-    @releasing  # drop the dedup pins (core.pins) after each micro-batch
-    def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tag = f"batch-{batch_id:020d}"
-        status_t = ManifestTable(spark, status_path)
-        index_t = ManifestTable(spark, index_path)
-
-        snap = index_t.snapshot()
-        if snap["dirs"]:
-            standing_index = (
-                index_t.read(version=snap["version"])
-                .filter(col("__batch_id") < lit(batch_id))
-                .select("seg_hash", "first_doc", "first_idx")
+    def classify_batch(batch_df: DataFrame, tag: str, batch_id: int) -> None:
+        standing_index = _earlier(
+            index_path, batch_id, "seg_hash", "first_doc", "first_idx"
+        )
+        if standing_index is None:
+            standing_index = batch_df.sparkSession.createDataFrame(
+                [], "seg_hash string, first_doc long, first_idx int"
             )
-        else:
-            standing_index = (
-                batch_df.sparkSession.createDataFrame(
-                    [], "seg_hash string, first_doc long, first_idx int"
-                )
-            )
-
         batch_df = batch_df.localCheckpoint(eager=True)
         st = dedup.incremental_segment_classify(
             batch_df, standing_index, id_col, text_col, seg_len,
             group_col=None,  # the stores key on (id, seg_idx) only — any
             # (id, text) stream works, no lang column required
-        ).withColumn("__batch_id", lit(batch_id))
-        st = st.localCheckpoint(eager=True)
-
-        status_t.append(
-            st.select(id_col, "seg_idx", "status", "__batch_id"), tag=tag
-        )
-        index_t.append(
-            st.filter(col("status") == "new").select(
+        ).localCheckpoint(eager=True)
+        _commit(tag, batch_id, [
+            (status_path, st.select(id_col, "seg_idx", "status")),
+            (index_path, st.filter(col("status") == "new").select(
                 col("__h").alias("seg_hash"),
                 col(id_col).alias("first_doc"),
                 col("seg_idx").alias("first_idx"),
-                "__batch_id",
-            ),
-            tag=tag,
-        )
+            )),
+        ])
 
-    (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(classify_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    for_each_batch(doc_stream, checkpoint_path, classify_batch)
 
 
 def compact_ivf_manifest_to_index(

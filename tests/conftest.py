@@ -66,6 +66,20 @@ def spark_jobs(spark):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def forget_last_commit(checkpoint_path: str) -> int:
+    """Delete a streaming checkpoint's newest ``commits/<n>`` file and its
+    ``.<n>.crc``: the state a crash between a foreachBatch's writes and
+    the checkpoint commit leaves, so the next run on the checkpoint
+    re-delivers batch n under the same id.  Returns n."""
+    commits = os.path.join(checkpoint_path, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(n)))
+    crc = os.path.join(commits, f".{n}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    return n
+
+
 # the session's cores and shuffle partitions: the CPUs this process may
 # run on, as bench.py and scripts/sweep.py size theirs
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))

@@ -235,7 +235,7 @@ def test_near_dup_gate_audit_consistency(spark):
             docs, "doc_id", "text", n=3, threshold=0.5
         ).collect()
     }
-    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 3, 16, "md5")
+    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 3, 16)
     cand = {
         (x.doc_a, x.doc_b)
         for x in dedup.lsh_candidate_pairs(sigs, 4, 4).collect()

@@ -84,7 +84,7 @@ def test_gate_audit_sampled_source_passes_budget(spark):
             sample, "doc_id", "text", n=3, threshold=0.5
         ).collect()
     }
-    sigs = dedup.minhash_signatures(sample, "doc_id", "text", 3, 16, "md5")
+    sigs = dedup.minhash_signatures(sample, "doc_id", "text", 3, 16)
     cand = {
         (x.doc_a, x.doc_b)
         for x in dedup.lsh_candidate_pairs(sigs, 4, 4).collect()
@@ -417,7 +417,7 @@ def test_bbit_pack_matches_python(spark):
     from nyc_tlc_analytics_pipeline_spark.operators import dedup
 
     docs = load_table(spark, C.SF_SMOKE, "documents").limit(40)
-    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 3, 16, "md5")
+    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 3, 16)
     rows = sigs.select(
         "doc", "signature", dedup.bbit_pack(F.col("signature"), 16, 1).alias("pk")
     ).collect()
@@ -655,7 +655,7 @@ def test_hard_negatives_excludes_anchor_and_near_dups(spark):
     anchors = docs.filter((col("doc_id") % 25 == 0) & (col("doc_id") < 500))
     out = retrieval.hard_negatives(docs, anchors, k=3, m_terms=8).collect()
     assert out
-    sigs = dd.minhash_signatures(docs, "doc_id", "text", 3, 16, "md5")
+    sigs = dd.minhash_signatures(docs, "doc_id", "text", 3, 16)
     bb = dd.banded_buckets(sigs, 4, 4)
     buckets = {}
     for r in bb.collect():

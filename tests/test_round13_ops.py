@@ -24,7 +24,10 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     """Batch 2 repeating batch 1's novel content must classify it
     duplicate_corpus (the standing pool now includes increment b1) and
     append nothing for it — the append-only-novel contract across
-    increments; a genuinely new doc in batch 2 still lands."""
+    increments; a genuinely new doc in batch 2 still lands.  Each batch's
+    hand-off parquet (``scratch/inc_<tag>/``) is gone once it commits."""
+    import os
+
     from nyc_tlc_analytics_pipeline_spark.curate import IncrementStore
 
     job = curate_job_copy  # completed base run (session fixture copy)
@@ -53,6 +56,7 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     s1 = job.run_incremental(b1, batch_tag="b1")
     assert s1["gate"].get("kept", 0) == 1
     assert s1["appended"]["n_docs_appended"] == 1
+    assert not os.path.exists(job.path("scratch/inc_b1"))
 
     # batch 2: novel1 AGAIN (new doc_id) + a genuinely new novel2
     b2 = _mk_batch(
@@ -60,6 +64,7 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
         [(920001, "web", "en", novel1), (920002, "web", "en", novel2)],
     )
     s2 = job.run_incremental(b2, batch_tag="b2")
+    assert not os.path.exists(job.path("scratch/inc_b2"))
     assert s2["gate"].get("duplicate_corpus", 0) == 1  # novel1 vs inc b1
     assert s2["gate"].get("kept", 0) == 1              # novel2
     inc2 = store.batch(store.docs, "b2")
@@ -71,6 +76,7 @@ def test_curate_incremental_multi_batch(spark, tmp_path, curate_job_copy):
     # 'kept' for b1, not a dup of itself)
     again = job.run_incremental(b1, batch_tag="b1")
     assert again["appended"] == s1["appended"]
+    assert not os.path.exists(job.path("scratch/inc_b1"))
     assert store.batch(store.docs, "b1").count() == 1
 
 

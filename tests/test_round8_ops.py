@@ -13,7 +13,7 @@ from pyspark.sql.functions import col, lit
 from nyc_tlc_analytics_pipeline_spark.operators import dedup, similarity, train
 from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
 
-from .conftest import SF_SMOKE, full_tier
+from .conftest import SF_SMOKE, forget_last_commit, full_tier
 
 
 # ---------------------------------------------------------------------------
@@ -358,10 +358,10 @@ def test_kneser_ney_probabilities_sum_to_at_most_one(spark):
 # ---------------------------------------------------------------------------
 
 
-def _write_doc_batches(spark, docs, src, n_files=3):
-    """Split documents into n deterministic slices, one parquet FILE per
-    slice with strictly increasing mtimes so the file stream processes
-    them as ordered micro-batches."""
+def _write_doc_batches(spark, docs, src, n_files=3, id_col="doc_id"):
+    """Split documents into n deterministic slices (by ``id_col``), one
+    parquet FILE per slice with strictly increasing mtimes so the file
+    stream processes them as ordered micro-batches."""
     import glob
     import os
     import shutil
@@ -370,7 +370,7 @@ def _write_doc_batches(spark, docs, src, n_files=3):
     os.makedirs(src, exist_ok=True)
     slices = []
     for k in range(n_files):
-        sl = docs.filter(col("doc_id") % n_files == k)
+        sl = docs.filter(col(id_col) % n_files == k)
         slices.append(sl)
         tmp = f"{src}__tmp{k}"
         sl.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -386,7 +386,8 @@ def _write_doc_batches(spark, docs, src, n_files=3):
 def test_streaming_near_dup_matches_sequential_batches(spark, docs, tmp_path):
     """Draining the doc directory through the streaming near-dup ingest
     equals the sequential batch chain (classify each slice against the
-    accumulated survivors), and a same-checkpoint re-run is a no-op."""
+    accumulated survivors), a same-checkpoint re-run is a no-op, and so
+    is a re-delivered last batch."""
     from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
     from nyc_tlc_analytics_pipeline_spark.streaming.near_dup import (
         run_streaming_near_dup,
@@ -442,6 +443,92 @@ def test_streaming_near_dup_matches_sequential_batches(spark, docs, tmp_path):
     v_before = ManifestTable(spark, status_p).latest_version()
     run()
     assert ManifestTable(spark, status_p).latest_version() == v_before
+
+    # crash replay: without its checkpoint commit the last batch is
+    # re-delivered under the same id and every store stays as it was
+    def rows(path):
+        return sorted(map(tuple, ManifestTable(spark, path).read().collect()))
+
+    before = {p: rows(p) for p in (status_p, docs_p, bands_p)}
+    forget_last_commit(ckpt)
+    run()
+    assert {p: rows(p) for p in before} == before
+    for p in before:
+        tags = [e["tag"] for e in ManifestTable(spark, p).history()]
+        assert len(tags) == len(set(tags)) == len(slices)
+
+
+@pytest.mark.parametrize("face", ["text", "embedding"])
+def test_streaming_near_dup_restarts_after_crash_before_index_commit(
+    spark, tmp_path, monkeypatch, face
+):
+    """A crash after the first batch's survivor commit and before its
+    index commit (bands / buckets) must not wedge the face: the restart
+    on the same checkpoint re-delivers the batch, reads the still-empty
+    index as "no standing index" and completes, and each of the three
+    stores holds exactly one commit per batch tag."""
+    import nyc_tlc_analytics_pipeline_spark.plans.catalog_datapipe as cd
+    from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
+    from nyc_tlc_analytics_pipeline_spark.streaming import near_dup
+
+    if face == "text":
+        data = load_table(spark, SF_SMOKE, "documents").limit(40)
+        id_col = "doc_id"
+    else:
+        data = (
+            load_table(spark, SF_SMOKE, "embeddings")
+            .select("vec_id", "embedding")
+            .limit(40)
+        )
+        id_col = "vec_id"
+    src = str(tmp_path / "src")
+    _write_doc_batches(spark, data, src, n_files=2, id_col=id_col)
+    status_p, store_p, index_p, ckpt = (
+        str(tmp_path / t) for t in ("status", "store", "index", "ckpt")
+    )
+
+    def run():
+        stream = (
+            spark.readStream.schema(data.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        if face == "text":
+            near_dup.run_streaming_near_dup(
+                stream, status_p, store_p, index_p, ckpt
+            )
+        else:
+            near_dup.run_streaming_embedding_near_dup(
+                stream, status_p, store_p, index_p, ckpt,
+                planes=cd._PLANES_8x64, threshold=0.3,
+            )
+
+    real_append = ManifestTable.append
+    crashed = []
+
+    def append_or_crash(self, df, tag=None, **kw):
+        if self.path == index_p and not crashed:
+            crashed.append(tag)
+            raise RuntimeError("crash before the index commit")
+        return real_append(self, df, tag=tag, **kw)
+
+    monkeypatch.setattr(ManifestTable, "append", append_or_crash)
+    with pytest.raises(Exception):
+        run()
+    assert crashed == ["batch-00000000000000000000"]
+    assert ManifestTable(spark, store_p).snapshot()["dirs"]
+    assert not ManifestTable(spark, index_p).snapshot()["dirs"]
+
+    run()  # the restart completes
+    want = {f"batch-{b:020d}" for b in range(2)}
+    for p in (status_p, store_p, index_p):
+        tags = [e["tag"] for e in ManifestTable(spark, p).history()]
+        assert len(tags) == len(set(tags)) and set(tags) == want
+    status_ids = [r[0] for r in ManifestTable(spark, status_p).read().select(id_col).collect()]
+    assert sorted(status_ids) == sorted(r[0] for r in data.select(id_col).collect())
+    store_ids = {r[0] for r in ManifestTable(spark, store_p).read().select(id_col).collect()}
+    index_ids = {r.doc for r in ManifestTable(spark, index_p).read().collect()}
+    assert index_ids == store_ids
 
 
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from nyc_tlc_analytics_pipeline_spark.streaming.events import (
     sliding_value_stream,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, forget_last_commit
 
 
 @pytest.fixture(scope="module")
@@ -247,17 +247,24 @@ def test_incremental_gold_matches_batch_and_is_exactly_once(spark, stream_dir, t
         for r in ManifestTable(spark, gold).read().collect()
     }
     assert again == expected
-    # crash-replay simulation: re-merging an already-committed batch id
-    # must be a tag-skip no-op (foreachBatch is at-least-once; the
-    # manifest tag is what makes the merge exactly-once)
-    from nyc_tlc_analytics_pipeline_spark.streaming.events import (
-        run_incremental_gold as _rig,
-    )
-
+    # crash replay: with the last batch's checkpoint commit gone, the
+    # re-run re-delivers that batch under the same id; its manifest tag
+    # is already committed, so the merge is a no-op (foreachBatch is
+    # at-least-once; the tag is what makes the merge exactly-once)
     mt = ManifestTable(spark, gold)
     v_before = mt.latest_version()
     committed = [e["tag"] for e in mt.history() if e.get("tag")]
     assert committed and all(t.startswith("batch-") for t in committed)
+    n = forget_last_commit(ckpt)
+    run()
+    assert os.path.exists(os.path.join(ckpt, "commits", str(n)))  # re-delivered
+    assert mt.latest_version() == v_before
+    replayed = {
+        r.event_type: (r.n_events, round(r.total_value, 6),
+                       round(r.min_value, 6), round(r.max_value, 6))
+        for r in mt.read().collect()
+    }
+    assert replayed == expected
 
 
 def test_late_data_beyond_watermark_is_dropped(spark, tmp_path):
