@@ -125,9 +125,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for every hash-checkable query."""
-    return {
-        name: QUERIES[name].oracle
-        for name in _ordered_names()
-        if QUERIES[name].oracle is not None
-    }
+    """DuckDB-runnable oracle SQL for every query."""
+    return {name: QUERIES[name].oracle for name in _ordered_names()}

@@ -13,7 +13,6 @@
     python -m nyc_tlc_analytics_pipeline_spark.cli explain q01_top_nations_by_revenue --run
     python -m nyc_tlc_analytics_pipeline_spark.cli curate --out data/shards
     python -m nyc_tlc_analytics_pipeline_spark.cli compact --table data/warehouse/bronze/raw_yellow
-    python -m nyc_tlc_analytics_pipeline_spark.cli diagnose-skew --table events.parquet --key user_id
 
 ``curate`` is the training-data extension verb (no reference analogue):
 rule-gate → decontaminate → mixture-rebalance → split → shard-write.
@@ -147,14 +146,6 @@ def main(argv: list[str] | None = None) -> int:
     df_.add_argument("--keys", default=None, help="comma-separated key columns")
     df_.add_argument("--limit", type=int, default=100)
 
-    sk = sub.add_parser(
-        "diagnose-skew",
-        help="per-key count distribution + skew factor for a parquet "
-        "table's join/agg key (the salting pre-flight; operators.skew)",
-    )
-    sk.add_argument("--table", required=True, help="parquet path")
-    sk.add_argument("--key", required=True, help="key column to diagnose")
-
     # training-data curation: the q55 funnel as a user verb, writing
     # dataloader-ready shards
     cu = sub.add_parser(
@@ -241,98 +232,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     dc.add_argument(
         "--pair-mode", default="minhash", choices=["minhash", "jaccard"]
-    )
-
-    tc = sub.add_parser(
-        "train-classifier",
-        help="train the quality-filter logistic classifier by "
-        "distributed full-batch GD over the document features "
-        "(operators.train.logreg_train); prints the per-step "
-        "weight/loss trajectory",
-    )
-    tc.add_argument(
-        "--sf-dir",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"),
-        help="dir containing documents.parquet",
-    )
-    tc.add_argument("--iters", type=int, default=4)
-    tc.add_argument("--lr", type=float, default=2.0)
-    tc.add_argument("--label-lang", default="en")
-
-    nr = sub.add_parser(
-        "neardup-refresh",
-        help="incremental near-dup refresh: classify a new batch "
-        "against the standing corpus via the MinHash band index "
-        "(operators.dedup.incremental_minhash_report); optionally "
-        "persist the standing band index partitioned by band",
-    )
-    nr.add_argument(
-        "--sf-dir",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"),
-        help="dir containing documents.parquet",
-    )
-    nr.add_argument(
-        "--batch-mod",
-        type=int,
-        default=3,
-        help="doc_id %% N == 0 forms the incoming batch",
-    )
-    nr.add_argument("--threshold", type=float, default=0.5)
-    nr.add_argument(
-        "--bands-out",
-        default=None,
-        help="if set, write the standing (doc, band, bucket) index "
-        "here partitioned by band and probe THAT instead of deriving "
-        "bands inline",
-    )
-
-    ej = sub.add_parser(
-        "estimate-join",
-        help="price a candidate equi-join from catalog sketches WITHOUT "
-        "scanning it: CM inner-product row-count estimate "
-        "(sketch.cms_join_size) + HLL inclusion-exclusion distinct-key "
-        "overlap (sketch.hll_overlap)",
-    )
-    ej.add_argument("--left", required=True, help="left parquet path")
-    ej.add_argument("--right", required=True, help="right parquet path")
-    ej.add_argument("--left-key", required=True)
-    ej.add_argument("--right-key", required=True)
-    ej.add_argument("--cms-width", type=int, default=512)
-    ej.add_argument("--hll-b", type=int, default=9)
-
-    ai = sub.add_parser(
-        "ann-index",
-        help="persisted IVF ANN index lifecycle: build (write_ivf_index, "
-        "bucket-partitioned dirs), append (frozen-centroid O(batch) "
-        "append), probe (partition-pruned top-k for a query vector id)",
-    )
-    ai.add_argument("action", choices=["build", "append", "probe"])
-    ai.add_argument("--index", required=True, help="index directory")
-    ai.add_argument("--vectors", required=True, help="vectors parquet path")
-    ai.add_argument("--centroids-from", help="training vectors parquet path "
-                    "(default: --vectors; ignored for append/probe, which "
-                    "REQUIRE it to pin the frozen centroid set)")
-    ai.add_argument("--id-col", default="vec_id")
-    ai.add_argument("--vec-col", default="embedding")
-    ai.add_argument("--k", type=int, default=16, help="centroid count")
-    ai.add_argument("--query-id", type=int, help="probe: vector id to query")
-    ai.add_argument("--top", type=int, default=10)
-    ai.add_argument("--n-probe", type=int, default=4)
-
-    ih = sub.add_parser(
-        "index-staleness",
-        help="IVF index health after incremental appends: per-centroid "
-        "resident-vs-append mean assigned-cosine and cos_drift (the "
-        "retrain alarm; operators.similarity.ivf_staleness_report)",
-    )
-    ih.add_argument("--resident", required=True, help="resident vectors parquet path")
-    ih.add_argument("--appended", required=True, help="appended vectors parquet path")
-    ih.add_argument("--id-col", default="vec_id")
-    ih.add_argument("--vec-col", default="embedding")
-    ih.add_argument("--k", type=int, default=16, help="frozen centroid count")
-    ih.add_argument(
-        "--alert", type=float, default=0.05,
-        help="cos_drift above this prints retrain=True",
     )
 
     dr = sub.add_parser(
@@ -592,12 +491,6 @@ def main(argv: list[str] | None = None) -> int:
             },
             indent=2, sort_keys=True, default=str,
         ))
-    elif args.command == "diagnose-skew":
-        from .operators.skew import skew_report
-
-        df = pl.spark.read.parquet(args.table)
-        row = skew_report(df, args.key, f"{args.table}:{args.key}").collect()[0]
-        print(json.dumps(row.asDict(), indent=2, sort_keys=True))
     elif args.command == "curate":
         from pyspark.sql import functions as F
 
@@ -720,170 +613,6 @@ def main(argv: list[str] | None = None) -> int:
                         "n_pairs": r.n_pairs, "n_removable": r.n_removable
                     }
                     for r in rows
-                },
-                indent=2,
-                sort_keys=True,
-            )
-        )
-    elif args.command == "train-classifier":
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import col, lit
-
-        from .functions.scalar import rnd
-        from .operators import rules as R
-        from .operators import text as T
-        from .operators import train
-        from .sources.testdata import load_table_parallel
-
-        docs = load_table_parallel(pl.spark, args.sf_dir, "documents")
-        toks = T.tokens("text")
-        feats = docs.select(
-            F.when(col("lang") == args.label_lang, lit(1.0))
-            .otherwise(lit(0.0))
-            .alias("y"),
-            rnd(F.coalesce(F.least(F.size(toks) / lit(200.0), lit(1.0)), lit(0.0)), 6).alias("f1"),
-            rnd(
-                F.coalesce(
-                    F.least(R.mean_token_length(toks) / lit(10.0), lit(1.0)),
-                    lit(0.0),
-                ),
-                6,
-            ).alias("f2"),
-            rnd(
-                F.coalesce(
-                    T.stopword_ratio("text", T.LANG_STOPWORDS["en"]), lit(0.0)
-                ),
-                6,
-            ).alias("f3"),
-            rnd(F.coalesce(T.punct_ratio("text"), lit(0.0)), 6).alias("f4"),
-        ).localCheckpoint(eager=True)
-        traj = train.logreg_train(
-            feats, ["f1", "f2", "f3", "f4"], "y", iters=args.iters, lr=args.lr
-        )
-        print(json.dumps(traj, indent=2))
-    elif args.command == "neardup-refresh":
-        from pyspark.sql.functions import col
-
-        from .operators import dedup
-        from .sources.testdata import load_table_parallel
-
-        docs = load_table_parallel(pl.spark, args.sf_dir, "documents")
-        batch = docs.filter(col("doc_id") % args.batch_mod == 0)
-        standing = docs.filter(col("doc_id") % args.batch_mod != 0)
-        standing_bands = None
-        if args.bands_out:
-            dedup.lsh_band_table(standing, "doc_id", "text").write.mode(
-                "overwrite"
-            ).partitionBy("band").parquet(args.bands_out)
-            standing_bands = pl.spark.read.parquet(args.bands_out).select(
-                "doc", "band", "bucket"
-            )
-        rows = dedup.incremental_minhash_report(
-            batch,
-            standing,
-            "doc_id",
-            "text",
-            "source",
-            threshold=args.threshold,
-            standing_bands=standing_bands,
-        ).collect()
-        print(
-            json.dumps(
-                {r.source: {k: r[k] for k in
-                            ("n_batch", "n_dup_vs_corpus", "n_dup_in_batch", "n_new")}
-                 for r in rows},
-                indent=2,
-                sort_keys=True,
-            )
-        )
-    elif args.command == "estimate-join":
-        from .operators import sketch
-
-        left = pl.spark.read.parquet(args.left)
-        right = pl.spark.read.parquet(args.right)
-        ca = sketch.cms_partials(left, args.left_key, d=4, w=args.cms_width)
-        cb = sketch.cms_partials(right, args.right_key, d=4, w=args.cms_width)
-        rows_est = sketch.cms_join_size(ca, cb).first()[0]
-        ha = sketch.hll_partials(left, args.left_key, [], b=args.hll_b)
-        hb = sketch.hll_partials(right, args.right_key, [], b=args.hll_b)
-        ov = sketch.hll_overlap(ha, hb, b=args.hll_b).first()
-        print(
-            json.dumps(
-                {
-                    "join_rows_estimate": rows_est,
-                    "distinct_left_keys": round(ov.distinct_a, 1),
-                    "distinct_right_keys": round(ov.distinct_b, 1),
-                    "distinct_key_overlap": round(ov.overlap_estimate, 1),
-                },
-                indent=2,
-                sort_keys=True,
-            )
-        )
-    elif args.command == "ann-index":
-        from .operators import similarity
-
-        vecs = pl.spark.read.parquet(args.vectors)
-        train = (
-            pl.spark.read.parquet(args.centroids_from)
-            if args.centroids_from
-            else vecs
-        )
-        cents = similarity.ivf_centroids(
-            train, k=args.k, id_col=args.id_col, vec_col=args.vec_col
-        )
-        if args.action == "build":
-            similarity.write_ivf_index(
-                vecs, args.index, cents, id_col=args.id_col, vec_col=args.vec_col
-            )
-            print(json.dumps({"built": args.index, "centroids": args.k}))
-        elif args.action == "append":
-            if not args.centroids_from:
-                raise SystemExit(
-                    "ann-index append requires --centroids-from (the frozen "
-                    "training set) — re-deriving centroids from the batch "
-                    "would silently fork the index"
-                )
-            similarity.append_ivf_index(
-                vecs, args.index, cents, id_col=args.id_col, vec_col=args.vec_col
-            )
-            print(json.dumps({"appended_to": args.index}))
-        else:
-            if args.query_id is None or not args.centroids_from:
-                raise SystemExit(
-                    "ann-index probe requires --query-id and --centroids-from"
-                )
-            from pyspark.sql import functions as F
-
-            qvec = [
-                float(x)
-                for x in vecs.filter(F.col(args.id_col) == args.query_id)
-                .select(args.vec_col)
-                .head()[0]
-            ]
-            rows = similarity.read_ivf_probe(
-                pl.spark, args.index, qvec, cents,
-                k=args.top, n_probe=args.n_probe,
-                id_col=args.id_col, vec_col=args.vec_col,
-            ).collect()
-            print(json.dumps([r.asDict() for r in rows], indent=2))
-    elif args.command == "index-staleness":
-        from .operators import similarity
-
-        resident = pl.spark.read.parquet(args.resident)
-        appended = pl.spark.read.parquet(args.appended)
-        cents = similarity.ivf_centroids(
-            resident, k=args.k, id_col=args.id_col, vec_col=args.vec_col
-        )
-        rep = similarity.ivf_staleness_report(
-            resident, appended, cents, id_col=args.id_col, vec_col=args.vec_col
-        ).collect()
-        drifts = [r.cos_drift for r in rep if r.cos_drift is not None]
-        print(
-            json.dumps(
-                {
-                    "buckets": [r.asDict() for r in rep],
-                    "max_cos_drift": max(drifts) if drifts else None,
-                    "retrain": bool(drifts and max(drifts) > args.alert),
                 },
                 indent=2,
                 sort_keys=True,

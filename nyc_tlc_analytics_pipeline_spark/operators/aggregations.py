@@ -9,8 +9,7 @@ declared in DDL but never built, SURVEY §1.1).  Here each builder is a
 
 Scale notes: each builder is one hash-aggregate shuffle keyed on its
 GROUP BY; exact percentiles (``F.percentile``) buffer per group exactly
-like DuckDB's PERCENTILE_CONT — at 100 TB flip ``approx=True`` to use
-``percentile_approx`` (breaks oracle equality; config-gated, SURVEY §4).
+like DuckDB's PERCENTILE_CONT.
 """
 
 from __future__ import annotations
@@ -20,38 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit, when
 
 
-def _pct(c: str, q: float, approx: bool) -> Column:
-    if approx:
-        return F.percentile_approx(c, lit(q))
-    return F.percentile(c, lit(q))
-
-
-def catalog_percentiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    qs: list[float],
-    precision: int = 2,
-) -> DataFrame:
-    """The THIRD percentile tier, above exact ``F.percentile`` and
-    in-query ``percentile_approx``: per-group quantiles from MERGEABLE
-    dyadic-histogram partials (``sketch.qhist_*``, conformance q156).
-    The first two tiers pay a data pass per question; this tier pays
-    it once at ingest — partials maintained per shard/day sum-merge
-    exactly, so percentile questions against the catalog cost a walk
-    over a range-bounded bucket frame, the same statistics posture as
-    HLL distincts / CMS frequencies.  Relative error ≤ 2^-5 ≈ 3.1%
-    (vs percentile_approx's rank-error knob); breaks oracle equality
-    with PERCENTILE_CONT like every approximate tier, so it's opt-in.
-
-    Returns one row per (group, q): group_cols + (q, q_est, n_rows)."""
-    from . import sketch
-
-    partials = sketch.qhist_partials(df, value_col, group_cols, precision)
-    return sketch.qhist_quantiles(partials, group_cols, qs, precision)
-
-
-def build_pricing_by_zone_hour(fact: DataFrame, approx: bool = False) -> DataFrame:
+def build_pricing_by_zone_hour(fact: DataFrame) -> DataFrame:
     """agg_pricing_by_zone_hour (aggregations.py:12-68): per
     (service, zone, hour, date) pricing distribution over valid trips with
     sane price_per_mile."""
@@ -71,20 +39,20 @@ def build_pricing_by_zone_hour(fact: DataFrame, approx: bool = False) -> DataFra
             F.count("*").alias("trip_count"),
             F.sum(when(col("is_valid"), 1).otherwise(0)).alias("valid_trip_count"),
             F.avg("trip_distance_miles").alias("avg_trip_distance"),
-            _pct("trip_distance_miles", 0.5, approx).alias("median_trip_distance"),
+            F.percentile("trip_distance_miles", lit(0.5)).alias("median_trip_distance"),
             F.sum("trip_distance_miles").alias("total_trip_miles"),
             F.avg("trip_duration_minutes").alias("avg_trip_duration"),
-            _pct("trip_duration_minutes", 0.5, approx).alias("median_trip_duration"),
+            F.percentile("trip_duration_minutes", lit(0.5)).alias("median_trip_duration"),
             F.avg("price_per_mile").alias("avg_price_per_mile"),
-            _pct("price_per_mile", 0.5, approx).alias("median_price_per_mile"),
-            _pct("price_per_mile", 0.25, approx).alias("p25_price_per_mile"),
-            _pct("price_per_mile", 0.75, approx).alias("p75_price_per_mile"),
+            F.percentile("price_per_mile", lit(0.5)).alias("median_price_per_mile"),
+            F.percentile("price_per_mile", lit(0.25)).alias("p25_price_per_mile"),
+            F.percentile("price_per_mile", lit(0.75)).alias("p75_price_per_mile"),
             F.avg("price_per_minute").alias("avg_price_per_minute"),
-            _pct("price_per_minute", 0.5, approx).alias("median_price_per_minute"),
-            _pct("price_per_minute", 0.25, approx).alias("p25_price_per_minute"),
-            _pct("price_per_minute", 0.75, approx).alias("p75_price_per_minute"),
+            F.percentile("price_per_minute", lit(0.5)).alias("median_price_per_minute"),
+            F.percentile("price_per_minute", lit(0.25)).alias("p25_price_per_minute"),
+            F.percentile("price_per_minute", lit(0.75)).alias("p75_price_per_minute"),
             F.avg("total_fare").alias("avg_total_fare"),
-            _pct("total_fare", 0.5, approx).alias("median_total_fare"),
+            F.percentile("total_fare", lit(0.5)).alias("median_total_fare"),
             F.sum("total_fare").alias("total_revenue"),
             lit(0).alias("trips_with_cbd_fee"),
             lit(0).alias("avg_cbd_fee"),
@@ -93,7 +61,7 @@ def build_pricing_by_zone_hour(fact: DataFrame, approx: bool = False) -> DataFra
     )
 
 
-def build_hvfhv_take_rates(fact: DataFrame, approx: bool = False) -> DataFrame:
+def build_hvfhv_take_rates(fact: DataFrame) -> DataFrame:
     """agg_hvfhv_take_rates (aggregations.py:70-120): HVFHV platform
     economics per (date, zone, hour, license), HAVING count>=5."""
     return (
@@ -113,13 +81,13 @@ def build_hvfhv_take_rates(fact: DataFrame, approx: bool = False) -> DataFrame:
             F.count("*").alias("trip_count"),
             F.avg("trip_distance_miles").alias("avg_trip_distance"),
             F.avg("trip_duration_minutes").alias("avg_trip_duration"),
-            _pct("take_rate", 0.5, approx).alias("median_take_rate"),
-            _pct("take_rate", 0.25, approx).alias("p25_take_rate"),
-            _pct("take_rate", 0.75, approx).alias("p75_take_rate"),
+            F.percentile("take_rate", lit(0.5)).alias("median_take_rate"),
+            F.percentile("take_rate", lit(0.25)).alias("p25_take_rate"),
+            F.percentile("take_rate", lit(0.75)).alias("p75_take_rate"),
             F.avg("take_rate").alias("avg_take_rate"),
             F.stddev_samp("take_rate").alias("stddev_take_rate"),
             F.avg("driver_pay").alias("avg_driver_pay"),
-            _pct("driver_pay", 0.5, approx).alias("median_driver_pay"),
+            F.percentile("driver_pay", lit(0.5)).alias("median_driver_pay"),
             F.sum("driver_pay").alias("total_driver_pay"),
             F.avg(col("total_fare") - col("driver_pay")).alias("avg_platform_commission"),
             F.sum(col("total_fare") - col("driver_pay")).alias("total_platform_commission"),
@@ -206,11 +174,11 @@ def build_daily_summary(fact: DataFrame) -> DataFrame:
     )
 
 
-def build_all(fact: DataFrame, approx: bool = False) -> dict[str, DataFrame]:
+def build_all(fact: DataFrame) -> dict[str, DataFrame]:
     """The four built aggregates (aggregations.py:215-234)."""
     return {
-        "agg_pricing_by_zone_hour": build_pricing_by_zone_hour(fact, approx),
-        "agg_hvfhv_take_rates": build_hvfhv_take_rates(fact, approx),
+        "agg_pricing_by_zone_hour": build_pricing_by_zone_hour(fact),
+        "agg_hvfhv_take_rates": build_hvfhv_take_rates(fact),
         "agg_market_share": build_market_share(fact),
         "agg_daily_summary": build_daily_summary(fact),
     }

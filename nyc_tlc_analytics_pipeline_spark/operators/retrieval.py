@@ -99,19 +99,6 @@ def bm25_scores(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    id_cols: list[str],
-    k: int = 10,
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-k documents for the query — orderBy+limit plans as
-    TakeOrderedAndProject (per-partition top-k, k×partitions merge)."""
-    scored = bm25_scores(df, query_terms, id_cols, text_col)
-    return scored.orderBy(col("bm25").desc(), *[col(c) for c in id_cols]).limit(k)
-
-
 def tfidf_group_terms(
     df: DataFrame,
     id_col: str,

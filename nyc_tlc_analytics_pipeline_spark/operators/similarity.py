@@ -544,64 +544,6 @@ def banded_candidate_pairs(
     )
 
 
-def knn_join_lsh(
-    df: DataFrame,
-    planes: list[list[float]],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.0,
-    bands: int = 1,
-) -> DataFrame:
-    """Approximate k-NN self-join: bucket both sides on the hyperplane
-    signature, equi-join on bucket, score within bucket, keep per-row
-    top-k by window rank.  The equi-join keeps the candidate set linear in
-    practice (vs the quadratic exact join).
-
-    ``bands > 1`` switches candidate generation to banded multi-table LSH
-    (see :func:`banded_lsh_buckets`): pass more planes and more bands to
-    hold bucket occupancy constant as the corpus grows — the single-table
-    form caps out at ``2^len(planes)`` buckets."""
-    from pyspark.sql import Window
-
-    if bands > 1:
-        vecs = df.select(col(id_col).alias("doc"), as_double_array(vec_col).alias("v"))
-        cands = banded_candidate_pairs(df, planes, bands, id_col, vec_col)
-        # k-NN needs both directions; candidates are canonical a < b
-        sym = cands.union(
-            cands.select(col("doc_b").alias("doc_a"), col("doc_a").alias("doc_b"))
-        )
-        scored = (
-            sym.join(vecs.select(col("doc").alias("doc_a"), col("v").alias("v_a")), "doc_a")
-            .join(vecs.select(col("doc").alias("doc_b"), col("v").alias("v_b")), "doc_b")
-            .select(
-                col("doc_a").alias("id_a"),
-                col("doc_b").alias("id_b"),
-                rnd(cosine(col("v_a"), col("v_b")), 6).alias("cos_sim"),
-            )
-            .filter(col("cos_sim") >= min_cosine)
-        )
-    else:
-        bucketed = df.select(
-            col(id_col).alias("doc"), as_double_array(vec_col).alias("v")
-        ).withColumn("bucket", lsh_bucket(col("v"), planes))
-        a = bucketed.select(col("doc").alias("id_a"), col("v").alias("v_a"), "bucket")
-        b = bucketed.select(col("doc").alias("id_b"), col("v").alias("v_b"), "bucket")
-        scored = (
-            a.join(b, "bucket")
-            .filter(col("id_a") != col("id_b"))
-            .withColumn("cos_sim", rnd(cosine(col("v_a"), col("v_b")), 6))
-            .filter(col("cos_sim") >= min_cosine)
-            .select("id_a", "id_b", "cos_sim")
-        )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), "id_b")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("id_a", "id_b", "cos_sim", "rank")
-    )
-
-
 def write_ivf_index(
     df: DataFrame,
     path: str,

@@ -1,5 +1,4 @@
-"""Skew mitigation: salted aggregation, salted join, and bucketed-table
-helpers.
+"""Skew mitigation: salted aggregation, salted join and the skew report.
 
 AQE's skew-join splitting handles most runtime skew automatically
 (enabled in `core.session`), but two patterns still need explicit
@@ -14,10 +13,6 @@ treatment at 100 TB:
 - **Salted broadcast-free join** — when the build side is too big to
   broadcast AND the probe side is skewed: replicate each build row N
   ways with an explicit salt and join on (key, salt).
-
-- **Bucketing** — pre-shuffling a fact table into hash buckets on its
-  join key (`write.bucketBy(...).saveAsTable`) so repeated co-located
-  joins/aggregations skip the exchange entirely.
 """
 
 from __future__ import annotations
@@ -111,22 +106,6 @@ def salted_join(
     build = small.withColumn("__salt", F.explode(F.sequence(lit(0), lit(n_salts - 1))))
     out = probe.join(build, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Materialize as a bucketed managed table: future equi-joins /
-    aggregations on ``bucket_col`` between co-bucketed tables plan with
-    zero exchanges (the write pays the shuffle once)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
 
 
 def skew_report(df: DataFrame, key: str, label: str) -> DataFrame:

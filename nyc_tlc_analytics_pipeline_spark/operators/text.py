@@ -411,71 +411,3 @@ def session_transcripts(
         )
         .orderBy(user_col, "session_seq")
     )
-
-
-def compression_ratio_kernel(level: int = 6):
-    """mapInPandas kernel: (id, text) rows → (id, raw_bytes, zlib_bytes,
-    compression_ratio).  The zlib-proxy quality signal (CCNet/Gopher
-    lineage): highly repetitive or templated text compresses far below
-    natural prose, and the ratio needs no model, no vocabulary and no
-    language assumption — the cheapest content-aware filter after the
-    token-shape heuristics in :func:`quality_score`.
-
-    Python is unavoidable here (no zlib in the JVM expression library),
-    so this is a documented Arrow-batched kernel — one Python worker
-    pass, vectorized pandas in/out, never row-at-a-time — the
-    §2.11/SURVEY anti-pattern contract.  No DuckDB oracle exists for
-    zlib, so the operator is pytest-gated (python-twin equality) like
-    the multimodal kernels, not catalog-registered."""
-    import zlib
-    from typing import Iterator
-
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            isnull = pdf["text"].isna()
-            raw = pdf["text"].fillna("").str.encode("utf-8")
-            raw_n = raw.str.len().astype("int64")
-            comp_n = raw.map(lambda b: len(zlib.compress(b, level))).astype(
-                "int64"
-            )
-            yield pd.DataFrame(
-                {
-                    # nullable Int64: a NULL id must yield a null output
-                    # row, not a ValueError that kills the whole task
-                    "doc_id": pdf["doc_id"].astype("Int64"),
-                    # NULL text -> NULL bytes (no text is not 0 bytes of
-                    # text); empty text -> raw 0 / header-only zlib
-                    "raw_bytes": raw_n.astype("Int64").mask(isnull),
-                    "zlib_bytes": comp_n.astype("Int64").mask(isnull),
-                    # raw_bytes == 0 (NULL or empty) -> NULL ratio: 'no
-                    # content' must not masquerade as the corpus-max
-                    # "maximally incompressible" signal in the
-                    # high-entropy filter tail (ADVICE r11)
-                    "compression_ratio": (comp_n / raw_n.where(raw_n > 0))
-                    .round(6)
-                    .astype("Float64"),
-                }
-            )
-
-    return kernel
-
-
-def compression_quality(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    level: int = 6,
-) -> DataFrame:
-    """Per-document zlib compression ratio via the Arrow kernel —
-    schema ``(doc_id, raw_bytes, zlib_bytes, compression_ratio)``.
-    Low ratios flag templated/repetitive text, near-1 ratios flag
-    high-entropy noise (both filter-worthy tails)."""
-    src = df.select(
-        col(id_col).cast("long").alias("doc_id"), col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        compression_ratio_kernel(level),
-        "doc_id long, raw_bytes long, zlib_bytes long, compression_ratio double",
-    )

@@ -35,7 +35,7 @@ from ..sources.testdata import load_table, register_views
 class QuerySpec:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     description: str
     operators: tuple[str, ...] = field(default_factory=tuple)
     headline: bool = False  # included in bench.py's timed set
@@ -46,7 +46,7 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     description: str,
     operators: tuple[str, ...] = (),
     headline: bool = False,
@@ -72,9 +72,9 @@ def pct(c, q, approx: bool = False):
     ``F.percentile_approx`` (Greenwald-Khanna sketch, bounded memory
     regardless of group size, mergeable map-side).  Approx breaks exact
     oracle equality, so the conformance registrations always run exact
-    — the catalog builders that buffer percentiles (q04/q86/q101 and
-    the gold aggregates) take an ``approx`` kwarg wired here, and
-    tests/test_round6_ops.py bounds the approx path's relative error."""
+    — the catalog builders that buffer percentiles (q04/q86/q101) take
+    an ``approx`` kwarg wired here, and tests/test_round6_ops.py bounds
+    the approx path's relative error."""
     if approx:
         return F.percentile_approx(c, q)
     return F.percentile(c, q)

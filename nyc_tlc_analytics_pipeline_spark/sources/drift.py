@@ -108,19 +108,3 @@ def align_to_schema(df: DataFrame, expected: StructType, strict_types: bool = Tr
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def drift_report_rows(service: str, source_file: str, report: DriftReport) -> list[tuple]:
-    """Flatten a report into loggable rows (service, file, kind, column,
-    detail) — the data-form of the reference's drift log lines."""
-    rows = [
-        (service, source_file, "new_column", n, t) for n, t in report.new_columns
-    ]
-    rows += [
-        (service, source_file, "removed_column", n, "") for n in report.removed_columns
-    ]
-    rows += [
-        (service, source_file, "type_change", n, f"{a}->{b}")
-        for n, a, b in report.type_changes
-    ]
-    return rows

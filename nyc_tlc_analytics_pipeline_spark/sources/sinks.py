@@ -1,5 +1,5 @@
-"""Sinks: CSV and pandas export, small literal frames, the
-ingestion-log rows and the training-shard writer.
+"""Sinks: small literal frames, the ingestion-log rows and the
+training-shard writer.
 
 Every warehouse table is written through ``sources.manifest`` instead:
 its commit log makes a rebuild atomic, and an append tagged with its
@@ -27,17 +27,6 @@ def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
 
     names = DataType.fromDDL(schema).names
     return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
-
-
-def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """CSV export sink (S12; reference: COPY ... TO csv)."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
-
-
-def to_pandas(df: DataFrame):
-    """Result sink for CLI display (S13; reference: fetchdf)."""
-    return df.toPandas()
 
 
 def ingestion_log_rows(

@@ -301,7 +301,8 @@ def run_incremental_gold(
     are the same associative merge.  The gold store is a
     ``sources.manifest.ManifestTable``; each batch's merge commits one
     version under the batch tag, so a replayed batch finds its tag and
-    is a no-op.  A crash mid-write leaves an
+    is a no-op; each commit expires the version it replaced, so the
+    store holds one copy of the gold.  A crash mid-write leaves an
     uncommitted staging dir (invisible; vacuumable) with the previous
     snapshot intact — a plain ``mode("overwrite")`` parquet gold would
     instead delete history before writing and a mid-write crash would
@@ -328,7 +329,10 @@ def run_incremental_gold(
             merged = merge_partials([partial], keys, merge_spec)
         # overwrite stages into a FRESH data dir before committing, so
         # the read above keeps its (still-committed) input dirs — no
-        # driver-side materialization needed
-        mt.overwrite(merged, tag=tag)
+        # driver-side materialization needed; the replaced gold is then
+        # deleted, so the table keeps one data directory.  A crash
+        # between the two leaves the old directory to the next batch's
+        # expire (a replay stops at the tag check above)
+        mt.expire(mt.overwrite(merged, tag=tag))
 
     for_each_batch(raw_stream, checkpoint_path, merge_batch)

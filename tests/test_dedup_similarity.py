@@ -1,5 +1,5 @@
 """Recall/precision verification for the hash-based dedup and ANN
-operators — the pytest counterpart of the rows-only catalog entries
+operators — the recall counterpart of the catalog entries
 (q28/q29/q30): MinHash-LSH is checked against exact Jaccard, SimHash
 against Hamming ground truth, ANN variants against brute-force cosine."""
 
@@ -219,44 +219,6 @@ def test_banded_near_dup_recall_on_planted_pairs(spark):
     assert expected <= got
     # random gaussian background in 16-dim produces no 0.99-cosine pairs
     assert got == expected
-
-
-def test_banded_knn_join_matches_contract(spark):
-    """bands>1 path of knn_join_lsh: per-row ≤ k neighbors, ranks dense,
-    and every planted near-dup appears as its copy's top neighbor."""
-    df = _synthetic_vectors(spark, 200, dim=16, seed=5)
-    planes = similarity.random_hyperplanes(36, 16, seed=13)
-    knn = similarity.knn_join_lsh(
-        df, planes, k=3, id_col="vec_id", vec_col="embedding", bands=4
-    )
-    rows = knn.collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r.id_a, []).append(r)
-    for rid, rs in per.items():
-        assert len(rs) <= 3
-        assert [r.rank for r in sorted(rs, key=lambda x: x.rank)] == list(
-            range(1, len(rs) + 1)
-        )
-    top = {r.id_a: r.id_b for r in rows if r.rank == 1}
-    for i in range(10):
-        assert top.get(100000 + i) == i  # copy's nearest neighbor is its original
-
-
-def test_knn_join_lsh_shape(spark):
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    planes = similarity.random_hyperplanes(6, 64)
-    knn = similarity.knn_join_lsh(emb, planes, k=3)
-    rows = knn.collect()
-    assert len(rows) > 0
-    per = {}
-    for r in rows:
-        per.setdefault(r.id_a, []).append(r)
-    for rid, rs in per.items():
-        assert len(rs) <= 3
-        assert [r.rank for r in sorted(rs, key=lambda x: x.rank)] == list(
-            range(1, len(rs) + 1)
-        )
 
 
 def test_persisted_ivf_index_prunes_partitions_and_matches(spark, tmp_path):

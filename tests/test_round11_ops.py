@@ -1580,64 +1580,3 @@ def test_segment_family_null_group_and_null_text_distinction(spark):
     assert out[2].clean_text == "" and out[2].kept_tokens == 0
     assert out[4].clean_text is None and out[4].kept_tokens == 0
     assert out[1].clean_text == "a b c"
-
-
-# ---------------------------------------------------------------------------
-# compression-ratio quality signal (Arrow kernel, pytest-gated)
-# ---------------------------------------------------------------------------
-
-
-def test_compression_quality_matches_python_zlib(spark):
-    """Kernel output equals a direct python zlib computation, repetitive
-    text compresses far below shuffled-vocab text, and NULL/empty text
-    gets a NULL ratio (not a fake 'maximally incompressible' ~8.0) with
-    NULL vs empty distinguished in raw_bytes (ADVICE r11)."""
-    import zlib
-
-    from nyc_tlc_analytics_pipeline_spark.operators import text as text_ops
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 5),
-        (2, "aaaa bbbb " * 40),                       # templated
-        (3, ""),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r.doc_id: r for r in text_ops.compression_quality(df).collect()}
-    for i, t in rows[:2]:
-        raw = t.encode()
-        assert got[i].raw_bytes == len(raw)
-        assert got[i].zlib_bytes == len(zlib.compress(raw, 6))
-        want = round(len(zlib.compress(raw, 6)) / len(raw), 6)
-        assert got[i].compression_ratio == want
-    # empty text: 0 raw bytes, header-only zlib bytes, NULL ratio
-    assert got[3].raw_bytes == 0
-    assert got[3].zlib_bytes == len(zlib.compress(b"", 6))
-    assert got[3].compression_ratio is None
-    # NULL text: everything NULL — 'no text' is not '0 bytes of text'
-    assert got[4].raw_bytes is None
-    assert got[4].zlib_bytes is None
-    assert got[4].compression_ratio is None
-    assert got[1].compression_ratio < 0.5  # repeated sentence compresses
-    assert got[2].compression_ratio < got[1].compression_ratio  # templated
-
-
-def test_compression_quality_smoke_corpus_distribution(spark):
-    from nyc_tlc_analytics_pipeline_spark.operators import text as text_ops
-
-    docs = load_table(spark, C.SF_SMOKE, "documents")
-    out = text_ops.compression_quality(docs)
-    assert out.count() == docs.count()
-    stats = out.agg({"compression_ratio": "avg"}).head()[0]
-    assert 0.1 < stats < 1.0  # word-stream corpus compresses but not to zero
-
-
-def test_compression_quality_null_id_survives(spark):
-    """A NULL doc_id yields a null-id output row, never a task-killing
-    pandas astype error (nullable Int64 in the kernel)."""
-    from nyc_tlc_analytics_pipeline_spark.operators import text as text_ops
-
-    df = spark.createDataFrame([(None, "a b"), (1, "c d")], "doc_id long, text string")
-    rows = text_ops.compression_quality(df).collect()
-    assert len(rows) == 2
-    assert {r.doc_id for r in rows} == {None, 1}

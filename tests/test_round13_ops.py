@@ -1,8 +1,8 @@
 """Round-13 operator tests: the multi-batch incremental-curation
 contract (ADVICE r12 — the standing pool must fold in completed
 increments, else batch 2 re-appends batch 1's novel content), the
-pack_contiguous single-shuffle restructure, the video fake-path
-contract, and q187's accounting conservation."""
+pack_contiguous single-shuffle restructure, and q187's accounting
+conservation."""
 
 from __future__ import annotations
 
@@ -110,44 +110,6 @@ def test_pack_contiguous_single_range_shuffle(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert count_outside_cache(plan, "rangepartitioning") == 0
     assert plan.count("InMemoryTableScan") >= 2  # both consumers read it
-
-
-def test_video_fake_contract_holds_with_codec(spark):
-    """fake=True is a contract, not a fallback: even where imageio IS
-    importable, fake payloads must take the deterministic digest path
-    (ADVICE r12 — installing the media extra must not break callers)."""
-    import hashlib
-
-    from nyc_tlc_analytics_pipeline_spark.operators import multimodal as mm
-
-    payload = b"not-a-real-video"
-    orig = mm._IMAGEIO
-    mm._IMAGEIO = object()  # simulate 'imageio importable'
-    try:
-        sample = mm.sample_video_frames_stub(every_ms=500, fake=True)
-        import pandas as pd
-
-        out = list(
-            sample(
-                iter(
-                    [
-                        pd.DataFrame(
-                            {
-                                "media_id": [1],
-                                "kind": ["video"],
-                                "content": [payload],
-                                "duration_ms": [1200],
-                            }
-                        )
-                    ]
-                )
-            )
-        )[0]
-    finally:
-        mm._IMAGEIO = orig
-    assert list(out["frame_index"]) == [0, 1, 2]
-    want0 = hashlib.sha256(payload + (0).to_bytes(4, "big")).hexdigest()[:16]
-    assert out["frame_digest"][0] == want0
 
 
 def test_q187_conservation(spark):

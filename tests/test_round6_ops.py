@@ -127,45 +127,6 @@ def test_approx_percentile_hatch_bounded_error(spark):
 
 
 # ---------------------------------------------------------------------------
-# banded-phash completeness guard
-# ---------------------------------------------------------------------------
-
-def test_near_dup_media_rejects_incomplete_banding(spark):
-    from nyc_tlc_analytics_pipeline_spark.operators.multimodal import (
-        near_dup_media_pairs,
-    )
-
-    ph = spark.createDataFrame([(1, 0), (2, 0)], "media_id long, phash long")
-    with pytest.raises(ValueError, match="max_hamming < n_bands"):
-        near_dup_media_pairs(ph, max_hamming=6, n_bands=4)
-    # explicit opt-in runs (returns the pair: identical hashes collide
-    # in every band regardless of banding)
-    got = near_dup_media_pairs(
-        ph, max_hamming=6, n_bands=4, allow_incomplete=True
-    ).collect()
-    assert [(r.a, r.b, r.hamming) for r in got] == [(1, 2, 0)]
-
-
-def test_near_dup_media_default_banding_complete_at_hamming_6(spark):
-    """Two hashes exactly 6 bits apart, the flips spread over 6 different
-    8-bit bands — missed by 4 bands (every band touched under the old
-    default would be possible at >3 flips), found by the 8-band default."""
-    from nyc_tlc_analytics_pipeline_spark.operators.multimodal import (
-        near_dup_media_pairs,
-    )
-
-    base = 0x0123456789ABCDEF
-    flipped = base
-    for band in range(6):  # flip one bit in each of 6 distinct 8-bit bands
-        flipped ^= 1 << (band * 8)
-    ph = spark.createDataFrame(
-        [(1, base), (2, flipped)], "media_id long, phash long"
-    )
-    got = near_dup_media_pairs(ph).collect()  # defaults: hamming<=6, 8 bands
-    assert [(r.a, r.b, r.hamming) for r in got] == [(1, 2, 6)]
-
-
-# ---------------------------------------------------------------------------
 # keyless interval join: multiset semantics for duplicate input rows
 # ---------------------------------------------------------------------------
 

@@ -1,6 +1,5 @@
 """Skew utilities: salted aggregation/join must produce exactly the
-direct plan's results; bucketed co-located joins must plan without an
-exchange on the bucketed key."""
+direct plan's results."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ from pyspark.sql import functions as F
 from nyc_tlc_analytics_pipeline_spark.operators.skew import (
     salted_agg,
     salted_join,
-    write_bucketed,
 )
 
 
@@ -67,31 +65,6 @@ def test_salted_join_matches_direct(spark, skewed_df):
         (r.k, r.v, r.label) for r in salted_join(skewed_df, dim, "k", n_salts=8).collect()
     )
     assert direct == salted
-
-
-def test_bucketed_join_avoids_exchange(spark, skewed_df):
-    # managed tables land in ./spark-warehouse (gitignored); dropped below
-    left = spark.range(0, 10000).select(
-        (F.col("id") % 500).alias("k"), F.col("id").alias("v1")
-    )
-    right = spark.range(0, 5000).select(
-        (F.col("id") % 500).alias("k"), F.col("id").alias("v2")
-    )
-    write_bucketed(left, "bk_left", "k", n_buckets=8)
-    write_bucketed(right, "bk_right", "k", n_buckets=8)
-    # disable broadcast so the join would otherwise need a shuffle
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bk_left").join(spark.table("bk_right"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan  # co-located: no shuffle
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
 
 
 def test_skew_report_flags_planted_hot_key(spark):

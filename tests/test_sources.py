@@ -27,16 +27,11 @@ from nyc_tlc_analytics_pipeline_spark.sources.downloader import (
 from nyc_tlc_analytics_pipeline_spark.sources.drift import (
     align_to_schema,
     detect_drift,
-    drift_report_rows,
 )
 from nyc_tlc_analytics_pipeline_spark.sources import sinks
-from nyc_tlc_analytics_pipeline_spark.sources.readers import (
-    read_zones_csv,
-    validate_parquet,
-)
-from nyc_tlc_analytics_pipeline_spark.sources.tlc_schemas import YELLOW_SCHEMA
+from nyc_tlc_analytics_pipeline_spark.sources.readers import read_zones_csv
 
-from .tlc_fixtures import yellow_fixture, zones_fixture
+from .tlc_fixtures import zones_fixture
 
 
 def _schema(*fields) -> StructType:
@@ -70,14 +65,6 @@ def test_align_raises_on_breaking_drift(spark):
         align_to_schema(df, _schema(("a", IntegerType())), strict_types=True)
 
 
-def test_drift_report_rows():
-    expected = _schema(("a", IntegerType()))
-    observed = _schema(("a", StringType()), ("n", DoubleType()))
-    rows = drift_report_rows("yellow", "f.parquet", detect_drift(observed, expected))
-    kinds = {r[2] for r in rows}
-    assert kinds == {"new_column", "type_change"}
-
-
 def test_ingestion_log(spark):
     df = sinks.ingestion_log_rows(
         spark,
@@ -91,11 +78,7 @@ def test_ingestion_log(spark):
     assert len({r.log_id for r in rows}) == 2
 
 
-def test_validate_parquet_and_zones_csv(spark, tmp_path):
-    p = str(tmp_path / "y.parquet")
-    spark.createDataFrame(yellow_fixture().drop(columns=["source_file"])).write.parquet(p)
-    info = validate_parquet(spark, p, YELLOW_SCHEMA)
-    assert info["row_count"] == 4 and info["valid"]
+def test_zones_csv(spark, tmp_path):
     csv_path = str(tmp_path / "zones.csv")
     zones_fixture().to_csv(csv_path, index=False)
     z = read_zones_csv(spark, csv_path)
@@ -111,16 +94,6 @@ def test_zones_csv_with_reordered_header_raises(spark, tmp_path):
     z[["Zone", "Borough", "LocationID", "service_zone"]].to_csv(csv_path, index=False)
     with pytest.raises(Exception, match="(?i)header"):
         read_zones_csv(spark, csv_path).collect()
-
-
-def test_csv_export_and_pandas_sinks(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    out = str(tmp_path / "export")
-    sinks.export_csv(df, out)
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == 2 and set(back.columns) == {"id", "name"}
-    pdf = sinks.to_pandas(df)
-    assert list(pdf.columns) == ["id", "name"] and len(pdf) == 2
 
 
 def test_generate_month_range():
@@ -229,90 +202,6 @@ def test_events_ts_is_timestamp_type(spark):
 
     ev = load_table(spark, SF_SMOKE, "events")
     assert isinstance(ev.schema["ts"].dataType, TimestampType)
-
-
-def test_jsonl_roundtrip_and_pruning(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from nyc_tlc_analytics_pipeline_spark.sources.readers import (
-        read_jsonl,
-        write_jsonl,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}", "en" if i % 2 else "de") for i in range(100)],
-        ["doc_id", "text", "lang"],
-    )
-    out = str(tmp_path / "corpus_jsonl")
-    write_jsonl(df, out)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-        ]
-    )
-    back = read_jsonl(spark, out, schema)
-    assert back.schema == schema
-    assert back.count() == 100
-    assert back.agg(F.sum("doc_id")).collect()[0][0] == sum(range(100))
-    # explicit-schema read prunes: only requested fields reach the scan
-    plan = back.select("doc_id")._jdf.queryExecution().executedPlan().toString()
-    assert "text" not in plan
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_analytics_pipeline_spark.sources.readers import (
-        read_orc,
-        write_orc,
-    )
-    from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
-
-    df = load_table(spark, "/root/testdata/sf0.001", "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    assert sorted(back.columns) == sorted(df.columns)
-    assert back.count() == df.count()
-    # filter + projection reach the ORC scan (pushdown/pruning parity
-    # with the parquet path)
-    plan = (
-        back.filter(F.col("n_regionkey") == 1)
-        .select("n_name")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan
-    assert "ReadSchema" in plan
-
-
-def test_orc_partitioned_write_prunes(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_analytics_pipeline_spark.sources.readers import (
-        read_orc,
-        write_orc,
-    )
-    from nyc_tlc_analytics_pipeline_spark.sources.testdata import load_table
-
-    df = load_table(spark, "/root/testdata/sf0.001", "nation")
-    path = str(tmp_path / "nation_orc_parts")
-    write_orc(df, path, partition_by=["n_regionkey"])
-    back = read_orc(spark, path)
-    plan = (
-        back.filter(F.col("n_regionkey") == 1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
-    assert back.filter(F.col("n_regionkey") == 1).count() == df.filter(
-        F.col("n_regionkey") == 1
-    ).count()
 
 
 def test_load_table_reads_a_table_replaced_at_the_same_path(spark, tmp_path):

@@ -229,6 +229,12 @@ def test_incremental_gold_matches_batch_and_is_exactly_once(spark, stream_dir, t
     from nyc_tlc_analytics_pipeline_spark.sources.manifest import ManifestTable
 
     run()
+    # each batch's commit expires the gold it replaced: one data
+    # directory stands, and nothing besides it and the log is on disk
+    dirs = ManifestTable(spark, gold).snapshot()["dirs"]
+    assert len(dirs) == 1
+    assert sorted(os.listdir(gold)) == ["_log", "data"]
+    assert os.listdir(os.path.join(gold, "data")) == dirs
     got = {
         r.event_type: (r.n_events, round(r.total_value, 6),
                        round(r.min_value, 6), round(r.max_value, 6))
